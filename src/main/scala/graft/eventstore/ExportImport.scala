@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
 object ExportImport {
 
   def exportStream(log: DataFrame, stream: String, outDir: String): Unit =
-    Replay.cold(log, stream)
-      .write.mode("overwrite").option("compression", "gzip").json(outDir)
+    LocalFs.write(Replay.cold(log, stream))
+      .mode("overwrite").option("compression", "gzip").json(outDir)
 
   /** find-name: first of name, name-1, name-2, … not already in the log
     * (reference api.clj:158-166). */

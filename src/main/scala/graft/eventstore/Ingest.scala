@@ -141,12 +141,12 @@ object Ingest {
     // once (and both sinks see identical order_ids)
     hotDir.foreach(_ => stamped.persist())
     if (byDate)
-      stamped.withColumn("event_date", to_date(col("event_time")))
-        .write.mode("append").partitionBy("stream_name", "event_date").parquet(logDir)
+      LocalFs.write(stamped.withColumn("event_date", to_date(col("event_time"))))
+        .mode("append").partitionBy("stream_name", "event_date").parquet(logDir)
     else
-      stamped.write.mode("append").partitionBy("stream_name").parquet(logDir)
+      LocalFs.write(stamped).mode("append").partitionBy("stream_name").parquet(logDir)
     hotDir.foreach { d =>
-      stamped.write.mode("append").parquet(d) // unpartitioned: topic is small
+      LocalFs.write(stamped).mode("append").parquet(d) // unpartitioned: topic is small
       stamped.unpersist()
     }
   }
@@ -194,7 +194,7 @@ object Ingest {
         "local_id", "schema_version", "payload", "provenance")
       .persist()
     val n = missing.count()
-    if (n > 0) missing.write.mode("append").parquet(hotDir)
+    if (n > 0) LocalFs.write(missing).mode("append").parquet(hotDir)
     missing.unpersist()
     n
   }

@@ -99,13 +99,13 @@ object Replay {
       // event_date surfaces as a discovered partition column; write it
       // back as a partition level (partitionBy drops it from the data
       // files), range-clustered so a task writes few date dirs
-      df.repartitionByRange(files, col("event_date"), col("order_id"))
-        .sortWithinPartitions("event_date", "order_id")
-        .write.mode("overwrite").partitionBy("event_date").parquet(tmp.toString)
+      LocalFs.write(df.repartitionByRange(files, col("event_date"), col("order_id"))
+        .sortWithinPartitions("event_date", "order_id"))
+        .mode("overwrite").partitionBy("event_date").parquet(tmp.toString)
     else
-      df.repartitionByRange(files, col("order_id"))
-        .sortWithinPartitions("order_id")
-        .write.mode("overwrite").parquet(tmp.toString)
+      LocalFs.write(df.repartitionByRange(files, col("order_id"))
+        .sortWithinPartitions("order_id"))
+        .mode("overwrite").parquet(tmp.toString)
     swapDir(fs, part, tmp, new Path(s"$logDir/.compact_old_$stream"))
     // recursive: byDate layouts keep their files under event_date= subdirs
     val it = fs.listFiles(part, true)
@@ -188,9 +188,9 @@ object Replay {
         .where(col("order_id") =!= orderId)
       val n = df.count()
       val files = math.max(1, math.ceil(n.toDouble / targetRows).toInt)
-      df.repartitionByRange(files, col("order_id"))
-        .sortWithinPartitions("order_id")
-        .write.mode("overwrite").parquet(tmp.toString)
+      LocalFs.write(df.repartitionByRange(files, col("order_id"))
+        .sortWithinPartitions("order_id"))
+        .mode("overwrite").parquet(tmp.toString)
       n
     }
     // Deleting the LAST event of a bucket/partition must remove the

@@ -167,15 +167,16 @@ object QueryModule {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
   private def recordBuild[T](key: String)(thunk: => T): T = {
     val t0 = System.nanoTime()
-    try thunk
-    finally {
-      val dt = (System.nanoTime() - t0) / 1e9
-      val artifact = key.indexOf(':') match {
-        case -1 => key
-        case i  => key.substring(0, i)
-      }
-      buildTimes.merge(artifact, dt, (a, b) => a + b)
+    // charged on success only: a throwing build is retried by its Box,
+    // and the retry that succeeds is the one build that ran
+    val result = thunk
+    val dt = (System.nanoTime() - t0) / 1e9
+    val artifact = key.indexOf(':') match {
+      case -1 => key
+      case i  => key.substring(0, i)
     }
+    buildTimes.merge(artifact, dt, (a, b) => a + b)
+    result
   }
 
   /** Memoized-once box: the cache maps hold (stamp, Box) pairs whose

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
 import graft.streaming.HotCold
 
 /** Uniform source/sink facade over the event log and external formats.
@@ -52,16 +53,16 @@ object EventSource {
   def write(events: DataFrame, format: String, path: String,
       mode: SaveMode = SaveMode.Append): Unit = format match {
     case "parquet" =>
-      events.write.mode(mode).partitionBy("stream_name").parquet(path)
+      LocalFs.write(events).mode(mode).partitionBy("stream_name").parquet(path)
     case "orc" =>
-      events.write.mode(mode).partitionBy("stream_name").orc(path)
+      LocalFs.write(events).mode(mode).partitionBy("stream_name").orc(path)
     case "json" =>
-      events.write.mode(mode).option("compression", "gzip").json(path)
+      LocalFs.write(events).mode(mode).option("compression", "gzip").json(path)
     case "csv" =>
-      events
+      LocalFs.write(events
         .withColumn("provenance_json", to_json(col("provenance")))
-        .drop("provenance")
-        .write.mode(mode).option("header", "true").csv(path)
+        .drop("provenance"))
+        .mode(mode).option("header", "true").csv(path)
     case other => throw new IllegalArgumentException(
       s"unsupported event format: $other (one of ${Formats.mkString("/")})")
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.eventstore.{Event, Fold, OrderedSqlFold, ProjRow, SqlFold}
+import graft.eventstore.{Event, Fold, LocalFs, OrderedSqlFold, ProjRow, SqlFold}
 
 /** The queryable projection-value surface (reference O10: `projection` /
   * `projection-value` point reads of the materialized state,
@@ -184,8 +184,8 @@ object ProjectionSink {
     // live projections never contend on one output-commit _temporary
     // dir, and a subscriber's listing prunes to its projection
     updatesDir.foreach { d =>
-      next.withColumn("batch_id", lit(batchId))
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$d/$projection")
+      LocalFs.write(next.withColumn("batch_id", lit(batchId)).coalesce(1))
+        .mode(SaveMode.Append).parquet(s"$d/$projection")
     }
     // versioned snapshots + a pointer file: readers resolve _LATEST
     // and read an immutable version dir, so there is NO swap window
@@ -203,7 +203,7 @@ object ProjectionSink {
           .unionByName(next)
     }).select(next.columns.map(col): _*)
     val vDir = new org.apache.hadoop.fs.Path(base, f"v$batchId%020d")
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(vDir.toString)
+    LocalFs.write(merged.coalesce(1)).mode(SaveMode.Overwrite).parquet(vDir.toString)
     // atomically move the pointer: write tmp, then rename OVER the
     // existing _LATEST in one operation (Options.Rename.OVERWRITE via
     // FileContext). Delete-then-rename would leave a window where the

@@ -25,7 +25,7 @@ object SnapshotSink {
     val committed = fs.exists(
       new org.apache.hadoop.fs.Path(mine, "_SUCCESS"))
     if (!committed)
-      batch.write.mode("overwrite").parquet(mine.toString)
+      graft.eventstore.LocalFs.write(batch).mode("overwrite").parquet(mine.toString)
     fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("v=") &&

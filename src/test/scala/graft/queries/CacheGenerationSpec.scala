@@ -58,6 +58,30 @@ class CacheGenerationSpec extends AnyFunSuite with SparkTestBase {
       "a warm serve was charged as a build — only executed thunks may record")
   }
 
+  test("a build that throws is not charged: its successful retry records " +
+      "exactly one build's time") {
+    def recorded: Double =
+      Option(QueryModule.buildTimes.get("failretry")).map(_.doubleValue).getOrElse(0.0)
+    val before = recorded
+    var attempts = 0
+    var retryS = 0.0
+    def build: Array[Byte] = {
+      attempts += 1
+      val t0 = System.nanoTime()
+      if (attempts == 1) { Thread.sleep(400); throw new IllegalStateException("build failed") }
+      Thread.sleep(20)
+      retryS = (System.nanoTime() - t0) / 1e9
+      Array[Byte](1)
+    }
+    intercept[IllegalStateException](QueryModule.cachedBytes("failretry:k", "g1")(build))
+    assert(recorded == before, "the throwing build was charged")
+    assert(QueryModule.cachedBytes("failretry:k", "g1")(build).sameElements(Array[Byte](1)))
+    assert(attempts == 2, "the Box did not retry the failed build")
+    val charged = recorded - before
+    assert(charged >= retryS && charged < 0.4,
+      s"charged $charged s for one ${retryS} s build after a 0.4 s failed one")
+  }
+
   test("cachedIndex regeneration drill: a regenerated documents table " +
       "rebuilds the persisted near-dup pair list (r14 artifact class)") {
     // r14 moved corpus-derived artifacts (ngramPairs, the oracle-twin
