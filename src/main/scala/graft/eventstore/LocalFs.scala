@@ -5,7 +5,7 @@ import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.{DataFrameWriter, Dataset}
 
 /** Without libhadoop, `RawLocalFileSystem.setPermission` forks a `chmod`
   * process for every file, `.crc` and directory a write creates (one
@@ -32,9 +32,9 @@ object LocalFs {
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
 
-  /** `df.write` whose job uses [[NioLocalFileSystem]] for `file://`
+  /** `ds.write` whose job uses [[NioLocalFileSystem]] for `file://`
     * paths. Spark copies writer options into the write job's Hadoop
     * conf only, so reads keep the JVM-cached default filesystem; the
     * cache is bypassed for the write because its key ignores the conf. */
-  def write(df: DataFrame): DataFrameWriter[Row] = df.write.options(writeOptions)
+  def write[T](ds: Dataset[T]): DataFrameWriter[T] = ds.write.options(writeOptions)
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** Persisted DSIR importance-weight estimator (Xie et al. 2023, "Data
   * Selection for Language Models via Importance Resampling") — the
   * trained-artifact twin of the inline x_dsir_weights query, and the
@@ -61,11 +63,11 @@ object DsirLm {
       .agg(count(lit(1)).as("cr"),
         coalesce(sum(when($"source" === targetSource, 1L).otherwise(0L)),
           lit(0L)).as("ct"))
-    vocab.write.mode("overwrite").parquet(s"$path/vocab")
-    spark.read.parquet(s"$path/vocab")
+    LocalFs.write(vocab).mode("overwrite").parquet(s"$path/vocab")
+    LocalFs.write(spark.read.parquet(s"$path/vocab")
       .agg(sum($"cr").as("tr"), coalesce(sum($"ct"), lit(0L)).as("tt"),
-        count(lit(1)).as("vsz"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+        count(lit(1)).as("vsz")))
+      .mode("overwrite").parquet(s"$path/meta")
   }
 
   /** Resolve a persisted estimator: scan footers once, collect the

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** Persisted EXACT (brute-force) ANN index — the ground-truth member of
   * the incremental vector-index family, next to [[IvfPq]]'s quantized
   * serving index: the corpus's (vec_id, v, nrm) rows are written once,
@@ -36,8 +38,8 @@ object ExactAnn {
     * Idempotent re-ingest belongs at the writer (stage the batch, check
     * a high-water id mark, or rewrite the affected partition). */
   def saveIndex(emb: DataFrame, path: String, append: Boolean = false): Unit =
-    emb.select(col("vec_id"), col("v"), col("nrm"))
-      .write.mode(if (append) "append" else "overwrite").parquet(path)
+    LocalFs.write(emb.select(col("vec_id"), col("v"), col("nrm")))
+      .mode(if (append) "append" else "overwrite").parquet(path)
 
   /** Exact top-k index neighbours for every vector of a NEW batch:
     * (new_id, rk, index_id, sim_bp), ranked by exact cosine (ties by

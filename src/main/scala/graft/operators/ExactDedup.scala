@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** Persisted EXACT-dedup digest index — the cheapest member of the
   * incremental-index family (exact here, MinHashDedup.saveIndex for
   * near-dup shingles, IvfPq.saveIndexed for embeddings): digest the
@@ -33,12 +35,12 @@ object ExactDedup {
       docs: DataFrame, idCol: String, textCol: String, path: String,
       append: Boolean = false): Unit = {
     val mode = if (append) "append" else "overwrite"
-    docs
+    LocalFs.write(docs
       .where(col(textCol).isNotNull)
       .select(sha2(col(textCol), 256).as("digest"), col(idCol).as("id"))
       .groupBy(col("digest"))
-      .agg(min(col("id")).as("keeper_id"))
-      .write.mode(mode).parquet(path)
+      .agg(min(col("id")).as("keeper_id")))
+      .mode(mode).parquet(path)
   }
 
   /** Batch probe: rows of `newDocs` whose text already exists in the

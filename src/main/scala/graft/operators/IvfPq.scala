@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** IVF-PQ — the composition production ANN systems actually deploy
   * (faiss IndexIVFPQ): an IVF coarse quantizer prunes WHICH vectors a
   * probe visits (nProbe nearest cells), PQ compression makes each visit
@@ -95,7 +97,7 @@ object IvfPq {
     import spark.implicits._
     if (!append) save(spark, index, path)
     val pq = index.pq
-    emb
+    LocalFs.write(emb
       .withColumn("cid",
         graft.functions.Centroids.nearestCol($"v", $"nrm", index.cents.toSeq))
       .withColumn("codes", graft.functions.PqCodec.encodeCol(
@@ -103,8 +105,8 @@ object IvfPq {
       .select($"vec_id", $"cid", $"codes")
       // cluster by cell before the partitioned write: one file per cell
       // per batch instead of (tasks × cells) shards
-      .repartition($"cid")
-      .write.mode(if (append) "append" else "overwrite")
+      .repartition($"cid"))
+      .mode(if (append) "append" else "overwrite")
       .partitionBy("cid").parquet(s"$path/assignments")
   }
 

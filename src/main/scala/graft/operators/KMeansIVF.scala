@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** IVF (inverted-file) ANN with k-means-trained centroids — the quality
   * upgrade over the seeded-centroid variant (x_ann_ivf keeps seeds for
   * oracle parity; this operator is the scale path and VectorOpsSpec
@@ -103,10 +105,10 @@ object KMeansIVF {
   def save(spark: org.apache.spark.sql.SparkSession,
       cents: Array[(Int, Array[Double])], path: String): Unit = {
     import spark.implicits._
-    cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
+    LocalFs.write(cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
       .toDF("cid", "v")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
+      .coalesce(1))
+      .mode("overwrite").parquet(path)
   }
 
   /** Load centroids saved by [[save]], cid-ascending. */

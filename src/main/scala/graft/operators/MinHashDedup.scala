@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** MinHash + LSH near-duplicate detection — the 100 TB path for what
   * x_dedup_ngram does with an O(n²) pair join.
   *
@@ -137,9 +139,9 @@ object MinHashDedup {
     val mode = if (append) "append" else "overwrite"
     val signed = signedDocs(docs, idCol, tokensCol).localCheckpoint()
     try {
-      signed.select("id", "sh").write.mode(mode).parquet(s"$path/shingles")
-      explodeBands(signed, keepSh = false)
-        .write.mode(mode).partitionBy("band").parquet(s"$path/bands")
+      LocalFs.write(signed.select("id", "sh")).mode(mode).parquet(s"$path/shingles")
+      LocalFs.write(explodeBands(signed, keepSh = false))
+        .mode(mode).partitionBy("band").parquet(s"$path/bands")
     } finally CheckpointHygiene.release(signed)
     // both consumers of the checkpoint are the two writes above, so the
     // blocks are releasable the moment the second write returns

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** Product-quantization ANN (PQ/ADC — the faiss IndexPQ recipe): compress
   * every vector to M subspace code bytes, scan the compressed codes with
   * an asymmetric-distance lookup table, exact-rerank the survivors.
@@ -112,10 +114,10 @@ object ProductQuantizer {
   def save(spark: org.apache.spark.sql.SparkSession,
       model: Model, path: String): Unit = {
     import spark.implicits._
-    Seq((model.m, model.ks, model.dsub, model.codebook.toSeq))
+    LocalFs.write(Seq((model.m, model.ks, model.dsub, model.codebook.toSeq))
       .toDF("m", "ks", "dsub", "codebook")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
+      .coalesce(1))
+      .mode("overwrite").parquet(path)
   }
 
   /** Load a model saved by [[save]]. */

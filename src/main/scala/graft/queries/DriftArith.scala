@@ -22,10 +22,10 @@ package graft.queries
   * "loud or exact" contract with "exact" holding everywhere a row
   * count can physically reach.
   *
-  * The streaming twins (StreamingDriftKs/Cvm/Ad/Emd/Mw) compute the
-  * same operand trees in JVM scalar code, where Long arithmetic wraps
-  * SILENTLY regardless of ANSI — they carry the same widening as
-  * BigInt on the cross terms and scaling (exact at any count; the
+  * The streaming twins (graft.streaming.HistogramDrift: ks, cvm, ad,
+  * emd, mw) compute the same operand trees in JVM scalar code, where
+  * Long arithmetic wraps SILENTLY regardless of ANSI — they carry the
+  * same widening as BigInt on the cross terms and scaling (exact at any count; the
   * walk runs once per (type, micro-batch) over quantizer-bounded
   * levels, so the boxing cost is off the per-arrival hot path). */
 object DriftArith {

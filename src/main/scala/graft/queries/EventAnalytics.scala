@@ -926,8 +926,8 @@ object EventAnalytics extends QueryModule {
       // (type × week)-bounded aggregate — NOT corpus-sized), wtot
       // week-keyed, bc type-keyed. `bc IS NOT NULL` reproduces the old
       // INNER join's drop of types absent from the baseline week.
-      // Same-run A/B (ScratchAB, rows hash-identical): 0.354 vs
-      // 0.637 s at sf0.1 (0.56×); a persist() of wc instead read
+      // Same-run A/B (OPTIMIZATION_r20.md, rows hash-identical): 0.354
+      // vs 0.637 s at sf0.1 (0.56×); a persist() of wc instead read
       // 0.803 s — materialization overhead loses to windows here.
       val wG = Window.partitionBy()
       val wW = Window.partitionBy($"w")
@@ -994,16 +994,7 @@ object EventAnalytics extends QueryModule {
     * aggregate depends on event volume. */
   private val driftKs = Q(
     "x_drift_ks",
-    Some("""WITH d AS (SELECT event_type,
-                         CAST(floor(value * 100.0) AS BIGINT) AS cents,
-                         epoch_ms(ts) // 86400000 AS day FROM events),
-            dr AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-            s AS (SELECT event_type, cents,
-                    CAST(sum(CASE WHEN day <= (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS ea,
-                    CAST(sum(CASE WHEN day > (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS la
-                  FROM d CROSS JOIN dr GROUP BY 1, 2),
+    Some(DriftFrame.oracleCtes + """,
             c AS (SELECT event_type, cents,
                     CAST(sum(ea) OVER w AS BIGINT) AS cume,
                     CAST(sum(la) OVER w AS BIGINT) AS cuml,
@@ -1030,30 +1021,11 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .select($"event_type",
-          expr("CAST(floor(value * 100.0) AS BIGINT)").as("cents"),
-          expr("unix_millis(ts) DIV 86400000").as("day"))
-      val dr = d.agg(min($"day").as("d0"), max($"day").as("d1"))
-      val s = d.crossJoin(broadcast(dr))
-        .withColumn("early", $"day" <= expr("(d0 + d1) DIV 2"))
-        .groupBy($"event_type", $"cents")
-        .agg(sum(when($"early", 1L).otherwise(0L)).as("ea"),
-          sum(when(!$"early", 1L).otherwise(0L)).as("la"))
-      val wC = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // r20 (§2.4): totals ride wC's spec with an unbounded-unbounded
-      // frame so cume/cuml/ne/nl fuse into ONE Window operator (same
-      // values — the frame covers the whole partition). mx stays a
-      // second Window by necessity: it aggregates `term`, which is an
-      // output of the first.
-      val wT = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val s = DriftFrame.histogram(t(spark, dir, "events"))
+      // mx is a second Window by necessity: it aggregates `term`, an
+      // output of the frame's fused Window
       val wM = Window.partitionBy($"event_type")
-      val c = s.select($"event_type", $"cents",
-        sum($"ea").over(wC).as("cume"), sum($"la").over(wC).as("cuml"),
-        sum($"ea").over(wT).as("ne"), sum($"la").over(wT).as("nl"))
-        .where($"ne" > 0 && $"nl" > 0)
+      val c = DriftFrame.levels(s, Seq($"cents", DriftFrame.cume, DriftFrame.cuml))
         .withColumn("term",
           expr(DriftArith.absCrossTermSql("cume", "nl", "cuml", "ne")))
         .withColumn("mx", max($"term").over(wM))
@@ -1095,16 +1067,7 @@ object EventAnalytics extends QueryModule {
     * exchange), then a ≤ 10-row-per-type rollup. */
   private val driftPsi = Q(
     "x_drift_psi",
-    Some("""WITH d AS (SELECT event_type,
-                         CAST(floor(value * 100.0) AS BIGINT) AS cents,
-                         epoch_ms(ts) // 86400000 AS day FROM events),
-            dr AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-            s AS (SELECT event_type, cents,
-                    CAST(sum(CASE WHEN day <= (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS ea,
-                    CAST(sum(CASE WHEN day > (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS la
-                  FROM d CROSS JOIN dr GROUP BY 1, 2),
+    Some(DriftFrame.oracleCtes + """,
             c AS (SELECT event_type, ea, la,
                     CAST(sum(ea) OVER w AS BIGINT) AS cume,
                     CAST(sum(ea) OVER t AS BIGINT) AS ne,
@@ -1132,30 +1095,8 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .select($"event_type",
-          expr("CAST(floor(value * 100.0) AS BIGINT)").as("cents"),
-          expr("unix_millis(ts) DIV 86400000").as("day"))
-      val dr = d.agg(min($"day").as("d0"), max($"day").as("d1"))
-      val s = d.crossJoin(broadcast(dr))
-        .withColumn("early", $"day" <= expr("(d0 + d1) DIV 2"))
-        .groupBy($"event_type", $"cents")
-        .agg(sum(when($"early", 1L).otherwise(0L)).as("ea"),
-          sum(when(!$"early", 1L).otherwise(0L)).as("la"))
-      val wC = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // r20 (§2.4, one fewer operator pass): the totals window shares
-      // wC's (partition, order) spec with an unbounded-unbounded frame,
-      // so Spark fuses ALL the frames into ONE Window operator instead
-      // of stacking a second partition-only Window behind the first —
-      // same values (the frame covers the whole partition regardless of
-      // order), one fewer buffered pass over every type partition.
-      val wT = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      s.select($"event_type", $"ea", $"la",
-          sum($"ea").over(wC).as("cume"),
-          sum($"ea").over(wT).as("ne"), sum($"la").over(wT).as("nl"))
-        .where($"ne" > 0 && $"nl" > 0)
+      val s = DriftFrame.histogram(t(spark, dir, "events"))
+      DriftFrame.levels(s, Seq($"ea", $"la", DriftFrame.cume))
         .withColumn("bin",
           expr("least(9, greatest(0,"
             + " (CAST(cume - 1 AS DECIMAL(38,0)) * 10) DIV ne))"))
@@ -1195,16 +1136,7 @@ object EventAnalytics extends QueryModule {
     * aggregate and type-keyed window, a ≤ 10-row-per-type rollup. */
   private val driftChi2 = Q(
     "x_drift_chi2",
-    Some("""WITH d AS (SELECT event_type,
-                         CAST(floor(value * 100.0) AS BIGINT) AS cents,
-                         epoch_ms(ts) // 86400000 AS day FROM events),
-            dr AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-            s AS (SELECT event_type, cents,
-                    CAST(sum(CASE WHEN day <= (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS ea,
-                    CAST(sum(CASE WHEN day > (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS la
-                  FROM d CROSS JOIN dr GROUP BY 1, 2),
+    Some(DriftFrame.oracleCtes + """,
             c AS (SELECT event_type, ea, la,
                     CAST(sum(ea) OVER w AS BIGINT) AS cume,
                     CAST(sum(ea) OVER t AS BIGINT) AS ne,
@@ -1232,30 +1164,8 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .select($"event_type",
-          expr("CAST(floor(value * 100.0) AS BIGINT)").as("cents"),
-          expr("unix_millis(ts) DIV 86400000").as("day"))
-      val dr = d.agg(min($"day").as("d0"), max($"day").as("d1"))
-      val s = d.crossJoin(broadcast(dr))
-        .withColumn("early", $"day" <= expr("(d0 + d1) DIV 2"))
-        .groupBy($"event_type", $"cents")
-        .agg(sum(when($"early", 1L).otherwise(0L)).as("ea"),
-          sum(when(!$"early", 1L).otherwise(0L)).as("la"))
-      val wC = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // r20 (§2.4, one fewer operator pass): the totals window shares
-      // wC's (partition, order) spec with an unbounded-unbounded frame,
-      // so Spark fuses ALL the frames into ONE Window operator instead
-      // of stacking a second partition-only Window behind the first —
-      // same values (the frame covers the whole partition regardless of
-      // order), one fewer buffered pass over every type partition.
-      val wT = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      s.select($"event_type", $"ea", $"la",
-          sum($"ea").over(wC).as("cume"),
-          sum($"ea").over(wT).as("ne"), sum($"la").over(wT).as("nl"))
-        .where($"ne" > 0 && $"nl" > 0)
+      val s = DriftFrame.histogram(t(spark, dir, "events"))
+      DriftFrame.levels(s, Seq($"ea", $"la", DriftFrame.cume))
         .withColumn("bin",
           expr("least(9, greatest(0,"
             + " (CAST(cume - 1 AS DECIMAL(38,0)) * 10) DIV ne))"))
@@ -1310,16 +1220,7 @@ object EventAnalytics extends QueryModule {
     * levels, a type-cardinality rollup. */
   private val driftCvm = Q(
     "x_drift_cvm",
-    Some("""WITH d AS (SELECT event_type,
-                         CAST(floor(value * 100.0) AS BIGINT) AS cents,
-                         epoch_ms(ts) // 86400000 AS day FROM events),
-            dr AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-            s AS (SELECT event_type, cents,
-                    CAST(sum(CASE WHEN day <= (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS ea,
-                    CAST(sum(CASE WHEN day > (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS la
-                  FROM d CROSS JOIN dr GROUP BY 1, 2),
+    Some(DriftFrame.oracleCtes + """,
             c AS (SELECT event_type, ea, la,
                     CAST(sum(ea) OVER w AS BIGINT) AS cume,
                     CAST(sum(la) OVER w AS BIGINT) AS cuml,
@@ -1343,30 +1244,8 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .select($"event_type",
-          expr("CAST(floor(value * 100.0) AS BIGINT)").as("cents"),
-          expr("unix_millis(ts) DIV 86400000").as("day"))
-      val dr = d.agg(min($"day").as("d0"), max($"day").as("d1"))
-      val s = d.crossJoin(broadcast(dr))
-        .withColumn("early", $"day" <= expr("(d0 + d1) DIV 2"))
-        .groupBy($"event_type", $"cents")
-        .agg(sum(when($"early", 1L).otherwise(0L)).as("ea"),
-          sum(when(!$"early", 1L).otherwise(0L)).as("la"))
-      val wC = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // r20 (§2.4, one fewer operator pass): the totals window shares
-      // wC's (partition, order) spec with an unbounded-unbounded frame,
-      // so Spark fuses ALL the frames into ONE Window operator instead
-      // of stacking a second partition-only Window behind the first —
-      // same values (the frame covers the whole partition regardless of
-      // order), one fewer buffered pass over every type partition.
-      val wT = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      s.select($"event_type", $"ea", $"la",
-          sum($"ea").over(wC).as("cume"), sum($"la").over(wC).as("cuml"),
-          sum($"ea").over(wT).as("ne"), sum($"la").over(wT).as("nl"))
-        .where($"ne" > 0 && $"nl" > 0)
+      val s = DriftFrame.histogram(t(spark, dir, "events"))
+      DriftFrame.levels(s, Seq($"ea", $"la", DriftFrame.cume, DriftFrame.cuml))
         .groupBy($"event_type", $"ne", $"nl")
         .agg(round(sum(($"ea" + $"la")
             * expr(DriftArith.crossTermSql("cume", "nl", "cuml", "ne"))
@@ -1400,7 +1279,7 @@ object EventAnalytics extends QueryModule {
     * sum), not a row filter: a type whose merged early∪late support
     * is a single cent level keeps its group and emits ad = 0.0,
     * preserving the drift family's shared-type-domain invariant and
-    * matching StreamingDriftAd, which already emitted the zero row.
+    * matching HistogramDrift.ad, which already emitted the zero row.
     *
     * FLOAT WORKSHEET (why this is admissible where mid-algebra
     * division is not): the per-level division is TERMINAL — its
@@ -1425,16 +1304,7 @@ object EventAnalytics extends QueryModule {
     * type-cardinality rollup. */
   private val driftAd = Q(
     "x_drift_ad",
-    Some("""WITH d AS (SELECT event_type,
-                         CAST(floor(value * 100.0) AS BIGINT) AS cents,
-                         epoch_ms(ts) // 86400000 AS day FROM events),
-            dr AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-            s AS (SELECT event_type, cents,
-                    CAST(sum(CASE WHEN day <= (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS ea,
-                    CAST(sum(CASE WHEN day > (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS la
-                  FROM d CROSS JOIN dr GROUP BY 1, 2),
+    Some(DriftFrame.oracleCtes + """,
             c AS (SELECT event_type, ea, la,
                     CAST(sum(ea) OVER w AS BIGINT) AS cume,
                     CAST(sum(la) OVER w AS BIGINT) AS cuml,
@@ -1464,30 +1334,8 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .select($"event_type",
-          expr("CAST(floor(value * 100.0) AS BIGINT)").as("cents"),
-          expr("unix_millis(ts) DIV 86400000").as("day"))
-      val dr = d.agg(min($"day").as("d0"), max($"day").as("d1"))
-      val s = d.crossJoin(broadcast(dr))
-        .withColumn("early", $"day" <= expr("(d0 + d1) DIV 2"))
-        .groupBy($"event_type", $"cents")
-        .agg(sum(when($"early", 1L).otherwise(0L)).as("ea"),
-          sum(when(!$"early", 1L).otherwise(0L)).as("la"))
-      val wC = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // r20 (§2.4, one fewer operator pass): the totals window shares
-      // wC's (partition, order) spec with an unbounded-unbounded frame,
-      // so Spark fuses ALL the frames into ONE Window operator instead
-      // of stacking a second partition-only Window behind the first —
-      // same values (the frame covers the whole partition regardless of
-      // order), one fewer buffered pass over every type partition.
-      val wT = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      s.select($"event_type", $"ea", $"la",
-          sum($"ea").over(wC).as("cume"), sum($"la").over(wC).as("cuml"),
-          sum($"ea").over(wT).as("ne"), sum($"la").over(wT).as("nl"))
-        .where($"ne" > 0 && $"nl" > 0)
+      val s = DriftFrame.histogram(t(spark, dir, "events"))
+      DriftFrame.levels(s, Seq($"ea", $"la", DriftFrame.cume, DriftFrame.cuml))
         .withColumn("cumn", $"cume" + $"cuml")
         .groupBy($"event_type", $"ne", $"nl")
         .agg(round(sum(when($"cumn" < $"ne" + $"nl",
@@ -1543,16 +1391,7 @@ object EventAnalytics extends QueryModule {
     * aggregate depends on event volume. */
   private val driftMw = Q(
     "x_drift_mw",
-    Some("""WITH d AS (SELECT event_type,
-                         CAST(floor(value * 100.0) AS BIGINT) AS cents,
-                         epoch_ms(ts) // 86400000 AS day FROM events),
-            dr AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-            s AS (SELECT event_type, cents,
-                    CAST(sum(CASE WHEN day <= (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS ea,
-                    CAST(sum(CASE WHEN day > (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS la
-                  FROM d CROSS JOIN dr GROUP BY 1, 2),
+    Some(DriftFrame.oracleCtes + """,
             c AS (SELECT event_type, ea, la,
                     CAST(sum(ea + la) OVER w - (ea + la) AS BIGINT) AS cb,
                     CAST(sum(ea) OVER t AS BIGINT) AS ne,
@@ -1574,30 +1413,9 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .select($"event_type",
-          expr("CAST(floor(value * 100.0) AS BIGINT)").as("cents"),
-          expr("unix_millis(ts) DIV 86400000").as("day"))
-      val dr = d.agg(min($"day").as("d0"), max($"day").as("d1"))
-      val s = d.crossJoin(broadcast(dr))
-        .withColumn("early", $"day" <= expr("(d0 + d1) DIV 2"))
-        .groupBy($"event_type", $"cents")
-        .agg(sum(when($"early", 1L).otherwise(0L)).as("ea"),
-          sum(when(!$"early", 1L).otherwise(0L)).as("la"))
-      val wC = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // r20 (§2.4, one fewer operator pass): the totals window shares
-      // wC's (partition, order) spec with an unbounded-unbounded frame,
-      // so Spark fuses ALL the frames into ONE Window operator instead
-      // of stacking a second partition-only Window behind the first —
-      // same values (the frame covers the whole partition regardless of
-      // order), one fewer buffered pass over every type partition.
-      val wT = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      s.select($"event_type", $"ea", $"la",
-          (sum($"ea" + $"la").over(wC) - ($"ea" + $"la")).as("cb"),
-          sum($"ea").over(wT).as("ne"), sum($"la").over(wT).as("nl"))
-        .where($"ne" > 0 && $"nl" > 0)
+      val s = DriftFrame.histogram(t(spark, dir, "events"))
+      DriftFrame.levels(s, Seq($"ea", $"la",
+          (sum($"ea" + $"la").over(DriftFrame.upTo) - ($"ea" + $"la")).as("cb")))
         .groupBy($"event_type", $"ne", $"nl")
         .agg(sum(expr(DriftArith.mwR2TermSql("ea", "cb", "la"))).as("r2"))
         .select($"event_type", $"ne".as("n_early"), $"nl".as("n_late"),
@@ -3627,16 +3445,7 @@ object EventAnalytics extends QueryModule {
     * level-cardinality rollup. */
   private val driftJs = Q(
     "x_drift_js",
-    Some("""WITH d AS (SELECT event_type,
-                         CAST(floor(value * 100.0) AS BIGINT) AS cents,
-                         epoch_ms(ts) // 86400000 AS day FROM events),
-            dr AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-            s AS (SELECT event_type, cents,
-                    CAST(sum(CASE WHEN day <= (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS ea,
-                    CAST(sum(CASE WHEN day > (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS la
-                  FROM d CROSS JOIN dr GROUP BY 1, 2),
+    Some(DriftFrame.oracleCtes + """,
             tt AS (SELECT event_type, CAST(sum(ea) AS BIGINT) AS ne,
                      CAST(sum(la) AS BIGINT) AS nl
                    FROM s GROUP BY 1),
@@ -3665,16 +3474,7 @@ object EventAnalytics extends QueryModule {
             FROM j ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .select($"event_type",
-          expr("CAST(floor(value * 100.0) AS BIGINT)").as("cents"),
-          expr("unix_millis(ts) DIV 86400000").as("day"))
-      val dr = d.agg(min($"day").as("d0"), max($"day").as("d1"))
-      val s = d.crossJoin(broadcast(dr))
-        .withColumn("early", $"day" <= expr("(d0 + d1) DIV 2"))
-        .groupBy($"event_type", $"cents")
-        .agg(sum(when($"early", 1L).otherwise(0L)).as("ea"),
-          sum(when(!$"early", 1L).otherwise(0L)).as("la"))
+      val s = DriftFrame.histogram(t(spark, dir, "events"))
       // r20 (§2.4, the x_drift_ks shape): per-type totals as a window
       // over the aggregated (type, cents) frame instead of a second
       // aggregate + join-back — the join-back recomputed the whole
@@ -3682,8 +3482,8 @@ object EventAnalytics extends QueryModule {
       // divergence defeats ReusedExchange), so the old plan scanned
       // events 4×; this one scans it 2× (the d/dr split-bounds pass,
       // which is the family's fundamental two-pass shape). Same-run
-      // A/B (ScratchAB, rows hash-identical): 0.600 vs 0.617 s at
-      // sf0.1 — flat here, but half the scans at scale.
+      // A/B (OPTIMIZATION_r20.md, rows hash-identical): 0.600 vs
+      // 0.617 s at sf0.1 — flat here, but half the scans at scale.
       val wT = Window.partitionBy($"event_type")
       s.select($"event_type", $"cents", $"ea", $"la",
           sum($"ea").over(wT).as("ne"), sum($"la").over(wT).as("nl"))
@@ -3748,16 +3548,7 @@ object EventAnalytics extends QueryModule {
     * aggregate depends on event volume. */
   private val driftEmd = Q(
     "x_drift_emd",
-    Some("""WITH d AS (SELECT event_type,
-                         CAST(floor(value * 100.0) AS BIGINT) AS cents,
-                         epoch_ms(ts) // 86400000 AS day FROM events),
-            dr AS (SELECT min(day) AS d0, max(day) AS d1 FROM d),
-            s AS (SELECT event_type, cents,
-                    CAST(sum(CASE WHEN day <= (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS ea,
-                    CAST(sum(CASE WHEN day > (d0 + d1) // 2
-                             THEN 1 ELSE 0 END) AS BIGINT) AS la
-                  FROM d CROSS JOIN dr GROUP BY 1, 2),
+    Some(DriftFrame.oracleCtes + """,
             c AS (SELECT event_type, cents,
                     CAST(sum(ea) OVER w AS BIGINT) AS cume,
                     CAST(sum(la) OVER w AS BIGINT) AS cuml,
@@ -3784,30 +3575,13 @@ object EventAnalytics extends QueryModule {
             FROM m ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .select($"event_type",
-          expr("CAST(floor(value * 100.0) AS BIGINT)").as("cents"),
-          expr("unix_millis(ts) DIV 86400000").as("day"))
-      val dr = d.agg(min($"day").as("d0"), max($"day").as("d1"))
-      val s = d.crossJoin(broadcast(dr))
-        .withColumn("early", $"day" <= expr("(d0 + d1) DIV 2"))
-        .groupBy($"event_type", $"cents")
-        .agg(sum(when($"early", 1L).otherwise(0L)).as("ea"),
-          sum(when(!$"early", 1L).otherwise(0L)).as("la"))
-      val wC = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // r20 (§2.4): totals share wC's (partition, order) spec with an
-      // unbounded-unbounded frame — cume/cuml/ne/nl/lead all fuse into
-      // ONE Window operator instead of a stacked second pass.
-      val wT = Window.partitionBy($"event_type").orderBy($"cents")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val s = DriftFrame.histogram(t(spark, dir, "events"))
+      // the lead gap shares the frame's (partition, order) spec, so it
+      // fuses into the same Window operator
       val wL = Window.partitionBy($"event_type").orderBy($"cents")
-      val c = s.select($"event_type", $"cents",
-        sum($"ea").over(wC).as("cume"), sum($"la").over(wC).as("cuml"),
-        sum($"ea").over(wT).as("ne"), sum($"la").over(wT).as("nl"),
-        lead($"cents", 1).over(wL).as("nxt"))
-        .where($"ne" > 0 && $"nl" > 0)
-      c.groupBy($"event_type", $"ne", $"nl")
+      DriftFrame.levels(s, Seq($"cents", DriftFrame.cume, DriftFrame.cuml),
+          lead($"cents", 1).over(wL).as("nxt"))
+        .groupBy($"event_type", $"ne", $"nl")
         .agg(sum(
           expr(DriftArith.absCrossTermSql("cume", "nl", "cuml", "ne"))
             * (coalesce($"nxt", $"cents") - $"cents")).as("tot"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** Group X — corpus-mining analytics over the `documents` table: the
   * reporting layer a curation pipeline runs AFTER the gates (dedup,
   * quality, decontamination) to understand what the corpus contains —
@@ -878,9 +880,9 @@ object MiningOps extends QueryModule {
           .distinct())
         val df = tok.groupBy($"token").agg(count(lit(1)).as("n"))
         val voc = df.orderBy($"n".desc, $"token").limit(100)
-        tok.join(broadcast(voc), "token").write.parquet(s"$pth/p")
-        tok.agg(countDistinct($"doc_id").as("n_docs"))
-          .write.parquet(s"$pth/n")
+        LocalFs.write(tok.join(broadcast(voc), "token")).parquet(s"$pth/p")
+        LocalFs.write(tok.agg(countDistinct($"doc_id").as("n_docs")))
+          .parquet(s"$pth/n")
       }
       val p = spark.read.parquet(s"$path/p")
       val nn = broadcast(spark.read.parquet(s"$path/n"))
@@ -1414,7 +1416,7 @@ object MiningOps extends QueryModule {
       // first-seen; the heavy explode runs once). count(DISTINCT) is
       // not a window function; size(collect_set(...)) over the same
       // frame is its exact integer equivalent. Same-run A/B
-      // (ScratchAB `heaps`): 0.486 vs 0.767 s at sf0.1, rows
+      // (OPTIMIZATION_r20.md §8): 0.486 vs 0.767 s at sf0.1, rows
       // hash-identical.
       val wG = Window.partitionBy()
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -1481,8 +1483,8 @@ object MiningOps extends QueryModule {
       // (source partitions), never corpus volume — and the corpus
       // total comes from an explode-FREE narrow pass (Σ size(tokens)
       // ≡ the exploded row count, exactly). 2 scans, one explode.
-      // Same-run A/B (ScratchAB `kl`): 0.509 vs 0.578 s at sf0.1,
-      // rows hash-identical.
+      // Same-run A/B (OPTIMIZATION_r20.md §8): 0.509 vs 0.578 s at
+      // sf0.1, rows hash-identical.
       val docs = t(spark, dir, "documents")
       val st = docs
         .select($"source", explode(expr(

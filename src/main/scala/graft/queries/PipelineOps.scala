@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** Group X — training-data curation stages beyond dedup/quality basics:
   * benchmark decontamination, deterministic stratified sampling,
   * repetition-based quality filtering, and the composed filter chain a
@@ -1075,7 +1077,7 @@ object PipelineOps extends QueryModule {
     import spark.implicits._
     val path = QueryModule.cachedIndex(
         s"dsirdoc:$dir", tableStamp(dir, "documents")) { p =>
-      dsirDocWeightsBuild(spark, dir).write.parquet(s"$p/weights")
+      LocalFs.write(dsirDocWeightsBuild(spark, dir)).parquet(s"$p/weights")
     }
     spark.read.parquet(s"$path/weights")
       .select($"doc_id", $"source",

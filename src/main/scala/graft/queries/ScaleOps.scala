@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
 import graft.multimodal.{AudioCodec, FrameContainer, ImageCodec, MediaPipeline, MediaRow}
 import graft.operators.{MinHashDedup, SimHashDedup}
 
@@ -23,8 +24,9 @@ object ScaleOps extends QueryModule {
     * (simhash64 / shingle_hashes + minhash_sig) each consume `toks` a
     * bounded number of times, so tokenize inlines ≤3× per row — a
     * linear recompute that is CHEAPER than an anti-inline barrier's
-    * full-corpus exchange. MEASURED, not assumed (tools/InlineCost, 1M
-    * synthetic 50-token docs, min of 6 reps under host steal):
+    * full-corpus exchange. MEASURED, not assumed (r16, 1M synthetic
+    * 50-token docs, min of 6 reps under host steal; OPTIMIZATION_r19.md
+    * carries the same barrier-vs-inline trade to the text family):
     * simhash barrier 2.06 s vs inline 1.35 s; minhash barrier 1.49 s
     * vs inline 0.84 s. Both sides scale linearly with the corpus, so
     * the ratio holds at 100 TB. Barriers remain only where a lambda
@@ -247,8 +249,8 @@ object ScaleOps extends QueryModule {
     val path = QueryModule.cachedIndex(
         s"mharith:$dir", tableStamp(dir, "documents")) { p =>
       val (sset, sigWide) = minhashArithBuild(spark, dir)
-      sset.write.parquet(s"$p/sset")
-      sigWide.write.parquet(s"$p/sig")
+      LocalFs.write(sset).parquet(s"$p/sset")
+      LocalFs.write(sigWide).parquet(s"$p/sig")
     }
     val sset = spark.read.parquet(s"$path/sset")
     val sigWide = spark.read.parquet(s"$path/sig")
@@ -543,8 +545,8 @@ object ScaleOps extends QueryModule {
     val path = QueryModule.cachedIndex(
         s"sharith:$dir", tableStamp(dir, "documents")) { p =>
       val (chp, tw) = simhashArithBuild(spark, dir)
-      chp.write.parquet(s"$p/sig")
-      tw.write.parquet(s"$p/tw")
+      LocalFs.write(chp).parquet(s"$p/sig")
+      LocalFs.write(tw).parquet(s"$p/tw")
     }
     (spark.read.parquet(s"$path/sig"), spark.read.parquet(s"$path/tw"))
   }
@@ -834,7 +836,7 @@ object ScaleOps extends QueryModule {
           .join(tw.select($"doc_id".as("b_id"), $"tid", $"w".as("wb")),
             Seq("b_id", "tid"))
           .groupBy($"a_id", $"b_id").agg(sum($"wa" * $"wb").as("dot"))
-        pairs
+        LocalFs.write(pairs
           .join(dots, Seq("a_id", "b_id"), "left")
           .na.fill(0L, Seq("dot"))
           .join(nrm.select($"doc_id".as("a_id"), $"n2".as("na2")), "a_id")
@@ -842,8 +844,8 @@ object ScaleOps extends QueryModule {
           .select($"a_id", $"b_id", $"hamming",
             expr("""CAST(floor(CAST(dot AS DOUBLE) * 10000.0
                    / (sqrt(CAST(na2 AS DOUBLE))
-                      * sqrt(CAST(nb2 AS DOUBLE)))) AS BIGINT)""").as("cos_bp"))
-          .write.parquet(s"$pth/scored")
+                      * sqrt(CAST(nb2 AS DOUBLE)))) AS BIGINT)""").as("cos_bp")))
+          .parquet(s"$pth/scored")
       }
       spark.read.parquet(s"$path/scored")
         .select($"hamming", $"cos_bp")
@@ -879,8 +881,8 @@ object ScaleOps extends QueryModule {
       : org.apache.spark.sql.DataFrame = {
     val path = QueryModule.cachedIndex(
         s"mhsigned:$dir", tableStamp(dir, "documents")) { p =>
-      MinHashDedup.signDocs(docTokensRaw(spark, dir), "doc_id", "toks")
-        .write.parquet(s"$p/signed")
+      LocalFs.write(MinHashDedup.signDocs(docTokensRaw(spark, dir), "doc_id", "toks"))
+        .parquet(s"$p/signed")
     }
     spark.read.parquet(s"$path/signed")
   }
@@ -944,7 +946,7 @@ object ScaleOps extends QueryModule {
     import spark.implicits._
     val path = QueryModule.cachedIndex(
         s"mediaimg:$dir", tableStamp(dir, "documents")) { p =>
-      t(spark, dir, "documents").where(length(col("text")) > 0)
+      LocalFs.write(t(spark, dir, "documents").where(length(col("text")) > 0)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions { it =>
           it.grouped(MediaPipeline.BatchSize).flatMap(_.map { case (id, text) =>
@@ -954,7 +956,7 @@ object ScaleOps extends QueryModule {
             val px = Array.tabulate(w * h)(i => tb(i % tb.length))
             MediaRow(id, "image", ImageCodec.encodeGrayPng(px, w, h), w, h)
           })
-        }.write.mode("overwrite").parquet(p)
+        }).mode("overwrite").parquet(p)
     }
     spark.read.parquet(path).as[MediaRow]
   }
@@ -1051,7 +1053,7 @@ object ScaleOps extends QueryModule {
         // and the (expensive, ~200µs each) real JPEG decodes run on ONE
         // task — measured 1.44 → 0.5 s warm at sf0.1. A production
         // media table is many-sharded for exactly this reason.
-        t(spark, dir, "documents").where(length(col("text")) > 0)
+        LocalFs.write(t(spark, dir, "documents").where(length(col("text")) > 0)
           .select($"doc_id", $"text").as[(Long, String)]
           .repartition(spark.sparkContext.defaultParallelism)
           .mapPartitions { it =>
@@ -1064,7 +1066,7 @@ object ScaleOps extends QueryModule {
                 ImageCodec.encodeGrayJpeg(px, w, h, MediaPipeline.JpegQualityBp),
                 w, h)
             })
-          }.write.mode("overwrite").parquet(p)
+          }).mode("overwrite").parquet(p)
       }
       val decoded =
         MediaPipeline.decodeImages(spark.read.parquet(path).as[MediaRow]).toDF()
@@ -1117,7 +1119,7 @@ object ScaleOps extends QueryModule {
       // (JVM, generation); the query measures the real decode path
       val path = QueryModule.cachedIndex(
           s"mediawav:$dir", tableStamp(dir, "documents")) { p =>
-        t(spark, dir, "documents").where(length(col("text")) > 0)
+        LocalFs.write(t(spark, dir, "documents").where(length(col("text")) > 0)
           .select($"doc_id", $"text").as[(Long, String)]
           .mapPartitions { it =>
             it.grouped(MediaPipeline.BatchSize).flatMap(_.map { case (id, text) =>
@@ -1131,7 +1133,7 @@ object ScaleOps extends QueryModule {
               val samples = tb.map(b => (((b & 0x7F) - 64) * 256).toShort)
               MediaRow(id, "audio", AudioCodec.encodeWavPcm16(samples, 8000), 0, 0)
             })
-          }.write.mode("overwrite").parquet(p)
+          }).mode("overwrite").parquet(p)
       }
       MediaPipeline.decodeAudio(spark.read.parquet(path).as[MediaRow]).toDF()
         .select($"media_id".as("doc_id"), $"sample_rate", $"channels",
@@ -1183,7 +1185,7 @@ object ScaleOps extends QueryModule {
       // per (JVM, generation); the query measures decode → embed → ANN
       val path = QueryModule.cachedIndex(
           s"mediathumb:$dir", tableStamp(dir, "documents")) { p =>
-        t(spark, dir, "documents").where(length(col("text")) > 0)
+        LocalFs.write(t(spark, dir, "documents").where(length(col("text")) > 0)
           .select($"doc_id", $"text").as[(Long, String)]
           .mapPartitions { it =>
             it.grouped(MediaPipeline.BatchSize).flatMap(_.map { case (id, text) =>
@@ -1191,7 +1193,7 @@ object ScaleOps extends QueryModule {
               val px = Array.tabulate(64)(i => tb(i % tb.length))
               MediaRow(id, "image", ImageCodec.encodeGrayPng(px, 8, 8), 8, 8)
             })
-          }.write.mode("overwrite").parquet(p)
+          }).mode("overwrite").parquet(p)
       }
       // features come from DECODED pixels of the stored PNGs
       val feats = spark.read.parquet(path).as[MediaRow]
@@ -1247,7 +1249,7 @@ object ScaleOps extends QueryModule {
       // container parse + real per-frame decode path
       val path = QueryModule.cachedIndex(
           s"mediavid:$dir", tableStamp(dir, "documents")) { p =>
-        t(spark, dir, "documents").where(length(col("text")) > 0)
+        LocalFs.write(t(spark, dir, "documents").where(length(col("text")) > 0)
           .select($"doc_id", $"text").as[(Long, String)]
           .mapPartitions { it =>
             it.grouped(MediaPipeline.BatchSize).flatMap(_.map { case (id, text) =>
@@ -1259,7 +1261,7 @@ object ScaleOps extends QueryModule {
               }
               MediaRow(id, "video", FrameContainer.pack(frames), 8, 8)
             })
-          }.write.mode("overwrite").parquet(p)
+          }).mode("overwrite").parquet(p)
       }
       MediaPipeline.decodeFrames(spark.read.parquet(path).as[MediaRow],
           stride = 2).toDF()
@@ -1299,7 +1301,7 @@ object ScaleOps extends QueryModule {
       // file would serialize them on one task)
       val path = QueryModule.cachedIndex(
           s"mediamjpeg:$dir", tableStamp(dir, "documents")) { p =>
-        t(spark, dir, "documents").where(length(col("text")) > 0)
+        LocalFs.write(t(spark, dir, "documents").where(length(col("text")) > 0)
           .select($"doc_id", $"text").as[(Long, String)]
           .repartition(spark.sparkContext.defaultParallelism)
           .mapPartitions { it =>
@@ -1313,7 +1315,7 @@ object ScaleOps extends QueryModule {
               }
               MediaRow(id, "video", FrameContainer.pack(frames), 8, 8)
             })
-          }.write.mode("overwrite").parquet(p)
+          }).mode("overwrite").parquet(p)
       }
       val decoded = MediaPipeline.decodeFrames(
           spark.read.parquet(path).as[MediaRow], stride = 2).toDF()
@@ -1594,11 +1596,11 @@ object ScaleOps extends QueryModule {
         // SINGLE-DAY table would otherwise write zero part files (AQE
         // empty-aggregate), leaving a dir spark.read can't infer a
         // schema from; one task always emits a schema-carrying file
-        ev.where(to_date($"ts") < lit(maxDay))
+        LocalFs.write(ev.where(to_date($"ts") < lit(maxDay))
           .groupBy(to_date($"ts").as("day"), $"event_type")
           .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(p)
+          .coalesce(1))
+          .mode("overwrite").parquet(p)
       }
       val hist = spark.read.parquet(path)
       val maxDay = ev.agg(max(to_date($"ts")).as("mday"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.eventstore.LocalFs
+
 /** Group X — large-scale training-data text pipeline operators over the
   * `documents` table: dedup (exact + n-gram Jaccard), tokenization/top-k
   * tokens, language-ID heuristic, quality scoring, token counting and
@@ -137,7 +139,7 @@ object TextOps extends QueryModule {
       : org.apache.spark.sql.DataFrame = {
     val path = QueryModule.cachedIndex(
         s"ngrampairs:$dir", tableStamp(dir, "documents")) { p =>
-      ngramPairsBuild(spark, dir).write.parquet(s"$p/pairs")
+      LocalFs.write(ngramPairsBuild(spark, dir)).parquet(s"$p/pairs")
     }
     spark.read.parquet(s"$path/pairs")
   }
@@ -482,7 +484,7 @@ object TextOps extends QueryModule {
       : org.apache.spark.sql.DataFrame = {
     val path = QueryModule.cachedIndex(
         s"winnowpairs:$dir", tableStamp(dir, "documents")) { p =>
-      winnowPairsBuild(spark, dir).write.parquet(s"$p/pairs")
+      LocalFs.write(winnowPairsBuild(spark, dir)).parquet(s"$p/pairs")
     }
     spark.read.parquet(s"$path/pairs")
   }
@@ -622,7 +624,7 @@ object TextOps extends QueryModule {
       : org.apache.spark.sql.DataFrame = {
     val path = QueryModule.cachedIndex(
         s"sampledpairs:$dir", tableStamp(dir, "documents")) { p =>
-      sampledPairsBuild(spark, dir).write.parquet(s"$p/pairs")
+      LocalFs.write(sampledPairsBuild(spark, dir)).parquet(s"$p/pairs")
     }
     spark.read.parquet(s"$path/pairs")
   }
@@ -909,15 +911,15 @@ object TextOps extends QueryModule {
         s"bigramlm:$dir", tableStamp(dir, "documents")) { p =>
       val toks = t(spark, dir, "documents")
         .select(expr("filter(split(lower(text), ' +'), x -> x != '')").as("tk"))
-      toks.where(size($"tk") >= 2)
+      LocalFs.write(toks.where(size($"tk") >= 2)
         .select(explode(expr(
           "transform(sequence(0, size(tk) - 2), i -> concat(tk[i], ' ', tk[i + 1]))"))
           .as("bigram"))
-        .groupBy($"bigram").agg(count(lit(1)).as("c12"))
-        .write.parquet(s"$p/cb")
-      toks.select(explode($"tk").as("token"))
-        .groupBy($"token").agg(count(lit(1)).as("c1"))
-        .write.parquet(s"$p/cu")
+        .groupBy($"bigram").agg(count(lit(1)).as("c12")))
+        .parquet(s"$p/cb")
+      LocalFs.write(toks.select(explode($"tk").as("token"))
+        .groupBy($"token").agg(count(lit(1)).as("c1")))
+        .parquet(s"$p/cu")
     }
     (spark.read.parquet(s"$path/cb").select($"bigram".as("cb_bigram"), $"c12"),
       spark.read.parquet(s"$path/cu").select($"token".as("cu_token"), $"c1"))
@@ -954,7 +956,7 @@ object TextOps extends QueryModule {
         .withColumn("w1", expr("split(bigram, ' ')[0]"))
       val (cb, cu) = bigramLm(spark, dir)
       val v = cu.agg(count(lit(1)).as("vsz"))
-      dbg
+      LocalFs.write(dbg
         .join(cb, $"cb_bigram" === $"bigram")
         .join(cu, $"cu_token" === $"w1")
         .crossJoin(broadcast(v))
@@ -962,8 +964,8 @@ object TextOps extends QueryModule {
         .agg(floor(lit(-10000.0) *
             sum($"occ" * log2(($"c12" + 1).cast("double") /
               ($"c1" + $"vsz").cast("double"))) /
-            sum($"occ")).cast("long").as("nll_bp"))
-        .write.parquet(s"$p/nll")
+            sum($"occ")).cast("long").as("nll_bp")))
+        .parquet(s"$p/nll")
     }
     spark.read.parquet(s"$path/nll")
   }
@@ -1264,15 +1266,15 @@ object TextOps extends QueryModule {
       // oracle recomputes spans from raw text on every gate run, so a
       // stale artifact hash-mismatches immediately (the bigramLm
       // proof-split rule). Inside the build, the two consumers of
-      // `toks` keep the no-barrier InlineCost trade documented in r16.
+      // `toks` keep the no-barrier inline trade (OPTIMIZATION_r19.md).
       val path = QueryModule.cachedIndex(
           s"dupspans:$dir", tableStamp(dir, "documents")) { pth =>
         val d = t(spark, dir, "documents")
           .select($"doc_id", $"source",
             expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
-        d.groupBy($"source")
-          .agg(sum(size($"toks")).cast("long").as("total_tokens"))
-          .write.parquet(s"$pth/tot")
+        LocalFs.write(d.groupBy($"source")
+          .agg(sum(size($"toks")).cast("long").as("total_tokens")))
+          .parquet(s"$pth/tot")
         // positioned 5-gram hashes; absolute offsets differ from the
         // oracle's 1-based positions but only differences survive to
         // the output (island keys and span lengths are
@@ -1299,9 +1301,9 @@ object TextOps extends QueryModule {
           .withColumn("grp", sum(
               when($"prev".isNull || $"p" - $"prev" > 4, 1L).otherwise(0L))
             .over(wP.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        isl.groupBy($"doc_id", $"source", $"grp")
-          .agg(min($"p").as("p0"), (max($"p") + 4).as("p1"))
-          .write.parquet(s"$pth/spans")
+        LocalFs.write(isl.groupBy($"doc_id", $"source", $"grp")
+          .agg(min($"p").as("p0"), (max($"p") + 4).as("p1")))
+          .parquet(s"$pth/spans")
       }
       val tot = spark.read.parquet(s"$path/tot")
       val sp = spark.read.parquet(s"$path/spans")
@@ -1551,11 +1553,11 @@ object TextOps extends QueryModule {
         $"doc_id".as("a_id"), $"sz".as("a_sz"))
       val b = post.select($"s".as("s2"), $"lang".as("b_lang"),
         $"doc_id".as("b_id"), $"sz".as("b_sz"))
-      a.join(b, $"s" === $"s2" && $"a_lang" === $"b_lang" &&
+      LocalFs.write(a.join(b, $"s" === $"s2" && $"a_lang" === $"b_lang" &&
           $"a_id" < $"b_id")
         .groupBy($"a_id", $"b_id", $"a_sz", $"b_sz")
-        .agg(count(lit(1)).as("inter"))
-        .write.parquet(s"$pth/pairs")
+        .agg(count(lit(1)).as("inter")))
+        .parquet(s"$pth/pairs")
     }
     spark.read.parquet(s"$path/pairs")
   }

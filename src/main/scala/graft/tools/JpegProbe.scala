@@ -2,9 +2,9 @@ package graft.tools
 
 import graft.multimodal.{ImageCodec, MediaPipeline}
 
-/** Measurement tool behind the x_media_jpeg tolerance band (the
-  * InlineCost pattern: constants in the declared surface come from a
-  * runnable measurement, not a guess). Prints the max |decoded mean
+/** Measurement tool behind the x_media_jpeg tolerance band (constants
+  * in the declared surface come from a runnable measurement, not a
+  * guess). Prints the max |decoded mean
   * luma − source mean luma| in basis points at the pinned quality for
   * (a) word-salad-like lowercase rasters at the query's dim range,
   * (b) a flat raster (expected ~0: a constant block is pure DC), and

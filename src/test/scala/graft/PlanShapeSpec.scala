@@ -475,8 +475,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     // signatures reach the band rows as attributes and the per-band
     // kernel re-evaluation the old in-generator lambdas forced (fenced
     // by repartition barriers) is structurally impossible. BOTH hash
-    // families now run completely barrier-free (the r8 InlineCost
-    // measurement removed the last minhash tokenize barrier), so any
+    // families now run completely barrier-free (the r8 inline-vs-barrier
+    // measurement removed the last minhash tokenize barrier; the trade is
+    // in OPTIMIZATION_r19.md), so any
     // round-robin exchange in either plan is a regression.
     val ps = plan("x_dedup_simhash")
     assert(!ps.contains("RoundRobinPartitioning"),
@@ -653,5 +654,27 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       s"totals must be exactly one window pass:\n$p")
     assert("Scan parquet".r.findAllIn(p).length <= 4, // 2 per section
       s"the split-bounds two-pass shape regressed to re-scans:\n$p")
+  }
+
+  test("drift family: every member's formatted plan equals its plans/r21 " +
+      "pin, node, expression and plan ids stripped") {
+    // the pins were dumped by graft.tools.Explain (sf0.01, 8 shuffle
+    // partitions); the whole formatted plan is compared — operator tree,
+    // per-node outputs, window specs and exchange arguments — so a
+    // respelling of the family's shared frame must leave every plan as is
+    def norm(p: String): Seq[String] = p.trim.linesIterator
+      .map(_.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+        .replaceAll("^\\(\\d+\\) ", "").replaceAll(" \\(\\d+\\)$", ""))
+      .toSeq
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try Seq("ad", "chi2", "cvm", "emd", "js", "ks", "mw", "psi", "tvd").foreach { m =>
+      val q = s"x_drift_$m"
+      val pin = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"plans/r21/${q}_parent.txt"))
+      val got = SparkEntry.queries(q)(spark, "/root/testdata/sf0.01").queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      assert(norm(got) == norm(pin), s"$q plan moved off its pin:\n$got")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
   }
 }

@@ -1,7 +1,7 @@
 package graft.eventstore
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.annotation.nowarn
 
@@ -60,6 +60,16 @@ class LocalFsSpec extends AnyFunSuite with SparkTestBase {
     assert(nioBytesWritten == before)
     LocalFs.write(rawEvents(10)).parquet(tmpDir("nio") + "/t")
     assert(nioBytesWritten > before)
+
+    // and so does a query artifact build (x_dedup_ngram's pair list), over
+    // a private copy of the documents table so the per-JVM artifact cache
+    // cannot serve it from an earlier build
+    val docs = tmpDir("artifact")
+    Files.copy(Paths.get("/root/testdata/sf0.001/documents.parquet"),
+      Paths.get(docs, "documents.parquet"))
+    val beforeBuild = nioBytesWritten
+    graft.SparkEntry.queries("x_dedup_ngram")(spark, docs)
+    assert(nioBytesWritten > beforeBuild)
   }
 
   test("a partitioned Ingest.append leaves the modes a plain df.write leaves " +

@@ -666,7 +666,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1)))
 
     val mem = MemoryStream[(String, Long)]
-    val q = graft.streaming.StreamingDriftMw.drift(
+    val q = graft.streaming.HistogramDrift.mw(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("mwdrift1").start()
@@ -724,7 +724,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     // a reset state would restart u2/n_late from zero and the final
     // rows would undercount every pre-restart arrival
     val mem = MemoryStream[(String, Long)]
-    def start() = graft.streaming.StreamingDriftMw.drift(
+    def start() = graft.streaming.HistogramDrift.mw(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("parquet").option("path", s"$dir/out")
@@ -916,7 +916,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1)))
 
     val mem = MemoryStream[(String, Long)]
-    val q = graft.streaming.StreamingDriftKs.drift(
+    val q = graft.streaming.HistogramDrift.ks(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("ksdrift1").start()
@@ -1000,7 +1000,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     // a reset state would restart the late histogram from empty and
     // the final sup would see only post-restart arrivals
     val mem = MemoryStream[(String, Long)]
-    def start() = graft.streaming.StreamingDriftKs.drift(
+    def start() = graft.streaming.HistogramDrift.ks(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("parquet").option("path", s"$dir/out")
@@ -1051,7 +1051,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1)))
 
     val mem = MemoryStream[(String, Long)]
-    val q = graft.streaming.StreamingDriftEmd.drift(
+    val q = graft.streaming.HistogramDrift.emd(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("emddrift1").start()
@@ -1135,7 +1135,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     val half = late.length / 2
 
     val mem = MemoryStream[(String, Long)]
-    def start() = graft.streaming.StreamingDriftCvm.drift(
+    def start() = graft.streaming.HistogramDrift.cvm(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("parquet").option("path", s"$dir/out")
@@ -1190,7 +1190,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     val half = late.length / 2
 
     val mem = MemoryStream[(String, Long)]
-    def start() = graft.streaming.StreamingDriftAd.drift(
+    def start() = graft.streaming.HistogramDrift.ad(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("parquet").option("path", s"$dir/out")
@@ -1247,7 +1247,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     // a reset state would restart the late histogram from empty and
     // the final sum would see only post-restart arrivals
     val mem = MemoryStream[(String, Long)]
-    def start() = graft.streaming.StreamingDriftEmd.drift(
+    def start() = graft.streaming.HistogramDrift.emd(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("parquet").option("path", s"$dir/out")
@@ -1298,7 +1298,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1)))
 
     val mem = MemoryStream[(String, Long)]
-    val q = graft.streaming.StreamingDriftBands.drift(
+    val q = graft.streaming.HistogramDrift.bands(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("bandsdrift1").start()
@@ -1362,7 +1362,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     // a reset state would restart every band counter and both
     // statistics would read only post-restart arrivals
     val mem = MemoryStream[(String, Long)]
-    def start() = graft.streaming.StreamingDriftBands.drift(
+    def start() = graft.streaming.HistogramDrift.bands(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("parquet").option("path", s"$dir/out")
@@ -1426,7 +1426,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     // parquet sink + checkpoint restart in one drill: parity at the
     // end AND state survival across the restart
     val mem = MemoryStream[(String, Long)]
-    def start() = graft.streaming.StreamingDriftJs.drift(
+    def start() = graft.streaming.HistogramDrift.js(
         mem.toDS().toDF("event_type", "cents"), early)
       .writeStream.outputMode(OutputMode.Append())
       .format("parquet").option("path", s"$dir/out")

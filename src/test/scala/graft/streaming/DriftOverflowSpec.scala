@@ -18,27 +18,27 @@ class DriftOverflowSpec extends AnyFunSuite {
   // early mass at cents {100, 200}, late mass at {300, 400}: disjoint,
   // late strictly above — the closed-form corner of every drift stat
   private val side =
-    StreamingDriftKs.build(Map("t" -> Seq((100L, m), (200L, m))))("t")
+    HistogramDrift.build(Map("t" -> Seq((100L, m), (200L, m))))("t")
   private val late = Map(300L -> m, 400L -> m)
   private val ne = 2 * m
   private val nl = 2 * m
 
   test("KS sup walk above the old boundary: disjoint supports give " +
       "mx = ne*nl exactly and scaleBp = 10000 bp (mx*10^4 = 1e20 > 2^63)") {
-    val (mx, at) = StreamingDriftKs.sup(side, late, nl)
+    val (mx, at) = HistogramDrift.sup(side, late, nl)
     assert(mx == BigInt(ne) * nl, s"mx $mx")
     assert(at == 200L, s"first-max tiebreak at the early top: $at")
     assert(mx * 10000 > BigInt(Long.MaxValue), "straddle too small")
-    assert(StreamingDriftKs.scaleBp(mx, ne, nl) == 10000L)
+    assert(HistogramDrift.scaleBp(mx, ne, nl) == 10000L)
   }
 
   test("KS sup walk below the old boundary (control): same shape at " +
       "1e6 per side still reads 10000 bp") {
     val small =
-      StreamingDriftKs.build(Map("t" -> Seq((100L, 500000L), (200L, 500000L))))("t")
-    val (mx, _) = StreamingDriftKs.sup(small, Map(300L -> 1000000L), 1000000L)
+      HistogramDrift.build(Map("t" -> Seq((100L, 500000L), (200L, 500000L))))("t")
+    val (mx, _) = HistogramDrift.sup(small, Map(300L -> 1000000L), 1000000L)
     assert(mx == BigInt(1000000L) * 1000000L)
-    assert(StreamingDriftKs.scaleBp(mx, 1000000L, 1000000L) == 10000L)
+    assert(HistogramDrift.scaleBp(mx, 1000000L, 1000000L) == 10000L)
   }
 
   test("EMD walk above the old boundary: the disjoint-support W1 is the " +
@@ -53,7 +53,7 @@ class DriftOverflowSpec extends AnyFunSuite {
       if (v <= 200L) cumE += m else cumL += m
       tot += (BigInt(cumE) * nl - BigInt(cumL) * ne).abs * (nxt - v)
     }
-    val got = StreamingDriftEmd.w1(side, late, nl)
+    val got = HistogramDrift.w1(side, late, nl)
     assert(got == tot, s"$got vs replay $tot")
     // mean |X−Y| for X∈{100,200}, Y∈{300,400} uniform = 200 cents
     val d = BigInt(ne) * nl
@@ -78,7 +78,7 @@ class DriftOverflowSpec extends AnyFunSuite {
       BigDecimal(num / den)
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
-    assert(StreamingDriftCvm.stat(side, late, nl) == wantCvm)
+    assert(HistogramDrift.cvmStat(side, late, nl) == wantCvm)
 
     // AD: replay the twin's own sum with BigInt cross terms — the pin
     // is that the walk's value survives counts where Long D wrapped
@@ -93,7 +93,7 @@ class DriftOverflowSpec extends AnyFunSuite {
     }
     val wantAd = BigDecimal(sum)
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(StreamingDriftAd.stat(side, late, nl) == wantAd)
+    assert(HistogramDrift.adStat(side, late, nl) == wantAd)
     // and the old spelling really was past its envelope here
     assert(BigInt(ne) * nl > BigInt("920000000000000"), "straddle too small")
   }
