@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.LongAccumulator
 
 /** Live per-cohort retention decay — the 35th streaming twin,
   * incremental over x_cohort_halflife: as events arrive, each user's
@@ -20,14 +20,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * later emission ever needs a lookup), the
   * [[StreamingGrowthAccounting]] WeekSpan shape verbatim.
   *
-  * CONTRACT ENFORCEMENT: under per-user in-order delivery the week
-  * sequence is non-decreasing; an arrival with w < lastW may carry an
-  * uncounted mid-span (user, week) whose offset hit is then silently
-  * missing (two longs cannot tell), and an arrival before the user's
-  * true first week would have mis-seeded the cohort — both are the
-  * same below-water signature, counted in the accumulator
-  * [[emissions]] returns (zero ⇒ parity held; nonzero ⇒ void, loudly).
-  * w == lastW stays the benign same-week repeat.
+  * Runs under [[InOrderFold]]'s contract: an arrival with w < lastW
+  * may carry an uncounted mid-span (user, week) whose offset hit would
+  * then be missing (two longs cannot tell), and one before the user's
+  * true first week would have mis-seeded the cohort — both are
+  * rejected. w == lastW is the benign same-week repeat.
   *
   * Trust chain: the batch x_cohort_halflife is oracle-hash-matched, so
   * the parity spec's equality pins stream ≡ batch ≡ DuckDB across
@@ -39,38 +36,23 @@ object StreamingCohortHalflife {
   final case class CohortHit(cls: String, fw: Long, k: Long)
 
   /** events: (user_id, ts_ms, event_id) — ts as epoch millis. Returns
-    * the hit stream paired with its own in-order-contract accumulator
-    * (the [[StreamingGrowthAccounting.emissions]] pairing rule). */
-  def emissions(events: DataFrame)
-      : (Dataset[CohortHit], org.apache.spark.util.LongAccumulator) = {
+    * the hit stream paired with its in-order-contract accumulator. */
+  def emissions(events: DataFrame): (Dataset[CohortHit], LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.cohorthalflife.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_ms", "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[StreamingGrowthAccounting.WeekSpan, CohortHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[StreamingGrowthAccounting.WeekSpan]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[CohortHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ms, _) =>
-            val w = ms / 604800000L
-            if (st == null) {
-              out += CohortHit("cohort", w, 0L)
-              st = StreamingGrowthAccounting.WeekSpan(w, w)
-            } else if (w > st.lastW) {
-              out += CohortHit("offset", st.firstW, w - st.firstW)
-              st = st.copy(lastW = w)
-            } else if (w < st.lastW) {
-              oooAcc.add(1L) // reorder: surfaced, never silent
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    import StreamingGrowthAccounting.WeekSpan
+    InOrderFold[(Long, Long, Long), Long, WeekSpan, CohortHit](
+      events.select("user_id", "ts_ms", "event_id").as[(Long, Long, Long)],
+      "cohorthalflife", _._1, Ordering.by(r => (r._2, r._3))) {
+      case (_, st, (_, ms, _)) =>
+        val w = ms / 604800000L
+        st match {
+          case None => Some((WeekSpan(w, w), CohortHit("cohort", w, 0L) :: Nil))
+          case Some(p) if w > p.lastW =>
+            Some((p.copy(lastW = w),
+              CohortHit("offset", p.firstW, w - p.firstW) :: Nil))
+          case Some(p) => if (w < p.lastW) None else Some((p, Nil))
+        }
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.LongAccumulator
 
 /** Live view→purchase conversion lag — the 36th streaming twin,
   * incremental over x_conversion_lag: each user emits AT MOST ONE lag
@@ -25,9 +25,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State per user is three longs' worth (first-view ms, a done flag,
   * last seen ms); the fold reads only 'view'/'purchase' rows (the two
   * types the batch query reads — filtered inside, so the caller can
-  * hand it the raw event stream). In-order-contract violations
-  * (ms < lastMs) increment the accumulator [[emissions]] returns and
-  * fold nothing — surfaced, never silent.
+  * hand it the raw event stream). It runs under [[InOrderFold]]'s
+  * contract: an arrival with ms < lastMs is rejected.
   *
   * Trust chain: the batch x_conversion_lag is oracle-hash-matched, so
   * the parity spec's equality pins stream ≡ batch ≡ DuckDB across
@@ -41,42 +40,23 @@ object StreamingConversionLag {
   final case class LagHit(lag_ms: Long)
 
   /** events: (user_id, event_type, ts_ms, event_id). Returns the hit
-    * stream paired with its own in-order-contract accumulator (the
-    * [[StreamingGrowthAccounting.emissions]] pairing rule). */
-  def emissions(events: DataFrame)
-      : (Dataset[LagHit], org.apache.spark.util.LongAccumulator) = {
+    * stream paired with its in-order-contract accumulator. */
+  def emissions(events: DataFrame): (Dataset[LagHit], LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.conversionlag.outOfOrderArrivals")
-    val hits = events
-      .select("user_id", "event_type", "ts_ms", "event_id")
-      .where(col("event_type").isin("view", "purchase"))
-      .as[(Long, String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[ConvState, LagHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, String, Long, Long)],
-         state: GroupState[ConvState]) =>
-          var st = state.getOption.getOrElse(ConvState(-1L, false, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[LagHit]
-          rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, t, ms, _) =>
-            if (ms < st.lastMs) {
-              oooAcc.add(1L) // reorder: surfaced, never silent
-            } else {
-              if (t == "view" && st.viewMs < 0L)
-                st = st.copy(viewMs = ms)
-              else if (t == "purchase" && !st.done && st.viewMs >= 0L &&
-                  ms > st.viewMs) {
-                out += LagHit(ms - st.viewMs)
-                st = st.copy(done = true)
-              }
-              st = st.copy(lastMs = ms)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    InOrderFold[(Long, String, Long, Long), Long, ConvState, LagHit](
+      events.select("user_id", "event_type", "ts_ms", "event_id")
+        .where(col("event_type").isin("view", "purchase"))
+        .as[(Long, String, Long, Long)],
+      "conversionlag", _._1, Ordering.by(r => (r._3, r._4))) {
+      case (_, st, (_, t, ms, _)) =>
+        val p = st.getOrElse(ConvState(-1L, false, -1L))
+        if (ms < p.lastMs) None
+        else if (t == "view" && p.viewMs < 0L)
+          Some((ConvState(ms, p.done, ms), Nil))
+        else if (t == "purchase" && !p.done && p.viewMs >= 0L && ms > p.viewMs)
+          Some((ConvState(p.viewMs, true, ms), LagHit(ms - p.viewMs) :: Nil))
+        else Some((p.copy(lastMs = ms), Nil))
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.LongAccumulator
 
 /** Live growth accounting — the 25th streaming twin, incremental over
   * x_growth_accounting: as events arrive, each user's FIRST event in a
@@ -31,19 +31,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * timestamps are post-epoch; a pre-1970 stream would need floorDiv in
   * BOTH engines — the SCALING trunc rule).
   *
-  * CONTRACT ENFORCEMENT (ADVICE r15): under in-order delivery a
-  * user's week sequence is non-decreasing, so ANY arrival with
-  * w < lastW is a cross-micro-batch reorder — and if it carries the
-  * user's only activity for an uncounted mid-span week, the stream
-  * silently undercounts that (user, week) relative to batch. The
-  * two-long state cannot distinguish that case from a benign repeat
-  * of an already-counted week, so the fold counts EVERY w < lastW
-  * arrival in the accumulator [[emissions]] returns — a loud upper
-  * bound: zero means the parity guarantee held exactly; nonzero
-  * means the in-order contract was violated and parity is void until
-  * re-fed in order. (Task retries can inflate the count — it is a
-  * violation DETECTOR, not a metric; the parity claim needs only
-  * zero/nonzero.)
+  * Runs under [[InOrderFold]]'s contract: a user's week sequence is
+  * non-decreasing, so an arrival with w < lastW is a reorder — and if
+  * it carries the user's only activity for an uncounted mid-span week,
+  * folding it would undercount that (user, week). The two-long state
+  * cannot tell that case from a benign repeat of a counted week, so
+  * EVERY w < lastW arrival is rejected; w == lastW is the benign
+  * same-week repeat.
   *
   * Trust chain: the batch x_growth_accounting is oracle-hash-matched,
   * so the parity spec's equality pins stream ≡ batch ≡ DuckDB for the
@@ -58,49 +52,23 @@ object StreamingGrowthAccounting {
 
   final case class GrowthHit(cls: String, w: Long)
 
-  /** events: (user_id, ts_ms, event_id) — ts as epoch millis.
-    *
-    * Returns the hit stream PAIRED with its freshly-created
-    * in-order-contract accumulator (the detector the fold increments
-    * on every w < lastW arrival — the class doc's CONTRACT
-    * ENFORCEMENT paragraph). Paired-per-call, not a shared handle
-    * (ADVICE r16): a last-writer-wins global Option meant two
-    * concurrent streams in one JVM could read the OTHER query's
-    * zero/nonzero parity signal; here each caller owns exactly the
-    * accumulator its own fold writes. */
-  def emissions(events: DataFrame)
-      : (Dataset[GrowthHit], org.apache.spark.util.LongAccumulator) = {
+  /** events: (user_id, ts_ms, event_id) — ts as epoch millis. Returns
+    * the hit stream paired with its in-order-contract accumulator. */
+  def emissions(events: DataFrame): (Dataset[GrowthHit], LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.growth.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_ms", "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[WeekSpan, GrowthHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[WeekSpan]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[GrowthHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ms, _) =>
-            val w = ms / 604800000L
-            if (st == null) {
-              out += GrowthHit("new", w); st = WeekSpan(w, w)
-            } else if (w > st.lastW) {
-              out += GrowthHit(
-                if (st.lastW == w - 1) "retained" else "resurrected", w)
-              st = st.copy(lastW = w)
-            } else if (w < st.lastW) {
-              // in-order weeks are non-decreasing: this is a reorder
-              // across micro-batches — surfaced, never silent (ADVICE
-              // r15). w == lastW stays the benign same-week repeat.
-              oooAcc.add(1L)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    InOrderFold[(Long, Long, Long), Long, WeekSpan, GrowthHit](
+      events.select("user_id", "ts_ms", "event_id").as[(Long, Long, Long)],
+      "growth", _._1, Ordering.by(r => (r._2, r._3))) {
+      case (_, st, (_, ms, _)) =>
+        val w = ms / 604800000L
+        st match {
+          case None => Some((WeekSpan(w, w), GrowthHit("new", w) :: Nil))
+          case Some(p) if w > p.lastW =>
+            Some((p.copy(lastW = w), GrowthHit(
+              if (p.lastW == w - 1) "retained" else "resurrected", w) :: Nil))
+          case Some(p) => if (w < p.lastW) None else Some((p, Nil))
+        }
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

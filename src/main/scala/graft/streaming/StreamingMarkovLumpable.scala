@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.LongAccumulator
 
 /** Live Kemeny–Snell lumpability — the 43rd streaming twin,
   * incremental over x_markov_lumpable: each user's arrivals extend
@@ -20,10 +20,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * LAST event type plus the (ts_us, event_id) order cursor, constant
   * bytes. The batch chain orders by (ts_us, event_id); an arrival
   * whose (us, id) sorts LEXICOGRAPHICALLY below the cursor would
-  * splice a pair the batch never forms, so the detector counts
-  * exactly that condition into the per-call accumulator (the
-  * [[StreamingConversionLag]] pairing rule — surfaced, never silent,
-  * equal-µs ties covered by the id tiebreak).
+  * splice a pair the batch never forms, so under [[InOrderFold]]'s
+  * contract exactly that arrival is rejected (equal-µs ties covered by
+  * the id tiebreak).
   *
   * At 100 TB: |users| × three-longs-and-a-string of sharded state,
   * one O(1) emission per arrival, and a K²-bounded read-side fold
@@ -38,33 +37,17 @@ object StreamingMarkovLumpable {
     * chain's own (µs, id) order key. Returns the
     * transition-hit stream paired with its in-order-contract
     * accumulator. */
-  def emissions(events: DataFrame)
-      : (Dataset[TransHit], org.apache.spark.util.LongAccumulator) = {
+  def emissions(events: DataFrame): (Dataset[TransHit], LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.markovlumpable.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_us", "event_id", "event_type")
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[LumpState, TransHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[LumpState]) =>
-          var st = state.getOption.getOrElse(LumpState(null, -1L, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[TransHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach {
-            case (_, us, id, t) =>
-              if (us < st.lastUs || (us == st.lastUs && id < st.lastId)) {
-                oooAcc.add(1L) // reorder: surfaced, never silent
-              } else {
-                if (st.lastType != null) out += TransHit(st.lastType, t)
-                st = LumpState(t, us, id)
-              }
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    InOrderFold[(Long, Long, Long, String), Long, LumpState, TransHit](
+      events.select("user_id", "ts_us", "event_id", "event_type")
+        .as[(Long, Long, Long, String)],
+      "markovlumpable", _._1, Ordering.by(r => (r._2, r._3))) {
+      case (_, st, (_, us, id, t)) =>
+        if (st.exists(p => us < p.lastUs || (us == p.lastUs && id < p.lastId))) None
+        else Some((LumpState(t, us, id),
+          st.flatMap(p => Option(p.lastType)).map(TransHit(_, t)).toList))
+    }
   }
 
   /** Fold a table of emitted transition hits into the batch

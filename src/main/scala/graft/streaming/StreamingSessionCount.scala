@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.LongAccumulator
 
 /** Live session-count ladder — the 32nd streaming twin, incremental
   * over x_session_gap_sweep: each arrival emits one existence hit
@@ -16,13 +16,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * exactly one.
   *
   * State per user is ONE long (the last event's epoch-ms) — the
-  * cheapest state in the twin family alongside [[StreamingSes]].
-  * CONTRACT: per-user in-order delivery; an arrival with ms < lastMs
-  * is a cross-batch reorder whose gap pair the batch (which sorts)
-  * would have cut differently — it increments the accumulator
-  * [[emissions]] returns
-  * and emits nothing (parity is void under violation, loudly, never
-  * silently skewed — the growth twin's rule).
+  * cheapest state in the twin family alongside [[DailyForecast.ses]].
+  * Runs under [[InOrderFold]]'s contract: an arrival with ms < lastMs
+  * is a reorder whose gap pair the batch (which sorts) would have cut
+  * differently, so it is rejected.
   *
   * At 100 TB: |users| longs of sharded state, one tiny hit per event,
   * calendar-free read-side rollup. */
@@ -33,35 +30,17 @@ object StreamingSessionCount {
   final case class SessHit(cls: String, gap_ms: Long)
 
   /** events: (user_id, ts_ms, event_id) — ts as epoch millis. Returns
-    * the hit stream paired with its own in-order-contract accumulator
-    * (the [[StreamingGrowthAccounting.emissions]] pairing rule —
-    * ADVICE r16: a global handle is last-writer-wins across
-    * concurrent streams in one JVM). */
-  def emissions(events: DataFrame)
-      : (Dataset[SessHit], org.apache.spark.util.LongAccumulator) = {
+    * the hit stream paired with its in-order-contract accumulator. */
+  def emissions(events: DataFrame): (Dataset[SessHit], LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.sessioncount.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_ms", "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[LastMs, SessHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[LastMs]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[SessHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ms, _) =>
-            if (st == null) {
-              out += SessHit("user", 0L); st = LastMs(ms)
-            } else if (ms >= st.ms) {
-              out += SessHit("gap", ms - st.ms); st = LastMs(ms)
-            } else oooAcc.add(1L) // reorder: surfaced, never silent
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    InOrderFold[(Long, Long, Long), Long, LastMs, SessHit](
+      events.select("user_id", "ts_ms", "event_id").as[(Long, Long, Long)],
+      "sessioncount", _._1, Ordering.by(r => (r._2, r._3))) {
+      case (_, None, (_, ms, _)) => Some((LastMs(ms), SessHit("user", 0L) :: Nil))
+      case (_, Some(p), (_, ms, _)) =>
+        if (ms < p.ms) None
+        else Some((LastMs(ms), SessHit("gap", ms - p.ms) :: Nil))
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.LongAccumulator
 
 /** Live DAU/WAU stickiness — the 28th streaming twin, incremental over
   * x_stickiness: as events arrive, each user's FIRST event on a new
@@ -21,13 +21,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * week-level weight. Week = day DIV 7, day = ms DIV 86400000 — the
   * batch query's own integer arithmetic on nonnegative epochs.
   *
-  * CONTRACT ENFORCEMENT (the [[StreamingGrowthAccounting]] rule): an
-  * arrival with w < wk — a cross-micro-batch reorder into a PRIOR
-  * week — may carry an uncounted (user, day) and silently undercount
-  * DAU/WAU relative to batch; the two-long state cannot tell. Every
-  * such arrival increments the accumulator [[emissions]] returns:
-  * zero ⇒ the parity
-  * guarantee held; nonzero ⇒ the contract was violated, loudly.
+  * Runs under [[InOrderFold]]'s contract: an arrival with w < wk — a
+  * reorder into a PRIOR week — may carry an uncounted (user, day) and
+  * silently undercount DAU/WAU relative to batch, so it is rejected.
   *
   * At 100 TB: state is |users| × two longs sharded by the state
   * store; emissions are ≤ one tiny row per (user, day); the read-side
@@ -39,43 +35,25 @@ object StreamingStickiness {
   final case class StickHit(cls: String, idx: Long)
 
   /** events: (user_id, ts_ms, event_id) — ts as epoch millis. Returns
-    * the hit stream paired with its own in-order-contract accumulator
-    * (the [[StreamingGrowthAccounting.emissions]] pairing rule —
-    * ADVICE r16: a global handle is last-writer-wins across
-    * concurrent streams in one JVM). */
-  def emissions(events: DataFrame)
-      : (Dataset[StickHit], org.apache.spark.util.LongAccumulator) = {
+    * the hit stream paired with its in-order-contract accumulator. */
+  def emissions(events: DataFrame): (Dataset[StickHit], LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.stickiness.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_ms", "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[WeekMask, StickHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[WeekMask]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[StickHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ms, _) =>
-            val day = ms / 86400000L
-            val w = day / 7L
-            val bit = 1L << (day % 7L)
-            if (st == null || w > st.wk) {
-              out += StickHit("dau", day)
-              out += StickHit("wau", w)
-              st = WeekMask(w, bit)
-            } else if (w == st.wk) {
-              if ((st.mask & bit) == 0L) {
-                out += StickHit("dau", day)
-                st = st.copy(mask = st.mask | bit)
-              }
-            } else oooAcc.add(1L) // w < wk: cross-batch reorder, surfaced
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    InOrderFold[(Long, Long, Long), Long, WeekMask, StickHit](
+      events.select("user_id", "ts_ms", "event_id").as[(Long, Long, Long)],
+      "stickiness", _._1, Ordering.by(r => (r._2, r._3))) {
+      case (_, st, (_, ms, _)) =>
+        val day = ms / 86400000L
+        val w = day / 7L
+        val bit = 1L << (day % 7L)
+        st match {
+          case Some(p) if w < p.wk => None
+          case Some(p) if w == p.wk =>
+            Some(if ((p.mask & bit) != 0L) (p, Nil)
+              else (p.copy(mask = p.mask | bit), StickHit("dau", day) :: Nil))
+          case _ =>
+            Some((WeekMask(w, bit), StickHit("dau", day) :: StickHit("wau", w) :: Nil))
+        }
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

@@ -27,8 +27,9 @@ import graft.SparkTestBase
   *  - x_token_burstiness VMR numerator (DECIMAL(38,0) raise at
   *    n·SS ≥ 10³⁴) — HERE, driving MiningOps' shared spelling.
   *  - weekday-anova twin Q_g multiplyExact / MW twin u2 addExact /
-  *    drift twin BigInt walks — StreamingWeekdayAnova & drift twin
-  *    specs (JVM-side, loud by multiplyExact/addExact).
+  *    drift twin BigInt walks — JVM-side, in StreamingWeekdayAnova.stats
+  *    and graft.streaming.HistogramDrift; DriftOverflowSpec drives the
+  *    drift walks (loud by multiplyExact/addExact or exact by BigInt).
   *  - x_session_gap_sweep n_events·10⁴, minhash shingle key guard,
   *    dedup fingerprint doc_id·2654435761 — single-multiply Long
   *    spellings whose ANSI raise is engine behavior on one literal

@@ -1831,7 +1831,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
 
     val mem = MemoryStream[(String, Long, Long)]
-    val (sesPts, sesAcc) = graft.streaming.StreamingSes.levels(
+    val (sesPts, sesAcc) = graft.streaming.DailyForecast.ses(
         mem.toDS().toDF("event_type", "day", "n"))
     val q = sesPts
       .writeStream.outputMode(OutputMode.Append())
@@ -1897,7 +1897,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
 
     // Holt (38th): exact integers, three-batch split, then a duplicate
     val memH = MemoryStream[(String, Long, Long)]
-    val (hPts, hAcc) = graft.streaming.StreamingHolt.levels(
+    val (hPts, hAcc) = graft.streaming.DailyForecast.holt(
       memH.toDS().toDF("event_type", "day", "n"))
     val qH = hPts.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("holt1").start()
@@ -1923,18 +1923,19 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
 
     // damped Holt (39th): same drill shape
     val memD = MemoryStream[(String, Long, Long)]
-    val (dPts, dAcc) = graft.streaming.StreamingHoltDamped.levels(
+    val (dPts, dAcc) = graft.streaming.DailyForecast.holtDamped(
       memD.toDS().toDF("event_type", "day", "n"))
     val qD = dPts.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("holtdamp1").start()
     try {
       memD.addData(rollup.take(third).toIndexedSeq); qD.processAllAvailable()
       memD.addData(rollup.drop(third).toIndexedSeq); qD.processAllAvailable()
-      val streamed = spark.table("holtdamp1")
+      def streamedD() = spark.table("holtdamp1")
         .collect().map(r => (r.getString(0),
           (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
            r.getLong(6), r.getLong(7), r.getLong(8))))
         .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).maxBy(_._1) }
+      val streamed = streamedD()
       val batch = graft.SparkEntry
         .queries("x_forecast_holt_damped")(spark, sf)
         .collect().map(r => r.getString(0) ->
@@ -1943,6 +1944,12 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
       assert(streamed.nonEmpty && streamed == batch,
         s"streamed damped != batch: $streamed vs $batch")
       assert(dAcc.value == 0L, "clean feed tripped the damped detector")
+      // a re-delivered closed (type, day) row trips the detector and
+      // leaves every type's last emission as it was
+      memD.addData(rollup.take(1).toIndexedSeq); qD.processAllAvailable()
+      assert(dAcc.value == 1L, "duplicate must trip the damped detector")
+      assert(streamedD() == streamed,
+        "a duplicate must not move the damped last emissions")
     } finally qD.stop()
 
     // HW-log (40th): double state — parquet sink + RESTART drill; the
@@ -1950,7 +1957,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     // round-4 equal the batch row
     val memL = MemoryStream[(String, Long, Long)]
     def startL() = {
-      val (pts, acc) = graft.streaming.StreamingHwLog.levels(
+      val (pts, acc) = graft.streaming.DailyForecast.hwLog(
         memL.toDS().toDF("event_type", "day", "n"))
       (pts.writeStream.outputMode(OutputMode.Append())
         .format("parquet").option("path", s"$dir/out")
@@ -1965,17 +1972,26 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     finally qL2.stop()
     assert(lAcc1.value + lAcc2.value == 0L,
       "clean feed tripped the HW-log detector")
-    val streamedL = spark.read.parquet(s"$dir/out")
+    def streamedHwLog() = spark.read.parquet(s"$dir/out")
       .collect().map(r => (r.getString(0),
         (r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5),
          r.getDouble(6), r.getDouble(7), r.getDouble(8))))
       .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).maxBy(_._1) }
+    val streamedL = streamedHwLog()
     val batchL = graft.SparkEntry.queries("x_forecast_hw_log")(spark, sf)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4),
           r.getDouble(5), r.getDouble(6), r.getDouble(7)))).toMap
     assert(streamedL.nonEmpty && streamedL == batchL,
       s"post-restart HW-log != batch: $streamedL vs $batchL")
+    // a re-delivered closed (type, day) row after a second restart trips
+    // the detector and leaves every type's last emission as it was
+    val (qL3, lAcc3) = startL()
+    try { memL.addData(rollup.take(1).toIndexedSeq); qL3.processAllAvailable() }
+    finally qL3.stop()
+    assert(lAcc3.value == 1L, "duplicate must trip the HW-log detector")
+    assert(streamedHwLog() == streamedL,
+      "a duplicate must not move the HW-log last emissions")
   }
 
   test("live weekday ANOVA: last emission per type EQUALS the batch " +
@@ -2065,7 +2081,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     // to the oracle-hash-matched batch row
     val mem = MemoryStream[(String, Long, Long)]
     def start() = {
-      val (pts, acc) = graft.streaming.StreamingHoltWinters.levels(
+      val (pts, acc) = graft.streaming.DailyForecast.holtWinters(
         mem.toDS().toDF("event_type", "day", "n"))
       (pts.writeStream.outputMode(OutputMode.Append())
         .format("parquet").option("path", s"$dir/out")
@@ -2098,7 +2114,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     // prior-day reorder must each trip the detector WITHOUT folding
     // (the state after the violations equals the state before them)
     val mem2 = MemoryStream[(String, Long, Long)]
-    val (pts2, accD) = graft.streaming.StreamingHoltWinters.levels(
+    val (pts2, accD) = graft.streaming.DailyForecast.holtWinters(
       mem2.toDS().toDF("event_type", "day", "n"))
     val q3 = pts2.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("hwooo1").start()
