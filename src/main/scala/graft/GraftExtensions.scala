@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 import graft.functions._
 
@@ -84,20 +85,23 @@ object GraftFunctions {
       info("winnowed_fingerprints", classOf[WinnowedFingerprintsExpr],
         "winnowed_fingerprints(str) - sorted distinct winnowed 32-gram poly hashes " +
           "(guaranteed hit on any >=39-byte shared span)"),
-      (exprs: Seq[Expression]) => WinnowedFingerprintsExpr(exprs.head)))
+      (exprs: Seq[Expression]) => WinnowedFingerprintsExpr(exprs.head)),
+    (FunctionIdentifier("bloom_agg"),
+      info("bloom_agg", classOf[BloomFilterAggregate],
+        "bloom_agg(hash, estimatedItems, numBits) - bloom-filter sketch aggregate of a long column"),
+      (exprs: Seq[Expression]) => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+        .toAggregateExpression()))
 
-  /** Imperative registration into an existing session (equivalent to the
-    * extension path; used by the query modules). */
-  def registerAll(spark: SparkSession): Unit = {
-    SimHash.register(spark)
-    VecDot.register(spark)
-    Shingles.register(spark)
-    PolyHash.register(spark)
-    InferSchemaAgg.register(spark)
-    Hyperplanes.register(spark)
-    TokenCounts.register(spark)
-    SampledFingerprints.register(spark)
-    Compress.register(spark)
-    Winnowing.register(spark)
+  /** Install every entry of [[all]] that this session's own registry
+    * lacks — the imperative twin of the extension path, called at query
+    * entry (`Q.run`) and by the entry points outside a query. Idempotent
+    * by reading the registry itself: a second call on the same session
+    * registers nothing, and a name the session already binds is left
+    * as it is. */
+  def install(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    all.foreach { case (id, info, builder) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+    }
   }
 }

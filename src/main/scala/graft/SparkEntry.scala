@@ -28,7 +28,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.3. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.run).toMap
+    registry.map(q => q.name -> (q.run _)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for approx/non-SQL-expressible ops

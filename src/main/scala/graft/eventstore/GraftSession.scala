@@ -28,7 +28,7 @@ object GraftSession {
   /** Register the log's read surface as `graft_events`, `graft_streams`
     * (per-stream catalog) and `graft_stream_names` (distinct streams). */
   def attach(spark: SparkSession, logDir: String): Unit = {
-    graft.GraftFunctions.registerAll(spark)
+    graft.GraftFunctions.install(spark)
     val log = Replay.open(spark, logDir)
     log.createOrReplaceTempView("graft_events")
     Replay.streamsCatalog(log).createOrReplaceTempView("graft_streams")
@@ -43,7 +43,7 @@ object GraftSession {
     * Lazy plans over the parquet — predicates and projections push into
     * the scan exactly like the DataFrame path. */
   def attachCorpus(spark: SparkSession, dir: String): Unit = {
-    graft.GraftFunctions.registerAll(spark)
+    graft.GraftFunctions.install(spark)
     spark.read.parquet(s"$dir/documents.parquet")
       .createOrReplaceTempView("graft_documents")
     spark.read.parquet(s"$dir/embeddings.parquet")

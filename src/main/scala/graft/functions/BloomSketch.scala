@@ -2,12 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SQL-callable wrappers over Spark's own bloom-filter expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the machinery
   * behind runtime row-level filtering, not exposed in the public
-  * FunctionRegistry). Registered here so a query can build an explicit
+  * FunctionRegistry). `bloom_agg` is an entry of graft.GraftFunctions;
+  * the built sketch is bound here, so a query can build an explicit
   * semi-join sketch:
   *
   *   bloom_agg(hash_col, estimatedItems, numBits) -> binary sketch
@@ -23,13 +23,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * EXACTLY the unfiltered answer.
   */
 object BloomSketch {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(), "scala_udf")
-  }
-
   /** Bind a BUILT sketch (the bytes `bloom_agg` returned) as a 1-arg
     * membership predicate `name(hash_col)`. `might_contain` requires
     * its sketch operand to be a constant or scalar subquery — a Literal

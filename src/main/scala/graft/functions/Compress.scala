@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -35,10 +34,6 @@ object Compress {
     d.end()
     total
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_len", exprs => DeflateLenExpr(exprs.head), "scala_udf")
 }
 
 case class DeflateLenExpr(child: Expression) extends UnaryExpression {

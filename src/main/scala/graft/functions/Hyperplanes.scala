@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,16 +73,6 @@ object Hyperplanes {
     }
     new GenericArrayData(keys)
   }
-
-  /** Register `hyperplane_sig(v, bitsPerBand, bands)` for SQL/expr use
-    * (band geometry must be literal ints — it defines the plane set). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_sig",
-      exprs => HyperplaneSig(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
 }
 
 case class HyperplaneSig(child: Expression, bitsPerBand: Int, bands: Int)

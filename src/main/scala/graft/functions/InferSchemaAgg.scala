@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -87,11 +86,4 @@ case class InferSchemaAgg(
     copy(child = c.head)
 
   override def prettyName: String = "infer_schema"
-}
-
-object InferSchemaAgg {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "infer_schema", exprs => InferSchemaAgg(exprs.head).toAggregateExpression(),
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,11 +75,6 @@ object SampledFingerprints {
     }
     new GenericArrayData(java.util.Arrays.copyOf(arr, w))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sampled_fingerprints",
-      exprs => SampledFingerprintsExpr(exprs.head), "scala_udf")
 }
 
 case class SampledFingerprintsExpr(child: Expression) extends UnaryExpression {

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.Arrays
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,16 +94,6 @@ object Shingles {
     }
     best
   }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashesExpr(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashSigExpr(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_top_count",
-      exprs => NgramTopCountExpr(exprs(0), exprs(1)), "scala_udf")
-  }
 }
 
 /** ngram_top_count(tokens array<string>, k int) → long: multiplicity of
@@ -189,10 +178,6 @@ case class MinHashSigExpr(left: Expression, right: Expression)
   * text, where bytes == character codes; the corpus is ASCII). */
 object PolyHash {
   def compute(s: UTF8String): Long = Hashing.poly31(s.getBytes)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHashExpr(exprs.head), "scala_udf")
 }
 
 case class PolyHashExpr(child: Expression) extends UnaryExpression {

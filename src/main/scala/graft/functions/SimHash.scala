@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -50,12 +50,6 @@ object SimHash {
   }
 
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  /** Register `simhash64` in the session's function registry so it is
-    * usable from SQL text and `expr(...)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
 }
 
 case class SimHash64(child: Expression) extends UnaryExpression {

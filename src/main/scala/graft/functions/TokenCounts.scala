@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -99,16 +98,6 @@ object TokenCounts {
       } else i += 1
     }
     n
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("ws_token_count",
-      exprs => WsTokenCountExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_token_count",
-      exprs => BpeTokenCountExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("stop_token_count",
-      exprs => StopTokenCountExpr(exprs.head), "scala_udf")
   }
 }
 

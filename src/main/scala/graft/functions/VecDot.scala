@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -32,11 +31,6 @@ object VecDot {
     }
     acc
   }
-
-  /** Register `vec_dot` for SQL / expr(...) use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDotExpr(exprs(0), exprs(1)), "scala_udf")
 }
 
 case class VecDotExpr(left: Expression, right: Expression) extends BinaryExpression {

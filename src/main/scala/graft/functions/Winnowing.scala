@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,11 +86,6 @@ object Winnowing {
     }
     new GenericArrayData(java.util.Arrays.copyOf(arr, wr))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnowed_fingerprints",
-      exprs => WinnowedFingerprintsExpr(exprs.head), "scala_udf")
 }
 
 case class WinnowedFingerprintsExpr(child: Expression) extends UnaryExpression {

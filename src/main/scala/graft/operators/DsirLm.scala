@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.eventstore.LocalFs
+import graft.functions.Tokenizer
 
 /** Persisted DSIR importance-weight estimator (Xie et al. 2023, "Data
   * Selection for Language Models via Importance Resampling") — the
@@ -36,13 +37,12 @@ object DsirLm {
     * mass, vsz = vocabulary size (the add-one denominator offsets). */
   final case class Lm(vocab: DataFrame, tr: Long, tt: Long, vsz: Long)
 
-  /** The query family's tokenizer, verbatim (PipelineOps x_dsir_weights
-    * / x_ngram_lm): lowercase, split on space runs, drop empties. */
+  /** The query family's [[Tokenizer]] (PipelineOps x_dsir_weights /
+    * x_ngram_lm), one token per row. */
   private def tokens(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select($"doc_id", $"source",
-        expr("filter(split(lower(text), ' +'), x -> x != '')").as("tk"))
+    docs.select($"doc_id", $"source", Tokenizer.col.as("tk"))
       .where(size($"tk") >= 1)
       .select($"doc_id", $"source", explode($"tk").as("token"))
   }

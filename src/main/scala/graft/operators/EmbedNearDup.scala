@@ -98,7 +98,7 @@ object EmbedNearDup {
       maxBucket: Option[Long] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.functions.Hyperplanes.register(spark)
+    graft.GraftFunctions.install(spark)
     // Both legs of the per-bucket self-join read the postings. Instead of
     // persist() (which leaks cached blocks into long-lived sessions and
     // couldn't hold a 100 TB posting set anyway), repartition on the join
@@ -145,7 +145,7 @@ object EmbedNearDup {
   def bruteForcePairs(emb: DataFrame, threshold: Double): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     val a = emb.select($"vec_id".as("a_id"), $"v".as("av"), $"nrm".as("a_nrm"))
     val b = emb.select($"vec_id".as("b_id"), $"v".as("bv"), $"nrm".as("b_nrm"))
     a.join(broadcast(b), $"a_id" < $"b_id")
@@ -180,8 +180,7 @@ object EmbedNearDup {
       maxBucket: Option[Long] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
-    val (r, b) = calibrate(threshold)
+    val (r, b) = calibrate(threshold) // candidatePairs installs the kernels
     val cand = candidatePairs(emb.select($"vec_id", $"v"),
       if (bitsPerBand > 0) bitsPerBand else r,
       if (bands > 0) bands else b,

@@ -44,7 +44,7 @@ object ExactAnn {
   /** Exact top-k index neighbours for every vector of a NEW batch:
     * (new_id, rk, index_id, sim_bp), ranked by exact cosine (ties by
     * index id), sim floored to basis points. Requires the vec_dot
-    * kernel registered on the session (graft.functions.VecDot). */
+    * kernel installed on the session (graft.GraftFunctions.install). */
   def probeAgainstIndex(batch: DataFrame, path: String, k: Int): DataFrame =
     probeAgainstIndex(batch, batch.sparkSession.read.parquet(path), k)
 

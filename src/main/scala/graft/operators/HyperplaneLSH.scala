@@ -28,7 +28,7 @@ object HyperplaneLSH {
     graft.functions.Hyperplanes.planes(dim, bits)
 
   /** Bucket id column from a double-array column (vec_dot must be
-    * registered; strict left-fold keeps signatures deterministic). */
+    * installed; strict left-fold keeps signatures deterministic). */
   def bucket(vCol: String, dim: Int, bits: Int = Bits): Column = {
     val ps = planes(dim, bits)
     (0 until bits).map { j =>

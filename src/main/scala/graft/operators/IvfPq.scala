@@ -147,7 +147,7 @@ object IvfPq {
     * (how many quantized candidates get exact scores), cost by
     * |batch|·rerank exact dots — independent of corpus size. Output
     * (new_id, rk, index_id, sim_bp) with EXACT sims, same contract as
-    * every ANN operator. Requires the vec_dot kernel registered. */
+    * every ANN operator. Requires the vec_dot kernel installed. */
   def probeAgainstIndexReranked(newEmb: DataFrame, path: String,
       vectors: DataFrame, k: Int, rerank: Int = 64,
       nProbe: Int = 2): DataFrame =

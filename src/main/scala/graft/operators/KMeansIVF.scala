@@ -45,7 +45,7 @@ object KMeansIVF {
       sampleMax: Int = 20000): Array[(Int, Array[Double])] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
 
     // (vec_id, raw vector, norm) sample — hash order ≈ uniform, and a
     // TakeOrdered top-N never shuffles the corpus. The norm is only
@@ -145,7 +145,7 @@ object KMeansIVF {
     val spark = emb.sparkSession
     import spark.implicits._
     // serving path may reuse saved centroids without ever calling train()
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     val indexed = assign(emb, cents)
 
     // Per probe: its nProbe nearest centroids via the kernel's top-n

@@ -45,7 +45,7 @@ object MinHashDedup {
       docs: DataFrame, idCol: String, tokensCol: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.Shingles.register(spark)
+    graft.GraftFunctions.install(spark)
     // No anti-inline barriers here: the shingle/signature kernels inline
     // at most 3× per row after projection collapse (filter + sh output +
     // sig input) — a LINEAR recompute of codegen kernels, strictly

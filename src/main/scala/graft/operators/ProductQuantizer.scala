@@ -181,7 +181,7 @@ object ProductQuantizer {
       k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     val probeVecs = broadcast(
       probes.toSeq.map { case (id, pv, pn) => (id, pv.toSeq, pn) }
         .toDF("p_id2", "pv", "p_nrm"))

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.SimHash
-
 /** SimHash near-duplicate detection: one 64-bit signature per document,
   * banded into 4×16-bit chunks. By pigeonhole, any pair with Hamming
   * distance ≤ 3 matches exactly in at least one chunk, so recall is 1.0
@@ -26,7 +24,7 @@ object SimHashDedup {
       maxHamming: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    SimHash.register(spark)
+    graft.GraftFunctions.install(spark)
 
     val sigs = docs
       .select(col(idCol).as("id"), col(tokensCol).as("toks"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.eventstore.LocalFs
+import graft.functions.Tokenizer
 
 /** Group X — corpus-mining analytics over the `documents` table: the
   * reporting layer a curation pipeline runs AFTER the gates (dedup,
@@ -56,8 +57,7 @@ object MiningOps extends QueryModule {
       val docs = t(spark, dir, "documents")
       val n = docs.groupBy($"lang").agg(count(lit(1)).as("n_docs"))
       val c = docs
-        .select($"doc_id", $"lang",
-          explode(expr("filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"doc_id", $"lang", explode(Tokenizer.col).as("token"))
         .groupBy($"lang", $"token")
         .agg(count(lit(1)).as("tf"), countDistinct($"doc_id").as("df"))
       val w = Window.partitionBy($"lang").orderBy($"score".desc, $"token")
@@ -137,9 +137,7 @@ object MiningOps extends QueryModule {
       val docs = t(spark, dir, "documents")
       val n = docs.agg(count(lit(1)).as("n_docs"))
       val pd = docs
-        .select($"doc_id",
-          explode(expr("filter(split(lower(text), ' +'), x -> x != '')"))
-            .as("token"))
+        .select($"doc_id", explode(Tokenizer.col).as("token"))
         .groupBy($"token", $"doc_id")
         .agg(count(lit(1)).as("c"))
       val agg = pd.groupBy($"token")
@@ -196,8 +194,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val tok = barrier(t(spark, dir, "documents")
-        .select($"doc_id",
-          explode(expr("filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"doc_id", explode(Tokenizer.col).as("token"))
         .distinct())
       val df = tok.groupBy($"token").agg(count(lit(1)).as("n"))
       // top-100 by (df desc, token): (n, token) is a total order with a
@@ -293,7 +290,6 @@ object MiningOps extends QueryModule {
             FROM d JOIN k USING (tkey) GROUP BY source ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       t(spark, dir, "documents")
         .select($"source", $"doc_id",
           expr("ws_token_count(text)").as("nt"),
@@ -417,8 +413,7 @@ object MiningOps extends QueryModule {
       import spark.implicits._
       val k = 64
       val tokens = t(spark, dir, "documents")
-        .select(explode(expr("filter(split(lower(text), ' +'), x -> x != '')"))
-          .as("token"))
+        .select(explode(Tokenizer.col).as("token"))
       // Pass 1: sketch + exact N from the same aggregation buffer.
       val (candMap, n) = graft.functions.FreqItems.sketch(tokens.as[String], k)
       val cand = candMap.keys.toSeq
@@ -480,8 +475,7 @@ object MiningOps extends QueryModule {
       // each round-robin exchange only added a stage round-trip, and
       // the second one re-shuffled the full bigram stream.
       val toks = t(spark, dir, "documents")
-        .select($"doc_id", $"source",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+        .select($"doc_id", $"source", Tokenizer.col.as("toks"))
         .where(size($"toks") >= 2)
       val bg = toks.select($"doc_id", $"source",
         explode(expr(
@@ -535,8 +529,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       t(spark, dir, "documents")
-        .select($"lang",
-          explode(expr("filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"lang", explode(Tokenizer.col).as("token"))
         .groupBy($"lang", $"token")
         .agg(count(lit(1)).as("n"))
         .withColumn("band", length(expr("bin(n)")).cast("long"))
@@ -565,8 +558,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       t(spark, dir, "documents")
-        .select($"source", explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"source", explode(Tokenizer.col).as("token"))
         .groupBy($"source")
         .agg(count(lit(1)).as("n_tokens"),
           count_distinct($"token").as("n_types"))
@@ -599,8 +591,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val v = t(spark, dir, "documents")
-        .select(explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("tok"))
+        .select(explode(Tokenizer.col).as("tok"))
         .groupBy($"tok").agg(count(lit(1)).as("n"))
       v.where(length($"tok") >= 2)
         .select(explode(expr(
@@ -697,8 +688,7 @@ object MiningOps extends QueryModule {
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     t(spark, dir, "documents")
-      .select($"doc_id", $"source",
-        explode(expr("filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+      .select($"doc_id", $"source", explode(Tokenizer.col).as("token"))
       .groupBy($"doc_id", $"source", $"token")
       .agg(count(lit(1)).as("cnt"))
       .groupBy($"doc_id", $"source")
@@ -784,8 +774,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val toks = barrier(t(spark, dir, "documents")
-        .select($"doc_id", $"source",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+        .select($"doc_id", $"source", Tokenizer.col.as("toks"))
         .where(size($"toks") >= 3))
       val grams = toks.select($"doc_id", $"source",
         explode(array_distinct(expr(
@@ -874,9 +863,7 @@ object MiningOps extends QueryModule {
       val path = QueryModule.cachedIndex(
           s"cappedpost:$dir", tableStamp(dir, "documents")) { pth =>
         val tok = barrier(t(spark, dir, "documents")
-          .select($"doc_id",
-            explode(expr("filter(split(lower(text), ' +'), x -> x != '')"))
-              .as("token"))
+          .select($"doc_id", explode(Tokenizer.col).as("token"))
           .distinct())
         val df = tok.groupBy($"token").agg(count(lit(1)).as("n"))
         val voc = df.orderBy($"n".desc, $"token").limit(100)
@@ -948,8 +935,7 @@ object MiningOps extends QueryModule {
     // it in barrier() stacked a second, redundant full exchange that
     // every graph query paid
     val tok = t(spark, dir, "documents")
-      .select($"doc_id",
-        explode(expr("filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+      .select($"doc_id", explode(Tokenizer.col).as("token"))
       .distinct()
     val df = tok.groupBy($"token").agg(count(lit(1)).as("n"))
     val voc = df.orderBy($"n".desc, $"token").limit(100)
@@ -1289,8 +1275,7 @@ object MiningOps extends QueryModule {
       import spark.implicits._
       val top = udaf(graft.functions.TopK.StrTopKAgg(1000))
       t(spark, dir, "documents")
-        .select($"lang", explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"lang", explode(Tokenizer.col).as("token"))
         .groupBy($"lang", $"token")
         .agg(count(lit(1)).as("n"))
         .groupBy($"lang")
@@ -1380,11 +1365,10 @@ object MiningOps extends QueryModule {
         .crossJoin(broadcast(mx))
         .select($"i", expr("(maxid * i) DIV 10").as("t_i"))
       val dc = docs.select($"doc_id", expr(
-        "CAST(size(filter(split(lower(text), ' +'), x -> x != '')) AS BIGINT)")
+        s"CAST(size(${Tokenizer.sql}) AS BIGINT)")
         .as("ntok"))
       val fs = docs
-        .select($"doc_id", explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"doc_id", explode(Tokenizer.col).as("token"))
         .groupBy($"token").agg(min($"doc_id").as("first_seen"))
       val nn = dc.crossJoin(broadcast(lad)).where($"doc_id" <= $"t_i")
         .groupBy($"i").agg(sum($"ntok").as("n_tokens"))
@@ -1487,13 +1471,11 @@ object MiningOps extends QueryModule {
       // sf0.1, rows hash-identical.
       val docs = t(spark, dir, "documents")
       val st = docs
-        .select($"source", explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"source", explode(Tokenizer.col).as("token"))
         .groupBy($"source", $"token")
         .agg(count(lit(1)).as("c_st"))
       val nn = docs
-        .select(expr("CAST(size(filter(split(lower(text), ' +')," +
-          " x -> x != '')) AS BIGINT)").as("ntok"))
+        .select(expr(s"CAST(size(${Tokenizer.sql}) AS BIGINT)").as("ntok"))
         .agg(sum($"ntok").as("n"))
       st.withColumn("c_t", sum($"c_st").over(Window.partitionBy($"token")))
         .withColumn("n_s", sum($"c_st").over(Window.partitionBy($"source")))
@@ -1534,8 +1516,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val st = t(spark, dir, "documents")
-        .select($"source", explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"source", explode(Tokenizer.col).as("token"))
         .groupBy($"source", $"token")
         .agg(count(lit(1)).as("c"))
       st.groupBy($"source")
@@ -1566,8 +1547,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val vocab = t(spark, dir, "documents")
-        .select(explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("word"))
+        .select(explode(Tokenizer.col).as("word"))
         .groupBy($"word").agg(count(lit(1)).as("n"))
       // only the merge table is needed; the returned training state is a
       // checkpoint in the distributed regime — free it deterministically
@@ -1599,8 +1579,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val lv = t(spark, dir, "documents")
-        .select($"lang", explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("word"))
+        .select($"lang", explode(Tokenizer.col).as("word"))
         .groupBy($"lang", $"word").agg(count(lit(1)).as("n"))
       val vocab = lv.groupBy($"word").agg(sum($"n").as("n"))
       // only the merge table is needed; the returned training state is a
@@ -1656,8 +1635,7 @@ object MiningOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val st = t(spark, dir, "documents")
-        .select($"source", explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"source", explode(Tokenizer.col).as("token"))
         .distinct()
       val sz = st.groupBy($"source").agg(count(lit(1)).as("n"))
       val pr = st.select($"source".as("a_src"), $"token")

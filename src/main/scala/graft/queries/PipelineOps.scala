@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.eventstore.LocalFs
+import graft.functions.Tokenizer
 
 /** Group X — training-data curation stages beyond dedup/quality basics:
   * benchmark decontamination, deterministic stratified sampling,
@@ -44,15 +45,13 @@ object PipelineOps extends QueryModule {
             GROUP BY c.doc_id, c.source ORDER BY doc_id"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.Shingles.register(spark)
       // No barrier (r19 batch E A/B: 0.61 s vs 0.80 s with it, rows
       // identical): the bench/cand filters push below the exchange
       // anyway — splitting the pipeline into two disjoint scans — so
       // the round-robin exchange only added a stage round-trip per
       // branch.
       val sh = t(spark, dir, "documents")
-        .select($"doc_id", $"source",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+        .select($"doc_id", $"source", Tokenizer.col.as("toks"))
         .where(size($"toks") >= 5)
         .select($"doc_id", $"source", expr("shingle_hashes(toks, 5)").as("sh"))
       val bench = sh.where($"source" === "src0")
@@ -96,12 +95,9 @@ object PipelineOps extends QueryModule {
             GROUP BY c.doc_id, c.source ORDER BY doc_id"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.Shingles.register(spark)
-      graft.functions.BloomSketch.register(spark)
       // no barrier — same A/B evidence as x_decontaminate above
       val sh = t(spark, dir, "documents")
-        .select($"doc_id", $"source",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+        .select($"doc_id", $"source", Tokenizer.col.as("toks"))
         .where(size($"toks") >= 5)
         .select($"doc_id", $"source", expr("shingle_hashes(toks, 5)").as("sh"))
       val bench = sh.where($"source" === "src0")
@@ -182,13 +178,11 @@ object PipelineOps extends QueryModule {
             FROM m ORDER BY doc_id"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.Shingles.register(spark)
       // no barrier (r19 batch E A/B: 0.49 s vs 0.63 s with it, rows
       // identical) — the per-row kernel runs in the scan stage and the
       // output sort is the only exchange left
       t(spark, dir, "documents")
-        .select($"doc_id",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+        .select($"doc_id", Tokenizer.col.as("toks"))
         .where(size($"toks") >= 2)
         .select($"doc_id",
           expr("ngram_top_count(toks, 2)").as("mx"),
@@ -241,7 +235,6 @@ object PipelineOps extends QueryModule {
             FROM f GROUP BY source ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val gate = {
         val nt = expr("ws_token_count(text)")
         val hits = expr("stop_token_count(text)")
@@ -292,7 +285,6 @@ object PipelineOps extends QueryModule {
             FROM agg, tot ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val agg = t(spark, dir, "documents")
         .select($"source", expr("bpe_token_count(text)").as("n_tok"))
         .groupBy($"source")
@@ -332,7 +324,6 @@ object PipelineOps extends QueryModule {
             FROM w, tot ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val agg = t(spark, dir, "documents")
         .select($"source", expr("bpe_token_count(text)").as("n_tok"))
         .groupBy($"source")
@@ -398,7 +389,7 @@ object PipelineOps extends QueryModule {
       val q = t(spark, dir, "documents")
         .where(length($"text") > 0)
         .select($"doc_id",
-          floor((least(size(expr("filter(split(lower(text), ' +'), x -> x != '')")),
+          floor((least(size(Tokenizer.col),
             lit(100)) * length(regexp_replace($"text", "[^A-Za-z]", "")) * 10000.0)
             / (lit(100.0) * length($"text"))).cast("long").as("quality_bp"))
       val wC = Window.partitionBy($"cluster_id")
@@ -459,8 +450,6 @@ object PipelineOps extends QueryModule {
             FROM gated GROUP BY source ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
-      graft.functions.Shingles.register(spark)
       // Two-phase dedup survivorship: digest keep table + hash join-back.
       // The join input drops `text` first, so no exchange carries the
       // document body (the shingle branch reads it pre-join).
@@ -477,7 +466,7 @@ object PipelineOps extends QueryModule {
           length($"text").as("nc")))
       val sh = base.where($"nt" >= 5)
         .select($"doc_id", $"source",
-          expr("shingle_hashes(filter(split(lower(text), ' +'), x -> x != ''), 5)")
+          expr(s"shingle_hashes(${Tokenizer.sql}, 5)")
             .as("sh"))
       val benchNg = sh.where($"source" === "src0")
         .select(explode($"sh").as("ng")).distinct()
@@ -525,7 +514,6 @@ object PipelineOps extends QueryModule {
             FROM s GROUP BY shard ORDER BY shard"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       t(spark, dir, "documents")
         .select(
           ((($"doc_id" % 1000003) * lit(2654435761L)) % 1000003 % 16).cast("long").as("shard"),
@@ -570,7 +558,6 @@ object PipelineOps extends QueryModule {
             FROM w GROUP BY shard ORDER BY shard"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val shard =
         ((($"doc_id" % 1000003) * lit(2654435761L)) % 1000003 % 16).cast("long")
       val w = Window.partitionBy($"shard").orderBy($"doc_id")
@@ -620,7 +607,6 @@ object PipelineOps extends QueryModule {
             FROM q GROUP BY source, tier ORDER BY source, tier"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val bucket = (($"doc_id" % 1000003) * lit(2654435761L)) % 1000003 % 100
       val qualityBp = floor((least(expr("ws_token_count(text)"), lit(100L))
         * length(regexp_replace($"text", "[^A-Za-z]", "")) * 10000.0)
@@ -741,7 +727,6 @@ object PipelineOps extends QueryModule {
             FROM s GROUP BY source, band ORDER BY source, band"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val band = when($"n_tok" < 16, 0).when($"n_tok" < 32, 1)
         .when($"n_tok" < 64, 2).when($"n_tok" < 128, 3)
         .when($"n_tok" < 256, 4).otherwise(5).cast("long")
@@ -783,7 +768,6 @@ object PipelineOps extends QueryModule {
             FROM c GROUP BY source ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val nChunks = when($"n_tok" === 0, 0L)
         .when($"n_tok" <= 256, 1L)
         .otherwise(lit(1L) + floor(($"n_tok" - 65) / 192.0).cast("long"))
@@ -828,7 +812,6 @@ object PipelineOps extends QueryModule {
             FROM agg, tot ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val agg = t(spark, dir, "documents")
         .select($"source", expr("bpe_token_count(text)").as("n_tok"))
         .groupBy($"source")
@@ -886,8 +869,7 @@ object PipelineOps extends QueryModule {
         .where(length($"text") > 0)
         .select(sha2($"text", 256).as("tkey"),
           least(lit(9),
-            expr("""CAST(floor((least(size(filter(split(lower(text), ' +'),
-                      x -> x != '')), 100)
+            expr(s"""CAST(floor((least(size(${Tokenizer.sql}), 100)
                   * length(regexp_replace(text, '[^A-Za-z]', ''))
                   * 10000.0) / (100.0 * length(text))) AS BIGINT)
                   DIV 1000"""))
@@ -1002,8 +984,7 @@ object PipelineOps extends QueryModule {
         count_distinct($"source").as("n_sources"),
         count_distinct($"lang").as("n_langs"))
       val tk = docs
-        .select(explode(expr(
-          "filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select(explode(Tokenizer.col).as("token"))
         .agg(count(lit(1)).as("n_tokens"),
           count_distinct($"token").as("vocab_size"))
       val le = docs.groupBy($"lang").agg(count(lit(1)).as("c"))
@@ -1089,8 +1070,7 @@ object PipelineOps extends QueryModule {
       spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val toks = t(spark, dir, "documents")
-      .select($"doc_id", $"source",
-        expr("filter(split(lower(text), ' +'), x -> x != '')").as("tk"))
+      .select($"doc_id", $"source", Tokenizer.col.as("tk"))
       .where(size($"tk") >= 1)
     val uni = toks.select($"doc_id", $"source", explode($"tk").as("token"))
     val dt = uni.groupBy($"doc_id", $"source", $"token")
@@ -1354,12 +1334,9 @@ object PipelineOps extends QueryModule {
             FROM r GROUP BY source ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
-      graft.functions.Shingles.register(spark)
       val f = barrier(t(spark, dir, "documents")
         .where(length($"text") > 0)
-        .select($"source",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"),
+        .select($"source", Tokenizer.col.as("toks"),
           expr("length(replace(text, ' ', ''))").as("ns_chars"),
           length(regexp_replace($"text", "[^A-Za-z]", "")).as("alpha"),
           length($"text").as("n_chars"),
@@ -1435,7 +1412,6 @@ object PipelineOps extends QueryModule {
             ORDER BY split"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val d = t(spark, dir, "documents")
         .select(
           when(expr("((doc_id % 1000003) * 2654435761) % 1000003 % 100") < 90, "train")

@@ -10,11 +10,20 @@ import org.apache.spark.sql.types.DecimalType
   * BY (incl. tiebreakers), money aggregates go through exact DECIMAL
   * arithmetic and are cast to DOUBLE only at the end, and free-floating
   * doubles are rounded to 4 decimals in BOTH engines.
+  *
+  * `run` is the query's entry: it installs graft's function table on the
+  * session (idempotent, [[graft.GraftFunctions.install]]) and then builds
+  * `body`, so every declared query is self-sufficient in any session.
   */
 final case class Q(
     name: String,
     oracle: Option[String],
-    run: (SparkSession, String) => DataFrame)
+    body: (SparkSession, String) => DataFrame) {
+  def run(spark: SparkSession, dir: String): DataFrame = {
+    graft.GraftFunctions.install(spark)
+    body(spark, dir)
+  }
+}
 
 trait QueryModule {
   def all: Seq[Q]

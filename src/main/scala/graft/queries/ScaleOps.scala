@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.eventstore.LocalFs
+import graft.functions.Tokenizer
 import graft.multimodal.{AudioCodec, FrameContainer, ImageCodec, MediaPipeline, MediaRow}
 import graft.operators.{MinHashDedup, SimHashDedup}
 
@@ -34,8 +35,7 @@ object ScaleOps extends QueryModule {
     * a Generate boundary since round 8). */
   private def docTokensRaw(spark: SparkSession, dir: String) =
     t(spark, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-        expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+      .select(col("doc_id"), col("lang"), Tokenizer.col.as("toks"))
 
   /** MinHash/LSH candidates, exact-Jaccard verified (same output contract
     * as x_dedup_ngram; one band-bucket shuffle instead of an O(n²) join). */
@@ -86,8 +86,7 @@ object ScaleOps extends QueryModule {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val toks = t(spark, dir, "documents")
-      .select($"doc_id",
-        expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+      .select($"doc_id", Tokenizer.col.as("toks"))
       .where(size($"toks") >= minToks)
     val pos = toks.select($"doc_id",
       posexplode($"toks").as(Seq("p0", "tok")))
@@ -1180,7 +1179,6 @@ object ScaleOps extends QueryModule {
             WHERE rk <= 3 ORDER BY p_id, rk"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       // stored-payload discipline: uniform 8×8 thumbnails written once
       // per (JVM, generation); the query measures decode → embed → ANN
       val path = QueryModule.cachedIndex(
@@ -1358,7 +1356,6 @@ object ScaleOps extends QueryModule {
     "x_compress_ratio",
     None,
     (spark, dir) => {
-      graft.functions.Compress.register(spark)
       import spark.implicits._
       t(spark, dir, "documents")
         .where(length($"text") > 0)
@@ -1403,13 +1400,11 @@ object ScaleOps extends QueryModule {
             FROM df GROUP BY 1 ORDER BY band"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.Shingles.register(spark)
       // no barrier (r19 batch E A/B: 0.44 s vs 0.76 s with it, rows
       // identical) — single gram-keyed aggregate consumer; the partial
       // combine runs in the scan stage either way
       val toks = t(spark, dir, "documents")
-        .select($"doc_id",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+        .select($"doc_id", Tokenizer.col.as("toks"))
         .where(size($"toks") >= 3)
       toks
         .select($"doc_id", explode(expr("shingle_hashes(toks, 3)")).as("sh"))

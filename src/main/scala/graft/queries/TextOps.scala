@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.eventstore.LocalFs
+import graft.functions.Tokenizer
 
 /** Group X — large-scale training-data text pipeline operators over the
   * `documents` table: dedup (exact + n-gram Jaccard), tokenization/top-k
@@ -147,10 +148,8 @@ object TextOps extends QueryModule {
   /** The live posting-join chain behind [[ngramPairs]]' artifact. */
   private def ngramPairsBuild(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    graft.functions.Shingles.register(spark)
     val toks = barrier(t(spark, dir, "documents")
-      .select($"doc_id", $"lang",
-        expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+      .select($"doc_id", $"lang", Tokenizer.col.as("toks"))
       .where(size($"toks") >= 3))
     // shingle hashing via the codegen kernel (HOF shingling drops the
     // projection to interpreted eval); hashes are engine-internal — the
@@ -229,8 +228,7 @@ object TextOps extends QueryModule {
       import spark.implicits._
       val w = Window.partitionBy($"lang").orderBy($"n".desc, $"token")
       t(spark, dir, "documents")
-        .select($"lang",
-          explode(expr("filter(split(lower(text), ' +'), x -> x != '')")).as("token"))
+        .select($"lang", explode(Tokenizer.col).as("token"))
         .groupBy($"lang", $"token")
         .agg(count(lit(1)).as("n"))
         .withColumn("rk", row_number().over(w).cast("long"))
@@ -260,7 +258,6 @@ object TextOps extends QueryModule {
       // array, no HOFs — the whole query is one codegen projection.
       // Scalar aliases (nt/hits) are cheap to re-evaluate if inlined, so
       // no barrier needed either.
-      graft.functions.TokenCounts.register(spark)
       t(spark, dir, "documents")
         .select($"doc_id", $"lang",
           expr("ws_token_count(text)").as("nt"),
@@ -292,7 +289,7 @@ object TextOps extends QueryModule {
       t(spark, dir, "documents")
         .where(length($"text") > 0)
         .select($"doc_id",
-          size(expr("filter(split(lower(text), ' +'), x -> x != '')")).as("n_toks_i"),
+          size(Tokenizer.col).as("n_toks_i"),
           length(regexp_replace($"text", "[^A-Za-z]", "")).as("alpha_chars"),
           length($"text").as("n_chars"))
         .select($"doc_id", $"n_toks_i".cast("long").as("n_toks"),
@@ -318,7 +315,6 @@ object TextOps extends QueryModule {
             FROM documents ORDER BY doc_id"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       t(spark, dir, "documents")
         .select($"doc_id",
           expr("ws_token_count(text)").as("ws_tokens"),
@@ -339,7 +335,6 @@ object TextOps extends QueryModule {
             FROM documents WHERE length(text) > 0 ORDER BY doc_id"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.PolyHash.register(spark)
       // codegen kernel over UTF-8 bytes == the oracle's per-character
       // fold for this ASCII corpus (HOF fold would run interpreted)
       t(spark, dir, "documents")
@@ -492,7 +487,6 @@ object TextOps extends QueryModule {
   /** The live posting-join chain behind [[winnowPairs]]' artifact. */
   private def winnowPairsBuild(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    graft.functions.Winnowing.register(spark)
     val post = barrier(t(spark, dir, "documents")
       .select($"doc_id", explode(expr("winnowed_fingerprints(text)")).as("fp")))
       .repartition($"fp")
@@ -532,7 +526,6 @@ object TextOps extends QueryModule {
             FROM f GROUP BY lang ORDER BY lang"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       t(spark, dir, "documents")
         .select($"lang", length($"text").as("n_chars"),
           expr("ws_token_count(text)").as("ws"),
@@ -635,7 +628,7 @@ object TextOps extends QueryModule {
     * now lives). */
   private[graft] def sampledPairsBuild(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    graft.functions.SampledFingerprints.register(spark)
+    graft.GraftFunctions.install(spark) // reached outside a query too
     // postings repartitioned on the join key: the boilerplate-df
     // window and both self-join legs all read ONE exchange
     val post = barrier(t(spark, dir, "documents")
@@ -733,7 +726,6 @@ object TextOps extends QueryModule {
             FROM g ORDER BY lang, pred_lang"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val wL = Window.partitionBy($"lang")
       t(spark, dir, "documents")
         .select($"lang",
@@ -806,9 +798,7 @@ object TextOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val st = t(spark, dir, "documents")
-        .select($"lang",
-          explode(expr("filter(split(lower(text), ' +'), x -> x != '')"))
-            .as("token"))
+        .select($"lang", explode(Tokenizer.col).as("token"))
         .groupBy($"lang", $"token")
         .agg(count(lit(1)).as("c"))
       val nl = st.groupBy($"lang").agg(sum($"c").as("n"))
@@ -870,8 +860,7 @@ object TextOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       t(spark, dir, "documents")
-        .select($"doc_id", $"source",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+        .select($"doc_id", $"source", Tokenizer.col.as("toks"))
         .where(size($"toks") >= 3)
         .select($"doc_id", $"source",
           expr("concat(toks[0], ' ', toks[1], ' ', toks[2])").as("prefix"))
@@ -910,7 +899,7 @@ object TextOps extends QueryModule {
     val path = QueryModule.cachedIndex(
         s"bigramlm:$dir", tableStamp(dir, "documents")) { p =>
       val toks = t(spark, dir, "documents")
-        .select(expr("filter(split(lower(text), ' +'), x -> x != '')").as("tk"))
+        .select(Tokenizer.col.as("tk"))
       LocalFs.write(toks.where(size($"tk") >= 2)
         .select(explode(expr(
           "transform(sequence(0, size(tk) - 2), i -> concat(tk[i], ' ', tk[i + 1]))"))
@@ -945,8 +934,7 @@ object TextOps extends QueryModule {
     val path = QueryModule.cachedIndex(
         s"docnll:$dir", tableStamp(dir, "documents")) { p =>
       val toks = t(spark, dir, "documents")
-        .select($"doc_id", $"source",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("tk"))
+        .select($"doc_id", $"source", Tokenizer.col.as("tk"))
       val bg = toks.where(size($"tk") >= 2)
         .select($"doc_id", $"source", explode(expr(
           "transform(sequence(0, size(tk) - 2), i -> concat(tk[i], ' ', tk[i + 1]))"))
@@ -1150,8 +1138,7 @@ object TextOps extends QueryModule {
       // old group-by-(doc_id, source) plan collapsed them. Asserted once
       // per testdata generation by DataInvariantSpec.
       val contrib = t(spark, dir, "documents")
-        .select($"doc_id", expr(
-          "filter(split(lower(text), ' +'), x -> x != '')").as("tk"))
+        .select($"doc_id", Tokenizer.col.as("tk"))
         .select($"doc_id", size($"tk").cast("long").as("n_tok"),
           explode($"tk").as("token"))
         .groupBy($"token")
@@ -1270,8 +1257,7 @@ object TextOps extends QueryModule {
       val path = QueryModule.cachedIndex(
           s"dupspans:$dir", tableStamp(dir, "documents")) { pth =>
         val d = t(spark, dir, "documents")
-          .select($"doc_id", $"source",
-            expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+          .select($"doc_id", $"source", Tokenizer.col.as("toks"))
         LocalFs.write(d.groupBy($"source")
           .agg(sum(size($"toks")).cast("long").as("total_tokens")))
           .parquet(s"$pth/tot")
@@ -1344,7 +1330,6 @@ object TextOps extends QueryModule {
             FROM doc GROUP BY source ORDER BY source"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.Shingles.register(spark)
       // r19 (§2.3/§2.4, the x_novelty recipe): ONE heavy gram pass and
       // NO df join-back. The pre-r19 plan ran tokenize+shingle+explode
       // TWICE (once to build the df table, once as the join probe —
@@ -1368,7 +1353,7 @@ object TextOps extends QueryModule {
       // has the parallelism.
       val uniq = t(spark, dir, "documents")
         .select($"doc_id",
-          expr("shingle_hashes(filter(split(lower(text), ' +'), x -> x != ''), 3)")
+          expr(s"shingle_hashes(${Tokenizer.sql}, 3)")
             .as("sh"))
         .select($"doc_id", size($"sh").cast("long").as("n_grams"),
           explode($"sh").as("gram"))
@@ -1463,8 +1448,7 @@ object TextOps extends QueryModule {
         .where(length($"text") > 0)
         .select($"doc_id".as("b_doc"),
           least(lit(9),
-            expr("""CAST(floor((least(size(filter(split(lower(text), ' +'),
-                      x -> x != '')), 100)
+            expr(s"""CAST(floor((least(size(${Tokenizer.sql}), 100)
                   * length(regexp_replace(text, '[^A-Za-z]', ''))
                   * 10000.0) / (100.0 * length(text))) AS BIGINT)
                   DIV 1000"""))
@@ -1538,10 +1522,8 @@ object TextOps extends QueryModule {
     import spark.implicits._
     val path = QueryModule.cachedIndex(
         s"jacpairs:$dir", tableStamp(dir, "documents")) { pth =>
-      graft.functions.Shingles.register(spark)
       val toks = barrier(t(spark, dir, "documents")
-        .select($"doc_id", $"lang",
-          expr("filter(split(lower(text), ' +'), x -> x != '')").as("toks"))
+        .select($"doc_id", $"lang", Tokenizer.col.as("toks"))
         .where(size($"toks") >= 3))
       val sh = barrier(toks
         .select($"doc_id", $"lang", expr("shingle_hashes(toks, 3)").as("sh"))

@@ -78,7 +78,6 @@ object VectorOps extends QueryModule {
     * L2 norm (one pass, reused across every pair). */
   private def emb(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     // barrier so the float→double transform is materialized once per row
     // instead of being inlined into every pair's dot product
     barrier(t(spark, dir, "embeddings")
@@ -334,7 +333,6 @@ object VectorOps extends QueryModule {
              WHERE rk <= 5 ORDER BY p_id, rk"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.TokenCounts.register(spark)
       val e = emb(spark, dir)
       val p = broadcast(e.where($"vec_id" < 5)
         .select($"vec_id".as("p_id"), $"v".as("pv"), $"nrm".as("p_nrm")))
@@ -383,10 +381,6 @@ object VectorOps extends QueryModule {
              FROM w WHERE vr = 1 ORDER BY p_id"""),
     (spark, dir) => {
       import spark.implicits._
-      // register the (stateless) dot kernel: this query builds its own
-      // projection rather than emb(), so it must not depend on another
-      // query having registered vec_dot on the shared session first
-      graft.functions.VecDot.register(spark)
       val e = barrier(t(spark, dir, "embeddings")
         .select($"vec_id", $"label",
           expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v")))
@@ -463,7 +457,6 @@ object VectorOps extends QueryModule {
              FROM s GROUP BY label ORDER BY label"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val e = barrier(t(spark, dir, "embeddings")
         .select($"vec_id", $"label",
           expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v")))
@@ -514,7 +507,6 @@ object VectorOps extends QueryModule {
              FROM mj WHERE lr = 1 ORDER BY c_id"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val e = barrier(t(spark, dir, "embeddings")
         .select($"vec_id", $"label",
           expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v")))
@@ -557,7 +549,6 @@ object VectorOps extends QueryModule {
              FROM m GROUP BY label ORDER BY label"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val e = barrier(t(spark, dir, "embeddings")
         .select($"vec_id", $"label",
           expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v")))
@@ -616,7 +607,6 @@ object VectorOps extends QueryModule {
              GROUP BY r.p_id ORDER BY p_id"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val e = barrier(t(spark, dir, "embeddings")
         .select($"vec_id",
           expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v")))
@@ -896,7 +886,6 @@ object VectorOps extends QueryModule {
       val e = t(spark, dir, "embeddings")
         .select($"vec_id", $"label",
           expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v"))
-      graft.functions.VecDot.register(spark)
       val n = e.groupBy($"label")
         .agg(count(lit(1)).as("n_vecs"),
           round(avg(sqrt(dotCol("v", "v"))), 4).as("mean_norm"))
@@ -1277,7 +1266,7 @@ object VectorOps extends QueryModule {
     * float-training loop deterministic at all. */
   private def kmQuantized(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark) // root of the trained-model entry points
     barrier(t(spark, dir, "embeddings").select($"vec_id",
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 100.0) AS DOUBLE))")
         .as("qd")))
@@ -1437,7 +1426,6 @@ object VectorOps extends QueryModule {
             ORDER BY cid"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val cents = kmeansArithCents(spark, dir)
       val roll = kmQuantized(spark, dir)
         .withColumn("cid", kmeansCidCol(cents))
@@ -1608,7 +1596,6 @@ object VectorOps extends QueryModule {
             ORDER BY m, code"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val cbs = pqArithCodebooks(spark, dir)
       val withScores = kmQuantized(spark, dir).select($"vec_id" +:
         (0 until 4).map(m => pqScore(m, cbs(m)).as(s"sc$m")): _*)
@@ -1651,7 +1638,6 @@ object VectorOps extends QueryModule {
       : (Array[Long], Array[Long]) =
     QueryModule.cachedLocal(s"pcaarith:$dir", tableStamp(dir, "embeddings")) {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val base = kmQuantized(spark, dir)
       val absMax = expr((0 until 64).map(d => s"abs(qd[$d])")
         .mkString("greatest(", ", ", ")"))
@@ -1781,7 +1767,6 @@ object VectorOps extends QueryModule {
             ORDER BY dim"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val (m, v) = pcaArithState(spark, dir)
       val pCols = (0 until 64).map(d =>
         sum(expr(s"c[$d] * u")).cast("long").as(s"p$d"))
@@ -1825,7 +1810,6 @@ object VectorOps extends QueryModule {
             FROM top WHERE rk <= 10 ORDER BY rk"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val (m, v) = pcaArithState(spark, dir)
       val top = kmQuantized(spark, dir)
         .select($"vec_id",
@@ -1895,7 +1879,6 @@ object VectorOps extends QueryModule {
       : (Array[Long], Array[Long], Array[Long]) =
     QueryModule.cachedLocal(s"pca2arith:$dir", tableStamp(dir, "embeddings")) {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val (m, v) = pcaArithState(spark, dir)
       val c2f = pcaDeflated(spark, dir, m, v)
       val absMax = expr((0 until 64).map(d => s"abs(c2[$d])")
@@ -1998,7 +1981,6 @@ object VectorOps extends QueryModule {
             ORDER BY dim"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val (m, v, v2) = pca2ArithState(spark, dir)
       val pCols = (0 until 64).map(d =>
         sum(expr(s"c2[$d] * u2")).cast("long").as(s"p$d"))
@@ -2058,7 +2040,6 @@ object VectorOps extends QueryModule {
       : (Array[Long], Array[Long], Array[Long], Array[Long]) =
     QueryModule.cachedLocal(s"pca3arith:$dir", tableStamp(dir, "embeddings")) {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val (m, v, v2) = pca2ArithState(spark, dir)
       val c3f = pcaDeflated3(spark, dir, m, v, v2)
       val absMax = expr((0 until 64).map(d => s"abs(c3[$d])")
@@ -2150,7 +2131,6 @@ object VectorOps extends QueryModule {
             ORDER BY dim"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val (m, v, v2, v3) = pca3ArithState(spark, dir)
       val pCols = (0 until 64).map(d =>
         sum(expr(s"c3[$d] * u3")).cast("long").as(s"p$d"))
@@ -2241,7 +2221,6 @@ object VectorOps extends QueryModule {
             FROM ex ORDER BY dir"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val (m, v, v2, v3) = pca3ArithState(spark, dir)
       def stage(dirNo: Long, frame: org.apache.spark.sql.DataFrame,
           fcol: String, w: Array[Long]): org.apache.spark.sql.DataFrame = {
@@ -2335,7 +2314,6 @@ object VectorOps extends QueryModule {
     QueryModule.cachedLocal(s"kcenter:$dir:$k",
         tableStamp(dir, "embeddings")) {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val base = kmQuantized(spark, dir)
       val seedRow = base.orderBy($"vec_id").limit(1)
         .select($"vec_id", $"qd").collect()
@@ -2494,7 +2472,6 @@ object VectorOps extends QueryModule {
             ORDER BY step"""),
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val sel = kcenterState(spark, dir, k)
       val covExpr = kcenterCoverExpr(sel.map(_._4))
       val cover = kmQuantized(spark, dir)

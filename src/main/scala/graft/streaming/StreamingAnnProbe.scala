@@ -59,7 +59,7 @@ object StreamingAnnProbe {
       exact: Boolean = false,
       nProbe: Int = 2): StreamingQuery = {
     val spark = embStream.sparkSession
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     val exactIdx = if (exact) Some(spark.read.parquet(indexPath)) else None
     val pqIdx = if (exact) None else Some(IvfPq.loadForServing(spark, indexPath))
     def sink(res: DataFrame, batchId: Long): Unit =

@@ -44,7 +44,7 @@ object StreamingKCenterCover {
       sel: Seq[Array[Long]],
       outDir: String,
       checkpoint: String): StreamingQuery = {
-    graft.functions.VecDot.register(embStream.sparkSession)
+    graft.GraftFunctions.install(embStream.sparkSession)
     embStream
       .select(
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 100.0) AS DOUBLE))")

@@ -42,7 +42,7 @@ object StreamingKMeansAssign {
       cents: Array[Array[Long]],
       outDir: String,
       checkpoint: String): StreamingQuery = {
-    graft.functions.VecDot.register(embStream.sparkSession)
+    graft.GraftFunctions.install(embStream.sparkSession)
     embStream
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 100.0) AS DOUBLE))")

@@ -65,7 +65,7 @@ object StreamingNearDup {
       bootstrapIndex: Option[String] = None): Dataset[Pair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.Shingles.register(spark)
+    graft.GraftFunctions.install(spark)
     val sh = docs
       .where(size($"toks") >= 3)
       .select($"doc_id", expr("shingle_hashes(toks, 3)").as("sh"))

@@ -41,7 +41,7 @@ object StreamingPcaProject {
       v: Array[Long],
       outDir: String,
       checkpoint: String): StreamingQuery = {
-    graft.functions.VecDot.register(embStream.sparkSession)
+    graft.GraftFunctions.install(embStream.sparkSession)
     // Sum in BIGINT, not double (ADVICE r13): the batch 2^53 envelope
     // (pcaArithState's require) covers the TRAINED corpus size n, not
     // stream volume — once cumulative arrivals exceed n the double sums

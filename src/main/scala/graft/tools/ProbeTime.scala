@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * min of N) — the fast iteration loop for single-query optimization
   * work, so a 10-minute full sweep isn't the only way to read one line.
   * NOT part of the graded bench contract (graft.Bench is); numbers here
-  * are for same-session paired comparisons only.
+  * are for same-session paired comparisons only. After its timed reps,
+  * each query's line also carries the driver-side split of one more
+  * warm build: construct (DataFrame construction), optimize, physical.
   *
   * sbt "runMain graft.tools.ProbeTime q1,q2[,...] [reps]"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
@@ -54,10 +56,22 @@ object ProbeTime {
         .foreach(_.unpersist(blocking = false))
       dt
     }
+    def splitOne(name: String): (Double, Double, Double) = {
+      val t0 = System.nanoTime()
+      val qe = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
+      val t1 = System.nanoTime()
+      qe.optimizedPlan
+      val t2 = System.nanoTime()
+      qe.executedPlan
+      val t3 = System.nanoTime()
+      ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
+    }
     names.foreach { n =>
       val warm = timeOne(n) // discarded: plan + codegen + artifact build
       val rs = Seq.fill(reps)(timeOne(n))
-      println(f"[probe] $n%-28s cold=$warm%.3f min=${rs.min}%.3f reps=${rs.map(r => f"$r%.3f").mkString(",")}")
+      val (construct, optimize, physical) = splitOne(n) // off the timed reps
+      println(f"[probe] $n%-28s cold=$warm%.3f min=${rs.min}%.3f reps=${rs.map(r => f"$r%.3f").mkString(",")}" +
+        f" construct=$construct%.3f optimize=$optimize%.3f physical=$physical%.3f")
     }
     spark.stop()
   }

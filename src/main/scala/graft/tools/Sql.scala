@@ -23,9 +23,7 @@ object Sql {
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)
     }
-    graft.functions.SimHash.register(spark)
-    graft.functions.Shingles.register(spark)
-    graft.functions.Compress.register(spark)
+    graft.GraftFunctions.install(spark)
     spark.sql(sql).show(100, truncate = false)
     spark.stop()
   }

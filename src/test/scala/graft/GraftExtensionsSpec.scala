@@ -29,7 +29,8 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
                   ngram_top_count(array('a','b','a','b','c'), 2) AS tc,
                   size(sampled_fingerprints(repeat('xy', 40))) AS sf,
                   deflate_len('aaaaaaaaaaaaaaaa') AS dl,
-                  size(winnowed_fingerprints(repeat('xy', 40))) AS wf""")
+                  size(winnowed_fingerprints(repeat('xy', 40))) AS wf,
+                  length((SELECT bloom_agg(id, 10L, 64L) FROM range(3))) AS ba""")
         .collect().head
       assert(row.getDouble(1) == 11.0)
       assert(row.getInt(2) == 2)
@@ -43,6 +44,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
       assert(row.getLong(9) > 0L) // deflate_len installed
       // winnowing guarantees ≥1 pick on any ≥39-byte window (80-byte doc)
       assert(row.getInt(10) >= 1) // winnowed_fingerprints installed
+      assert(row.getInt(11) > 0) // bloom_agg installed
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
@@ -51,9 +53,27 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a declared query installs the whole function table on a fresh session, once") {
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    val ids = GraftFunctions.all.map(_._1)
+    assert(!ids.exists(reg.functionExists), "a new session starts without graft kernels")
+    SparkEntry.queries("p_streams_catalog")(fresh, "/root/testdata/sf0.001")
+    assert(ids.filterNot(reg.functionExists).isEmpty, "q.run left kernels uninstalled")
+    // a name the session already binds is left as it is: rebind one
+    // entry, and a second install must change no builder reference
+    reg.createOrReplaceTempFunction("vec_dot", _ => org.apache.spark.sql.catalyst
+      .expressions.Literal(0.0), "scala_udf")
+    val before = ids.map(reg.lookupFunctionBuilder(_).get)
+    GraftFunctions.install(fresh)
+    ids.zip(before).foreach { case (id, b) =>
+      assert(reg.lookupFunctionBuilder(id).get eq b, s"install re-registered $id")
+    }
+  }
+
   test("sampled_fingerprints: rolling hash == straight poly31 fold, 0-mod-p, sorted distinct") {
     import graft.functions.{Hashing, SampledFingerprints}
-    graft.functions.SampledFingerprints.register(spark)
+    graft.GraftFunctions.install(spark)
     val docs = Seq(
       "short", // < K bytes -> empty
       "the quick brown fox jumps over the lazy dog again and again and again",
@@ -80,7 +100,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
   test("property: sampled_fingerprints matches the reference fold on random ASCII docs") {
     import org.scalacheck.{Gen, rng}
     import graft.functions.{Hashing, SampledFingerprints}
-    graft.functions.SampledFingerprints.register(spark)
+    graft.GraftFunctions.install(spark)
     def ref(s: String): Array[Long] = {
       val b = s.getBytes("UTF-8")
       (0 to b.length - SampledFingerprints.K).map(i =>

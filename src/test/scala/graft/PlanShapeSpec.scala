@@ -81,7 +81,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, BroadcastHashJoinExec}
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", sqrt(expr("vec_dot(v, v)")))
@@ -129,7 +129,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, BroadcastHashJoinExec}
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", sqrt(expr("vec_dot(v, v)")))

@@ -40,7 +40,7 @@ class SchemaInferSpec extends AnyFunSuite with SparkTestBase {
 
   test("infer_schema SQL aggregate (TypedImperativeAggregate) agrees with the typed path") {
     import spark.implicits._
-    graft.functions.InferSchemaAgg.register(spark)
+    graft.GraftFunctions.install(spark)
     val raw = rawEvents(120)
     val log = tmpDir("silog3")
     Ingest.append(Ingest.stamp(raw, T0), log)

@@ -32,7 +32,7 @@ class CompressSpec extends AnyFunSuite with SparkTestBase {
     // deterministic: same input, same byte count
     assert(len(template) == len(template) && len(noise) == len(noise))
     // SQL registration path
-    Compress.register(spark)
+    graft.GraftFunctions.install(spark)
     import spark.implicits._
     val viaSql = Seq(template).toDF("t")
       .selectExpr("deflate_len(t) AS n").head().getLong(0)

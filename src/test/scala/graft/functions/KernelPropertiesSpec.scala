@@ -29,7 +29,7 @@ class KernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
       Gen.listOfN(n, Gen.oneOf("aa", "bb", "cc", "dd", "ee")))
 
   test("property: vec_dot equals the strict left fold bit-for-bit; truncates to min length") {
-    VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     import spark.implicits._
     val vecGen = for {
       n <- Gen.chooseNum(0, 64)
@@ -57,7 +57,7 @@ class KernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("property: poly_hash equals the documented 31-poly mod 1e9+7 byte fold") {
-    PolyHash.register(spark)
+    graft.GraftFunctions.install(spark)
     import spark.implicits._
     def ref(s: String): Long =
       s.getBytes("UTF-8").foldLeft(0L)((acc, b) =>
@@ -72,7 +72,7 @@ class KernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("property: simhash64 is a sign-aggregate — permutation/duplication invariant, singleton = hash64") {
-    SimHash.register(spark)
+    graft.GraftFunctions.install(spark)
     import spark.implicits._
     val docs = samples(Gen.chooseNum(1, 30).flatMap(n => Gen.listOfN(n, tokenGen)), 40)
     def sh(tokss: Seq[Seq[String]]): Seq[Long] =
@@ -97,7 +97,7 @@ class KernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("property: shingle_hashes output is sorted-distinct (the merge-intersect contract)") {
-    Shingles.register(spark)
+    graft.GraftFunctions.install(spark)
     import spark.implicits._
     val docs = samples(smallVocabTokens, 60)
     val got = docs.toDF("toks").selectExpr("shingle_hashes(toks, 3) AS sh")
@@ -113,7 +113,7 @@ class KernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("property: minhash_sig — fixed length, duplicate-invariant, superset dominates elementwise") {
-    Shingles.register(spark)
+    graft.GraftFunctions.install(spark)
     import spark.implicits._
     val setGen = Gen.chooseNum(1, 50).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(Long.MinValue / 2, Long.MaxValue / 2)))
@@ -139,7 +139,7 @@ class KernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("property: ngram_top_count equals the exact most-frequent-gram multiplicity") {
-    Shingles.register(spark)
+    graft.GraftFunctions.install(spark)
     import spark.implicits._
     val docs = samples(smallVocabTokens, 60, seed = 23L)
     // independent reference: group exact string 3-grams (the 5-token
@@ -156,7 +156,7 @@ class KernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("property: token-count byte scanners equal their regex/split references") {
-    TokenCounts.register(spark)
+    graft.GraftFunctions.install(spark)
     import spark.implicits._
     // ASCII soup: letters, digits, punctuation, multi-space runs, and
     // mixed-case stop words woven in; plus the fixed edge cases

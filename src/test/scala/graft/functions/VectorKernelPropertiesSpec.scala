@@ -131,7 +131,7 @@ class VectorKernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
 
   test("property: hyperplane_sig band keys equal the public plane definition's sign bits") {
     import spark.implicits._
-    Hyperplanes.register(spark)
+    graft.GraftFunctions.install(spark)
     val dim = 8; val r = 4; val bands = 3
     val planes = Hyperplanes.planes(dim, r * bands)
     def ref(v: Seq[Double]): List[Int] =
@@ -152,7 +152,7 @@ class VectorKernelPropertiesSpec extends AnyFunSuite with SparkTestBase {
 
   test("property: bloom sketch has NO false negatives; false-positive rate stays small") {
     import spark.implicits._
-    BloomSketch.register(spark)
+    graft.GraftFunctions.install(spark)
     val members = samples(Gen.chooseNum(Long.MinValue, Long.MaxValue), 500, seed = 61L)
       .distinct
     val sketch = members.toDF("h")

@@ -17,7 +17,7 @@ class CacheHygieneSpec extends AnyFunSuite with SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
   private def emb = {
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .repartition(4)

@@ -15,7 +15,7 @@ class ExactAnnSpec extends AnyFunSuite with SparkTestBase {
 
   private def mk(rows: Seq[(Long, Seq[Double])]): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     rows.toDF("vec_id", "v")
       .withColumn("nrm", sqrt(expr("vec_dot(v, v)")))
   }

@@ -89,7 +89,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
 
   test("simhash expression: codegen path == kernel; identical token sets → distance 0") {
     import spark.implicits._
-    SimHash.register(spark)
+    graft.GraftFunctions.install(spark)
     val df = Seq(
       (1L, Seq("a", "b", "c")),
       (2L, Seq("a", "b", "c")),

@@ -17,7 +17,7 @@ class ShardWriterSpec extends AnyFunSuite with SparkTestBase {
 
   test("written shard layout equals the x_shard_assign audit row for row") {
     import spark.implicits._
-    graft.functions.TokenCounts.register(spark)
+    graft.GraftFunctions.install(spark)
     val out = tmpDir("shardaudit")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"source", $"text")

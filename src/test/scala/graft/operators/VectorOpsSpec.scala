@@ -13,7 +13,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
   private def embAt(dir: String) = {
-    VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .repartition(4)
@@ -297,7 +297,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkTestBase {
     // margin guard: if a plane-set or banding change ever drops the
     // min collision count to 1, recall is one unlucky band from breaking
     val e = embAt("/root/testdata/sf0.01")
-    graft.functions.Hyperplanes.register(spark)
+    graft.GraftFunctions.install(spark)
     val sigs = e.select(col("vec_id"), expr(
       s"hyperplane_sig(v, ${EmbedNearDup.BitsPerBand}, ${EmbedNearDup.Bands})").as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap

@@ -36,7 +36,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.TokenCounts.register(spark)
+    graft.GraftFunctions.install(spark)
 
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDS().toDF("doc_id", "text")
@@ -74,7 +74,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.Shingles.register(spark)
+    graft.GraftFunctions.install(spark)
 
     // static side: the (tiny) benchmark 3-gram hash set — broadcast per
     // micro-batch, exactly x_decontaminate's scale shape on a stream
@@ -114,7 +114,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.TokenCounts.register(spark)
+    graft.GraftFunctions.install(spark)
 
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDS().toDF("doc_id", "text").where(length($"text") > 0)
@@ -367,7 +367,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.TokenCounts.register(spark)
+    graft.GraftFunctions.install(spark)
     val sf = "/root/testdata/sf0.001"
 
     // the same (shard, n_tok) derivation as x_pack_sequences, computed
@@ -417,7 +417,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.TokenCounts.register(spark)
+    graft.GraftFunctions.install(spark)
     val sf = "/root/testdata/sf0.001"
     val shards = 16
 
@@ -1866,8 +1866,8 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
       assert(sesAcc.value == 0L,
         s"clean feed tripped the SES detector: ${sesAcc.value}")
       // r17: a re-delivered closed (type, day) row must trip the
-      // detector and fold nothing (the StreamingHoltWinters rule,
-      // applied to the older sibling)
+      // detector and fold nothing (the InOrderFold rule every daily
+      // fold shares)
       val before = spark.table("ses1").count()
       mem.addData(rollup.take(1).toIndexedSeq); q.processAllAvailable()
       assert(sesAcc.value == 1L,

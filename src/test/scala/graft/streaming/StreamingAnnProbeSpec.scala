@@ -14,7 +14,7 @@ import graft.operators.{ExactAnn, IvfPq}
 class StreamingAnnProbeSpec extends AnyFunSuite with SparkTestBase {
 
   private def embAll = {
-    graft.functions.VecDot.register(spark)
+    graft.GraftFunctions.install(spark)
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
