@@ -1,8 +1,25 @@
 package graft.eventstore
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.conf.{HadoopParquetConfiguration, ParquetConfiguration}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
+import org.apache.parquet.io.api.RecordMaterializer
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, GenericInternalRow, Literal}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalFrame
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Replay = reads over the event log (reference streams.clj:340-405).
   *
@@ -46,9 +63,59 @@ object Replay {
     limit.fold(scanned)(scanned.limit)
   }
 
-  /** Point lookup by (stream, order_id) (reference streams.clj:322). */
-  def pointGet(log: DataFrame, stream: String, orderId: Long): DataFrame =
-    log.where(col("stream_name") === stream && col("order_id") === orderId)
+  /** Point lookup by (stream, order_id) (reference streams.clj:322,
+    * `db/fetch`), read on the driver without a Spark job.
+    *
+    * `log` must be the parquet file relation [[open]] returns; anything
+    * else raises an IllegalArgumentException. The stream's files come from
+    * the relation's own cached file index under a `stream_name` partition
+    * filter, so the listing snapshot, the path escaping and the
+    * `event_date` partition values are the ones a scan of `log` would
+    * use, and a file appended after [[open]] stays unseen. Each file is
+    * read by parquet-mr with Spark's `ParquetReadSupport`, the session's
+    * Hadoop conf and SQL keys and the footer's rebase specs, with
+    * `order_id = orderId` pushed down to the row-group statistics, the
+    * dictionaries, the column index and each record. The matching rows,
+    * joined with their partition values, come back as a local relation:
+    * the same rows and schema as filtering `log`, and `collect()` launches
+    * no job.
+    *
+    * Cost model: one footer read per file of the stream, done serially on
+    * the driver, plus the pages whose statistics admit `orderId`; no job,
+    * task or broadcast. A stream compacted by [[compactStream]] is a few
+    * files; an uncompacted stream of thousands of append files costs
+    * thousands of serial footer reads (SCALING.md). */
+  def pointGet(log: DataFrame, stream: String, orderId: Long): DataFrame = {
+    val (rel, output) = log.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] => (h, l.output)
+        case r => throw new IllegalArgumentException(
+          s"pointGet reads the parquet log Replay.open returns, not a ${r.getClass.getSimpleName}")
+      }
+      case p => throw new IllegalArgumentException(
+        s"pointGet reads the parquet log Replay.open returns, not a ${p.nodeName} plan")
+    }
+    val parts = rel.partitionSchema.fieldNames
+    val streamAttr = output.find(a => a.name == "stream_name" && parts.contains(a.name))
+      .getOrElse(throw new IllegalArgumentException("pointGet: the log is not partitioned by stream_name"))
+    val spark = log.sparkSession
+    val sql = spark.sessionState.conf
+    val data = StructType(rel.dataSchema.filterNot(f => parts.contains(f.name)))
+    val conf = spark.sessionState.newHadoopConfWithOptions(rel.options)
+    PointRead.setSqlKeys(conf, sql, data)
+    val rebase = new ParquetOptions(rel.options, sql)
+    val streamIs = EqualTo(streamAttr,
+      Cast(Literal(stream), streamAttr.dataType, Option(sql.sessionLocalTimeZone)))
+    val rows = for {
+      dir <- rel.location.listFiles(Seq(streamIs), Nil)
+      file <- dir.files
+      row <- PointRead.matching(file.fileStatus, conf, orderId, rebase)
+    } yield new GenericInternalRow(output.map { a =>
+      val p = parts.indexOf(a.name)
+      if (p >= 0) dir.values.get(p, a.dataType) else row.get(data.fieldIndex(a.name), a.dataType)
+    }.toArray): InternalRow
+    LocalFrame(spark, output.map(_.newInstance()), rows)
+  }
 
   /** Boot catalog: distinct stream names (reference streams.clj:163-165).
     * With the partitioned layout this is metadata-only at scale. */
@@ -276,5 +343,70 @@ object Replay {
       }
     }
     healed
+  }
+}
+
+/** The driver-side parquet read behind [[Replay.pointGet]]. */
+private object PointRead {
+
+  /** The SQL keys Spark's parquet scan sets on its Hadoop conf for
+    * `ParquetReadSupport` and its schema converter. */
+  def setSqlKeys(conf: Configuration, sql: SQLConf, data: StructType): Unit = {
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, data.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key, sql.nestedSchemaPruningEnabled)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sql.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sql.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sql.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sql.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sql.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sql.parquetReaderRespectUnknownTypeAnnotation)
+  }
+
+  /** The rows of one file whose order_id is `orderId`, copied out of the
+    * reader's reused row. */
+  def matching(status: FileStatus, conf: Configuration, orderId: Long,
+      rebase: ParquetOptions): List[InternalRow] = {
+    val reader = new Builder(HadoopInputFile.fromStatus(status, conf),
+        new HadoopParquetConfiguration(conf), new FooterRebased(rebase))
+      .withFilter(FilterCompat.get(
+        FilterApi.eq(FilterApi.longColumn("order_id"), java.lang.Long.valueOf(orderId))))
+      .useStatsFilter(true).useDictionaryFilter(true).useColumnIndexFilter(true)
+      .useRecordFilter(true)
+      .build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map(_.copy()).toList
+    finally reader.close()
+  }
+
+  /** The `(InputFile, ParquetConfiguration)` builder reads with the given
+    * conf; the path builder creates a default `new Configuration()`, whose
+    * first lookup searches the whole classpath. */
+  private final class Builder(file: InputFile, conf: ParquetConfiguration,
+      readSupport: ReadSupport[InternalRow])
+      extends ParquetReader.Builder[InternalRow](file, conf) {
+    override protected def getReadSupport(): ReadSupport[InternalRow] = readSupport
+  }
+
+  /** Spark's `ParquetReadSupport` with the rebase specs that Spark's scan
+    * derives from the file's own footer, built once parquet-mr has read
+    * that footer, so each file's footer is read once. INT96 values keep
+    * their time zone (`convertTz = None`): Spark converts them only in
+    * files that parquet-mr did not write, and Spark writes the log. */
+  private final class FooterRebased(rebase: ParquetOptions) extends ReadSupport[InternalRow] {
+    private var delegate: ParquetReadSupport = _
+    override def init(context: InitContext): ReadSupport.ReadContext = {
+      // one file: one value per footer key
+      val meta = context.getKeyValueMetadata
+      val footer = (k: String) => Option(meta.get(k)).map(_.iterator.next).orNull
+      delegate = new ParquetReadSupport(None, false,
+        DataSourceUtils.datetimeRebaseSpec(footer, rebase.datetimeRebaseModeInRead),
+        DataSourceUtils.int96RebaseSpec(footer, rebase.int96RebaseModeInRead))
+      delegate.init(context)
+    }
+    override def prepareForRead(conf: Configuration, meta: java.util.Map[String, String],
+        schema: MessageType, context: ReadSupport.ReadContext): RecordMaterializer[InternalRow] =
+      delegate.prepareForRead(conf, meta, schema, context)
   }
 }

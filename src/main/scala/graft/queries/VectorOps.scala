@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.EmbeddingQuantizer
+
 /** Group X — similarity search over the `embeddings` table
   * (Array[Float] → Array[Double]).
   *
@@ -1268,7 +1270,7 @@ object VectorOps extends QueryModule {
     import spark.implicits._
     graft.GraftFunctions.install(spark) // root of the trained-model entry points
     barrier(t(spark, dir, "embeddings").select($"vec_id",
-      expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 100.0) AS DOUBLE))")
+      EmbeddingQuantizer.col
         .as("qd")))
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
+import graft.functions.EmbeddingQuantizer
+
 /** Live coreset cover-radius monitor — the 23rd streaming twin and the
   * THIRD over a trained model ([[StreamingKMeansAssign]] /
   * [[StreamingPcaProject]]'s sibling for the k-center family):
@@ -47,7 +49,7 @@ object StreamingKCenterCover {
     graft.GraftFunctions.install(embStream.sparkSession)
     embStream
       .select(
-        expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 100.0) AS DOUBLE))")
+        EmbeddingQuantizer.col
           .as("qd"))
       .select(expr(graft.queries.VectorOps.kcenterCoverExpr(sel))
         .cast("long").as("d2"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
+import graft.functions.EmbeddingQuantizer
+
 /** Online cluster assignment — the 20th streaming twin, and the first
   * over a TRAINED model: embeddings arriving on a stream are assigned
   * to the x_kmeans_oracle generation's integer centroids the moment
@@ -45,7 +47,7 @@ object StreamingKMeansAssign {
     graft.GraftFunctions.install(embStream.sparkSession)
     embStream
       .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 100.0) AS DOUBLE))")
+        EmbeddingQuantizer.col
           .as("qd"))
       .withColumn("cid", graft.queries.VectorOps.kmeansCidCol(cents))
       .groupBy(col("cid"))

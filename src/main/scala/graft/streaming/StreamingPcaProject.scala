@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
+import graft.functions.EmbeddingQuantizer
+
 /** Online principal-direction projection — the 22nd streaming twin and
   * the SECOND over a trained model ([[StreamingKMeansAssign]]'s
   * sibling for the PCA family): embeddings arriving on a stream are
@@ -70,7 +72,7 @@ object StreamingPcaProject {
     val envB = 118000L
     embStream
       .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 100.0) AS DOUBLE))")
+        EmbeddingQuantizer.col
           .as("qd"))
       .select(expr(graft.queries.VectorOps.pcaCenterExpr(m)).as("c0"))
       .select(expr(

@@ -7,9 +7,14 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard over `src/main/scala`: the tokenizer is spelled once,
-  * in [[graft.functions.Tokenizer]], and the session function registry is
-  * written only by [[GraftFunctions.install]] and the three binders that
-  * close over a built artifact (Centroids, PqCodec, BloomSketch). */
+  * in [[graft.functions.Tokenizer]], and the embedding quantizer once, in
+  * [[graft.functions.EmbeddingQuantizer]]; the session function registry
+  * is written only by [[GraftFunctions.install]] and the three binders
+  * that close over a built artifact (Centroids, PqCodec, BloomSketch); and
+  * the point get's driver read builds its parquet reader neither through
+  * Spark's per-scan reader factory, which broadcasts the Hadoop conf on
+  * every call, nor through parquet-mr's path builder, which creates a
+  * default Hadoop `Configuration` that searches the classpath. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -28,6 +33,22 @@ class SourceScanSpec extends AnyFunSuite {
     val hits = sources.map { case (p, src) => p -> count(src, "split(lower(text), ' +')") }
       .filter(_._2 > 0)
     assert(hits == Map("graft/functions/Tokenizer.scala" -> 1), hits)
+  }
+
+  test("the embedding quantizer literal appears once, in graft.functions.EmbeddingQuantizer") {
+    val literal = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 100.0) AS DOUBLE))"
+    val hits = sources.map { case (p, src) => p -> count(src, literal) }.filter(_._2 > 0)
+    assert(hits == Map("graft/functions/EmbeddingQuantizer.scala" -> 1), hits)
+  }
+
+  test("no main source builds a parquet reader the two slow ways") {
+    assert(sources.size > 100, s"scanned ${sources.size} files under $root")
+    val hits = for {
+      (p, src) <- sources.toSeq
+      needle <- Seq("buildReaderWithPartitionValues", "ParquetReader.builder(")
+      if src.contains(needle)
+    } yield s"$p: $needle"
+    assert(hits.isEmpty, hits.sorted)
   }
 
   test("only GraftFunctions and the three artifact binders write the function registry") {
