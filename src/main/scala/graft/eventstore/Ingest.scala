@@ -169,9 +169,9 @@ object Ingest {
   /** Re-publish log events missing from the hot topic (the at-most-once
     * gap [[append]] documents: a crash between the log commit and the
     * topic write). Window-bounded: only log events with `event_time >=
-    * sinceMs` are considered — pass the topic retention cutoff, so the
-    * scan prunes to the recent slice (row-group min/max on event_time;
-    * day-level dirs with byDate). Anti-join on order_id (unique) makes
+    * sinceMs` are considered — pass the topic retention cutoff. On a
+    * byDate log the scan skips the day buckets before it
+    * ([[Replay.since]]); a flat log is read whole. Anti-join on order_id (unique) makes
     * the operation idempotent; run it from the same single-writer
     * maintenance loop as [[pruneHotTopic]] so it never races an ingest.
     * Returns the number of re-published events. */
@@ -182,8 +182,7 @@ object Ingest {
       sinceMs: Long): Long = {
     val hotPath = new org.apache.hadoop.fs.Path(hotDir)
     val fs = hotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val recent = spark.read.parquet(logDir)
-      .where(unix_millis(col("event_time")) >= sinceMs)
+    val recent = Replay.since(spark.read.parquet(logDir), sinceMs)
     val missing = (if (fs.exists(hotPath) && fs.listStatus(hotPath).exists(_.isFile))
         recent.join(spark.read.parquet(hotDir).select("order_id"), Seq("order_id"),
           "left_anti")

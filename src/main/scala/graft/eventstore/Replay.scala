@@ -47,8 +47,8 @@ object Replay {
 
   /** Bounded cold replay: stream + from-ts + limit, totally ordered by
     * order_id (reference streams.clj:340-366: walks db/lazy-events from
-    * `from`, applies `limit`, then closes). Filters prune parquet
-    * partitions (stream) and row groups (event_time min/max). */
+    * `from`, applies `limit`, then closes). The stream filter prunes
+    * `stream_name` directories; `from` prunes only what [[since]] says. */
   def cold(
       log: DataFrame,
       stream: String = AllStreams,
@@ -57,10 +57,25 @@ object Replay {
     val byStream =
       if (stream == AllStreams) log
       else log.where(col("stream_name") === stream)
-    val scanned = byStream
-      .where(unix_millis(col("event_time")) >= fromMs)
-      .orderBy("order_id")
+    val scanned = since(byStream, fromMs).orderBy("order_id")
     limit.fold(scanned)(scanned.limit)
+  }
+
+  /** The rows of `log` with `event_time` at or after `fromMs`.
+    *
+    * `event_time` is written as INT96, which carries no min/max
+    * statistics, and the filter is a function of the column, so it skips
+    * no file or row group by itself. On a date-bucketed log (an
+    * `event_date` partition, `append(byDate = true)`) it adds the bucket
+    * bound `event_date >= utc_date(from) - 1`, which skips whole days.
+    * A bucket is the event's date in the writer's session time zone,
+    * never more than a day before its UTC date for any offset above
+    * −24 h, so the one-day margin keeps every row. */
+  def since(log: DataFrame, fromMs: Long): DataFrame = {
+    val rows = log.where(unix_millis(col("event_time")) >= fromMs)
+    if (!log.columns.contains("event_date")) rows
+    else rows.where(col("event_date") >=
+      lit(java.time.LocalDate.ofEpochDay(Math.floorDiv(fromMs, 86400000L) - 1)))
   }
 
   /** Point lookup by (stream, order_id) (reference streams.clj:322,

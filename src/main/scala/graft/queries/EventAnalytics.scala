@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -501,10 +501,8 @@ object EventAnalytics extends QueryModule {
     * trigram counts can't answer "given a view, what fraction
     * purchase?").
     *
-    * Determinism: ordering is (µs-floored ts, event_id) — `unix_micros`
-    * in Spark ≡ `epoch_us` on DuckDB's ns timestamps, so both engines
-    * see identical successor pairs; probabilities are exact int64
-    * floor-division basis points.
+    * Determinism: the family's transition order ([[MarkovFrame]]);
+    * probabilities are exact int64 floor-division basis points.
     *
     * Scale shape: one user-keyed window (lag 1 — a single row of sorter
     * lookahead state, bot-user-proof like x_bot_burst) into a
@@ -530,17 +528,12 @@ object EventAnalytics extends QueryModule {
             ORDER BY n DESC, prev_type, next_type LIMIT 20"""),
     (spark, dir) => {
       import spark.implicits._
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val wP = Window.partitionBy($"prev_type")
-      t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("prev_type", lag($"event_type", 1).over(wU))
+      MarkovFrame.lagged(t(spark, dir, "events"))
         .where($"prev_type".isNotNull)
         .select($"prev_type", $"event_type".as("next_type"))
         .groupBy($"prev_type", $"next_type")
         .agg(count(lit(1)).as("n"))
-        .withColumn("tot", sum($"n").over(wP))
+        .withColumn("tot", sum($"n").over(Window.partitionBy($"prev_type")))
         .select($"prev_type", $"next_type", $"n",
           expr("(n * 10000) DIV tot").as("p_bp"))
         .orderBy($"n".desc, $"prev_type", $"next_type")
@@ -2250,57 +2243,10 @@ object EventAnalytics extends QueryModule {
         .orderBy($"t_days")
     })
 
-  /** Trained steady-state weights of the quantized event-type Markov
-    * chain, once per (JVM, generation): the transition matrix in basis
-    * points (x_event_transitions' own p_bp quantization — n·10⁴ DIV
-    * row total), then 5 fixed rounds of w ← wᵀP_bp with the
-    * scale-invariant integer renormalization (w·10⁴) trunc-div max(w)
-    * (the x_pca_oracle trick — power iteration only needs a DIRECTION,
-    * so the float row-normalization is replaced by exact integers).
-    * Type space = ALL distinct event types, sorted; bounded by
-    * declaration (the vocab-window rule) and GUARDED at ≤ 256 — the
-    * oracle's position-unnest cap; beyond it the Spark side fails
-    * loudly where the oracle would silently truncate (the k-core
-    * cap-coupling rule, documented there). Driver traffic: ≤ K² + K
-    * bounded values once per generation. Envelope: w ≤ 10⁴, p ≤ 10⁴ →
-    * wᵀP entries ≤ K·10⁸ ≤ 2.6·10¹⁰ — inside Long trivially, inside
-    * BIGINT in the oracle; all values nonnegative, so trunc ≡ floor
-    * everywhere and the signed-division trap has no surface. */
-  private[graft] def markovState(spark: SparkSession, dir: String)
-      : (Seq[String], Array[Long]) =
-    QueryModule.cachedLocal(s"markov:$dir", tableStamp(dir, "events")) {
-      import spark.implicits._
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val c = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("prev_type", lag($"event_type", 1).over(wU))
-        .where($"prev_type".isNotNull)
-        .groupBy($"prev_type", $"event_type".as("next_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("tot", sum($"n").over(Window.partitionBy($"prev_type")))
-        .select($"prev_type", $"next_type",
-          expr("(n * 10000) DIV tot").as("p_bp"))
-        .collect()
-      val types = t(spark, dir, "events").select($"event_type").distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      require(types.length <= 256,
-        s"markovState: ${types.length} event types exceed the declared " +
-          "bounded type space (oracle position cap 256) — widen both or sample")
-      val idx = types.zipWithIndex.toMap
-      val k = types.length
-      val m = Array.ofDim[Long](k, k)
-      c.foreach(r =>
-        m(idx(r.getString(0)))(idx(r.getString(1))) = r.getLong(2))
-      var w = Array.fill(k)(1L)
-      for (_ <- 1 to 5) {
-        val wp = Array.tabulate(k)(j =>
-          (0 until k).map(i => w(i) * m(i)(j)).sum)
-        val s = wp.map(math.abs).max
-        if (s != 0L) w = wp.map(x => x * 10000L / s)
-      }
-      (types, w)
-    }
+  /** The family's one cached chain ([[MarkovFrame.chain]]) over this
+    * directory's events. */
+  private def markovChain(spark: SparkSession, dir: String): MarkovFrame.Chain =
+    MarkovFrame.chain(dir, tableStamp(dir, "events"))(t(spark, dir, "events"))
 
   /** ORACLE-BACKED Markov steady state — the long-run event-mix read
     * that sits one step past x_event_transitions: where that query
@@ -2324,55 +2270,14 @@ object EventAnalytics extends QueryModule {
     * row (nested lambda matrix build from the edge list — the
     * x_graph_lpa closure technique).
     *
-    * Scale shape: ONE user-keyed lag window + a K²-bounded rollup
-    * (training, per generation); the declared query re-runs that
-    * window (live evidence) plus two ≤K-row rollups and a broadcast
-    * join of the ≤K-row steady constants. K is type cardinality —
-    * bounded by declaration, guarded at 256. */
+    * Scale shape: training is the family's one cached chain collect
+    * ([[MarkovFrame.chain]], per generation); the declared query runs
+    * the user-keyed lag window (live evidence) plus two ≤K-row rollups
+    * and a broadcast join of the ≤K-row steady constants. K is type
+    * cardinality — bounded by declaration, guarded at 256. */
   private val markovSteady = Q(
     "x_markov_steady",
-    Some("""WITH RECURSIVE
-            e AS (SELECT user_id, event_id, event_type,
-                    epoch_us(ts) AS ts_us FROM events),
-            p AS (SELECT lag(event_type) OVER
-                    (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_type,
-                    event_type AS next_type
-                  FROM e),
-            c AS (SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n
-                  FROM p WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-            tt AS (SELECT prev_type, CAST(sum(n) AS BIGINT) AS tot
-                   FROM c GROUP BY 1),
-            pb AS (SELECT c.prev_type AS a, c.next_type AS b,
-                     CAST((c.n * 10000) // tt.tot AS BIGINT) AS v
-                   FROM c JOIN tt USING (prev_type)),
-            ty AS (SELECT list(t ORDER BY t) AS ts
-                   FROM (SELECT DISTINCT event_type AS t FROM events)),
-            el AS (SELECT coalesce(list(struct_pack(a := a, b := b, v := v)),
-                     []) AS es FROM pb),
-            pm AS (SELECT ts, list_transform(ts, x -> list_transform(ts, y ->
-                     coalesce(list_min(list_transform(
-                       list_filter(es, q -> q.a = x AND q.b = y),
-                       q -> q.v)), 0))) AS m
-                   FROM ty CROSS JOIN el),
-            it AS (
-              SELECT 0 AS step, list_transform(ts, t -> CAST(1 AS BIGINT)) AS w
-              FROM ty
-              UNION ALL
-              SELECT step + 1,
-                CASE WHEN s = 0 THEN w ELSE
-                  list_transform(wp, x -> CAST((x * 10000) // s AS BIGINT))
-                END AS w
-              FROM (SELECT step, w, wp,
-                      list_max(list_transform(wp, x -> abs(x))) AS s
-                    FROM (SELECT step, w,
-                            list_transform(range(1, len(w) + 1), j -> CAST(
-                              list_sum(list_transform(range(1, len(w) + 1),
-                                i -> w[i] * m[i][j])) AS BIGINT)) AS wp
-                          FROM it CROSS JOIN pm))
-              WHERE step < 5),
-            fin AS (SELECT w FROM it ORDER BY step DESC LIMIT 1),
-            sw AS (SELECT ts, w, CAST(list_sum(w) AS BIGINT) AS wt
-                   FROM fin CROSS JOIN ty),
+    Some(MarkovFrame.oracleLag + """,
             outs AS (SELECT prev_type AS t, CAST(sum(n) AS BIGINT) AS n_out
                      FROM c GROUP BY 1),
             ins AS (SELECT next_type AS t, CAST(sum(n) AS BIGINT) AS n_in
@@ -2389,21 +2294,18 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val (types, w) = markovState(spark, dir)
+      val ch = markovChain(spark, dir)
+      val w = ch.steady
       val wt = w.sum
-      val steady = broadcast(types.zip(w).map { case (ty, wi) =>
+      val steady = broadcast(ch.types.zip(w).map { case (ty, wi) =>
         (ty, wi, wi * 10000L / wt) }.toDF("event_type", "steady_w", "steady_bp"))
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
       // ONE live pass: each transition contributes an (out, prev) and an
       // (in, next) occurrence, folded by one map-side-combined aggregate
       // — the two-rollup spelling (the oracle's outs/ins CTEs) would
       // re-run the user-keyed lag window per branch (no exchange reuse
       // across differently-keyed rollups); values identical by Σ over
       // the same transitions.
-      val mass = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("prev_type", lag($"event_type", 1).over(wU))
+      val mass = MarkovFrame.lagged(t(spark, dir, "events"))
         .where($"prev_type".isNotNull)
         .select(explode(expr(
           """array(named_struct('side', 'out', 't', prev_type),
@@ -2417,15 +2319,32 @@ object EventAnalytics extends QueryModule {
         .orderBy($"event_type")
     })
 
-  /** Trained absorbing-chain state, once per (JVM, generation):
-    * x_markov_steady's sibling over the SUBSTOCHASTIC chain — every
-    * user stream ends, so each occurrence of a type either transitions
-    * to a next type or is ABSORBED (the stream's last event = the
-    * synthetic END state a churn analysis conditions on). Q_bp(i,j) =
-    * n(i→j)·10⁴ DIV tot(i) with tot(i) = n_out(i) + n_end(i) — the
-    * OCCURRENCE total, so rows are substochastic exactly where end
-    * mass exists. Expected steps to absorption t = (I−Q)⁻¹·1 is
-    * replayed as a FIXED-8-round integer Neumann/fixed-point series
+  /** ORACLE-BACKED absorbing-state Markov read — x_markov_steady's
+    * sibling (VERDICT r14 #2): "how many more events does a user
+    * stream produce, starting from each event type, before it ENDS" —
+    * expected steps to absorption in the substochastic behavioral
+    * chain, the (I−Q)⁻¹·1 family replayed as a fixed-8-round integer
+    * Neumann series (envelope worksheet below, written FIRST as gated
+    * by the r14 verdict). Absorption = the stream's observed end — the
+    * churn event a lifecycle analysis conditions on — so the chain
+    * needs no calibrated threshold at
+    * all (the x_hazard_km 2-day constant has no analogue here; END
+    * mass is structural). Output per type: LIVE-recomputed n_out /
+    * n_end (occurrences with a successor vs stream-final occurrences
+    * — the corpus evidence, one lead window), the trained retention
+    * row mass q_row_bp = Σ_j Q_bp(i,j) (10⁴ − it ≈ the per-occurrence
+    * absorption hazard in bp), and absorb_steps_bp = s_8 — a monotone
+    * lower bound of 10⁴·E[steps to END], exact integers both engines
+    * replay bit-for-bit through the recursive-CTE LIST-state row.
+    *
+    * The chain ([[MarkovFrame.Chain]]): every user stream ends, so each
+    * occurrence of a type either transitions to a next type or is
+    * ABSORBED (the stream's last event = the synthetic END state a
+    * churn analysis conditions on). Q_bp(i,j) = n(i→j)·10⁴ DIV tot(i)
+    * with tot(i) = n_out(i) + n_end(i) — the OCCURRENCE total, so rows
+    * are substochastic exactly where end mass exists. Expected steps
+    * to absorption t = (I−Q)⁻¹·1 is replayed as a FIXED-8-round
+    * integer Neumann/fixed-point series
     * s ← 10⁴ + (Q_bp·s) DIV 10⁴ from s⁰ = 10⁴·1 (the x_pca_oracle
     * fixed-budget rule — a fixed round count is what makes the loop
     * recursive-CTE replayable).
@@ -2445,118 +2364,14 @@ object EventAnalytics extends QueryModule {
     * type by construction (each occurrence is followed or last), so
     * the division is total.
     *
-    * Type space derives from the one collected rollup (every
-    * occurrence contributes a row, so every observed type appears as
-    * a rollup key); guarded ≤ 256 = the oracle's position-unnest cap
-    * (the k-core cap-coupling rule). Driver traffic: ≤ K² + K bounded
-    * values once per generation. The doc above describes BOTH chain
-    * consumers' shared algebra; the collect lives in
-    * [[markovAbsorbChain]], the s-iteration in [[markovAbsorbState]].
-    */
-  /** The quantized substochastic chain itself — (types, Q_bp, r_bp)
-    * where r_bp(i) = n_end(i)·10⁴ DIV tot(i) is the per-occurrence
-    * absorption mass — collected once per (JVM, generation) and shared
-    * by [[markovAbsorbState]] (expected steps) and the multi-absorber
-    * read x_markov_absorb_to (which type a stream ends in). The
-    * downstream iterations are microseconds of driver math, so only
-    * this collect is cached. */
-  private[graft] def markovAbsorbChain(spark: SparkSession, dir: String)
-      : (Seq[String], Array[Array[Long]], Array[Long]) =
-    QueryModule.cachedLocal(s"markovchain:$dir", tableStamp(dir, "events")) {
-      import spark.implicits._
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val c = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("nxt", lead($"event_type", 1).over(wU))
-        .groupBy($"event_type", $"nxt")
-        .agg(count(lit(1)).as("n"))
-        .collect()
-      val types = c.map(_.getString(0)).distinct.sorted.toSeq
-      require(types.length <= 256,
-        s"markovAbsorbChain: ${types.length} event types exceed the declared " +
-          "bounded type space (oracle position cap 256) — widen both or sample")
-      val idx = types.zipWithIndex.toMap
-      val k = types.length
-      val m = Array.ofDim[Long](k, k)
-      val tot = Array.ofDim[Long](k)
-      val end = Array.ofDim[Long](k)
-      c.foreach { r =>
-        val i = idx(r.getString(0))
-        tot(i) += r.getLong(2)
-        if (!r.isNullAt(1)) m(i)(idx(r.getString(1))) = r.getLong(2)
-        else end(i) += r.getLong(2)
-      }
-      val q = Array.tabulate(k, k)((i, j) => m(i)(j) * 10000L / tot(i))
-      val rb = Array.tabulate(k)(i => end(i) * 10000L / tot(i))
-      (types, q, rb)
-    }
-
-  private[graft] def markovAbsorbState(spark: SparkSession, dir: String)
-      : (Seq[String], Array[Long], Array[Long]) = {
-    val (types, q, _) = markovAbsorbChain(spark, dir)
-    val k = types.length
-    var s = Array.fill(k)(10000L)
-    for (_ <- 1 to 8)
-      s = Array.tabulate(k)(i =>
-        10000L + (0 until k).map(j => q(i)(j) * s(j)).sum / 10000L)
-    (types, q.map(_.sum), s)
-  }
-
-  /** ORACLE-BACKED absorbing-state Markov read — x_markov_steady's
-    * sibling (VERDICT r14 #2): "how many more events does a user
-    * stream produce, starting from each event type, before it ENDS" —
-    * expected steps to absorption in the substochastic behavioral
-    * chain, the (I−Q)⁻¹·1 family replayed as a fixed-8-round integer
-    * Neumann series (envelope worksheet in [[markovAbsorbState]],
-    * written FIRST as gated by the r14 verdict). Absorption = the
-    * stream's observed end — the churn event a lifecycle analysis
-    * conditions on — so the chain needs no calibrated threshold at
-    * all (the x_hazard_km 2-day constant has no analogue here; END
-    * mass is structural). Output per type: LIVE-recomputed n_out /
-    * n_end (occurrences with a successor vs stream-final occurrences
-    * — the corpus evidence, one lead window), the trained retention
-    * row mass q_row_bp = Σ_j Q_bp(i,j) (10⁴ − it ≈ the per-occurrence
-    * absorption hazard in bp), and absorb_steps_bp = s_8 — a monotone
-    * lower bound of 10⁴·E[steps to END], exact integers both engines
-    * replay bit-for-bit through the recursive-CTE LIST-state row.
-    *
-    * Scale shape: training = one user-keyed lead window + a ≤K²-row
-    * rollup, once per generation; the declared query re-runs the lead
-    * window once (live evidence — one scan, one window, one exchange)
-    * plus a ≤K-row broadcast join of the trained constants. K is type
+    * Scale shape: training is the family's one cached chain collect
+    * ([[MarkovFrame.chain]], per generation); the declared query runs
+    * the lead window once (live evidence — one scan, one window, one
+    * exchange) plus a ≤K-row broadcast join of the trained constants. K is type
     * cardinality — bounded by declaration, guarded at 256. */
   private val markovAbsorb = Q(
     "x_markov_absorb",
-    Some("""WITH RECURSIVE
-            e AS (SELECT user_id, event_id, event_type,
-                    epoch_us(ts) AS ts_us FROM events),
-            p AS (SELECT event_type AS cur, lead(event_type) OVER
-                    (PARTITION BY user_id ORDER BY ts_us, event_id) AS nxt
-                  FROM e),
-            c AS (SELECT cur AS a, nxt AS b, CAST(count(*) AS BIGINT) AS n
-                  FROM p WHERE nxt IS NOT NULL GROUP BY 1, 2),
-            en AS (SELECT cur AS t, CAST(count(*) AS BIGINT) AS n_end
-                   FROM p WHERE nxt IS NULL GROUP BY 1),
-            outs AS (SELECT a AS t, CAST(sum(n) AS BIGINT) AS n_out
-                     FROM c GROUP BY 1),
-            ty AS (SELECT list(t ORDER BY t) AS ts
-                   FROM (SELECT DISTINCT event_type AS t FROM events)),
-            tt AS (SELECT u.t,
-                     coalesce(o.n_out, 0) + coalesce(e2.n_end, 0) AS tot
-                   FROM (SELECT DISTINCT event_type AS t FROM events) u
-                   LEFT JOIN outs o ON o.t = u.t
-                   LEFT JOIN en e2 ON e2.t = u.t),
-            qb AS (SELECT c.a, c.b,
-                     CAST((c.n * 10000) // tt.tot AS BIGINT) AS v
-                   FROM c JOIN tt ON tt.t = c.a),
-            el AS (SELECT coalesce(list(struct_pack(a := a, b := b, v := v)),
-                     []) AS es FROM qb),
-            qm AS (SELECT ts, list_transform(ts, x -> list_transform(ts, y ->
-                     coalesce(list_min(list_transform(
-                       list_filter(es, q -> q.a = x AND q.b = y),
-                       q -> q.v)), 0))) AS m
-                   FROM ty CROSS JOIN el),
+    Some(MarkovFrame.oracleLead + """,
             it AS (
               SELECT 0 AS step,
                 list_transform(ts, t -> CAST(10000 AS BIGINT)) AS s
@@ -2582,15 +2397,12 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val (types, qRow, s) = markovAbsorbState(spark, dir)
-      val trained = broadcast(types.indices.map(i =>
-        (types(i), qRow(i), s(i)))
+      val ch = markovChain(spark, dir)
+      val s = ch.series(Array.fill(ch.k)(10000L))
+      val trained = broadcast(ch.types.indices.map(i =>
+        (ch.types(i), ch.q(i).sum, s(i)))
         .toDF("event_type", "q_row_bp", "absorb_steps_bp"))
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val live = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("nxt", lead($"event_type", 1).over(wU))
+      val live = MarkovFrame.led(t(spark, dir, "events"))
         .groupBy($"event_type")
         .agg(sum(when($"nxt".isNotNull, 1L).otherwise(0L)).as("n_out"),
           sum(when($"nxt".isNull, 1L).otherwise(0L)).as("n_end"))
@@ -2628,41 +2440,13 @@ object EventAnalytics extends QueryModule {
     * and covered_bp next to the LIVE end-type absorption count (the
     * corpus evidence, one lead-window pass).
     *
-    * Scale shape: the chain collect is shared ([[markovAbsorbChain]],
+    * Scale shape: the chain collect is shared ([[MarkovFrame.chain]],
     * cached); the K×K×K driver iteration is ≤ 8·256³ bounded ops; the
     * declared query is the live lead-window pass plus a ≤K²-row
     * broadcast. */
   private val markovAbsorbTo = Q(
     "x_markov_absorb_to",
-    Some("""WITH RECURSIVE
-            e AS (SELECT user_id, event_id, event_type,
-                    epoch_us(ts) AS ts_us FROM events),
-            p AS (SELECT event_type AS cur, lead(event_type) OVER
-                    (PARTITION BY user_id ORDER BY ts_us, event_id) AS nxt
-                  FROM e),
-            c AS (SELECT cur AS a, nxt AS b, CAST(count(*) AS BIGINT) AS n
-                  FROM p WHERE nxt IS NOT NULL GROUP BY 1, 2),
-            en AS (SELECT cur AS t, CAST(count(*) AS BIGINT) AS n_end
-                   FROM p WHERE nxt IS NULL GROUP BY 1),
-            outs AS (SELECT a AS t, CAST(sum(n) AS BIGINT) AS n_out
-                     FROM c GROUP BY 1),
-            ty AS (SELECT list(t ORDER BY t) AS ts
-                   FROM (SELECT DISTINCT event_type AS t FROM events)),
-            tt AS (SELECT u.t,
-                     coalesce(o.n_out, 0) + coalesce(e2.n_end, 0) AS tot
-                   FROM (SELECT DISTINCT event_type AS t FROM events) u
-                   LEFT JOIN outs o ON o.t = u.t
-                   LEFT JOIN en e2 ON e2.t = u.t),
-            qb AS (SELECT c.a, c.b,
-                     CAST((c.n * 10000) // tt.tot AS BIGINT) AS v
-                   FROM c JOIN tt ON tt.t = c.a),
-            el AS (SELECT coalesce(list(struct_pack(a := a, b := b, v := v)),
-                     []) AS es FROM qb),
-            qm AS (SELECT ts, list_transform(ts, x -> list_transform(ts, y ->
-                     coalesce(list_min(list_transform(
-                       list_filter(es, q -> q.a = x AND q.b = y),
-                       q -> q.v)), 0))) AS m
-                   FROM ty CROSS JOIN el),
+    Some(MarkovFrame.oracleLead + """,
             re AS (SELECT coalesce(list(struct_pack(t := tt.t,
                      v := (coalesce(e2.n_end, 0) * 10000) // tt.tot)), [])
                      AS rs
@@ -2700,24 +2484,18 @@ object EventAnalytics extends QueryModule {
             ORDER BY start_type, end_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val (types, q, rb) = markovAbsorbChain(spark, dir)
-      val k = types.length
-      var sm = Array.tabulate(k, k)((i, t2) => if (i == t2) rb(i) else 0L)
-      for (_ <- 1 to 8)
-        sm = Array.tabulate(k, k)((i, t2) =>
-          (if (i == t2) rb(i) else 0L) +
-            (0 until k).map(j => q(i)(j) * sm(j)(t2)).sum / 10000L)
+      val ch = markovChain(spark, dir)
+      val (k, types, rb) = (ch.k, ch.types, ch.r)
+      // column t2 of S is its own series from the t2 column of diag(r)
+      val sm = Array.tabulate(k)(t2 =>
+        ch.series(Array.tabulate(k)(i => if (i == t2) rb(i) else 0L))).transpose
       val covered = sm.map(_.sum)
       val pairs = for {
         i <- 0 until k; t2 <- 0 until k if rb(t2) > 0L
       } yield (types(i), types(t2), sm(i)(t2), covered(i))
       val trained = broadcast(pairs
         .toDF("start_type", "end_type", "absorb_bp", "covered_bp"))
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val liveEnd = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("nxt", lead($"event_type", 1).over(wU))
+      val liveEnd = MarkovFrame.led(t(spark, dir, "events"))
         .where($"nxt".isNull)
         .groupBy($"event_type".as("end_type"))
         .agg(count(lit(1)).as("n_end"))
@@ -3016,6 +2794,34 @@ object EventAnalytics extends QueryModule {
         .orderBy($"rec_wk", $"f_band", $"m_band")
     })
 
+  /** The oracle prefix x_markov_reach and x_markov_mfpt share: the lead
+    * CTEs, then `tv` (the target's position and Q column), `it`/`fin`
+    * (the eight-round first-passage series to it). */
+  private val reachCtes: String = MarkovFrame.oracleLead + """,
+            tv AS (SELECT ts, m, list_position(ts, 'purchase') AS ti,
+                     list_transform(range(1, len(ts) + 1),
+                       i -> m[i][list_position(ts, 'purchase')]) AS v
+                   FROM qm
+                   WHERE coalesce(list_position(ts, 'purchase'), 0) > 0),
+            it AS (SELECT 0 AS step, v AS s FROM tv
+                   UNION ALL
+                   SELECT step + 1,
+                     list_transform(range(1, len(s) + 1), i -> CAST(
+                       v[i] + list_sum(list_transform(range(1, len(s) + 1),
+                         j -> (CASE WHEN j = ti THEN 0 ELSE m[i][j] END)
+                           * s[j])) // 10000 AS BIGINT)) AS s
+                   FROM it CROSS JOIN tv WHERE step < 8),
+            fin AS (SELECT s FROM it ORDER BY step DESC LIMIT 1)"""
+
+  /** Per event type, its transitions into `purchase` — the live
+    * evidence column of x_markov_reach and x_markov_mfpt. */
+  private def liveToTarget(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    MarkovFrame.led(t(spark, dir, "events"))
+      .groupBy($"event_type")
+      .agg(sum(when($"nxt" === "purchase", 1L).otherwise(0L)).as("n_to_target"))
+  }
+
   /** ORACLE-BACKED target-hitting read — the Markov family's fourth
     * member (steady = long-run mix, absorb = steps to END, absorb_to =
     * WHICH end; this answers the conversion question: "starting from
@@ -3042,55 +2848,13 @@ object EventAnalytics extends QueryModule {
     * EMPTY result in both engines (the target position filter — the
     * declared behavior, pinned), never a fabricated zero table.
     *
-    * Scale shape: the chain collect is shared ([[markovAbsorbChain]],
+    * Scale shape: the chain collect is shared ([[MarkovFrame.chain]],
     * cached); the K×K driver iteration is ≤ 8·256² bounded ops; the
     * declared query is one live lead-window pass (n_to_target — the
     * corpus evidence) plus a ≤K-row broadcast of trained constants. */
   private val markovReach = Q(
     "x_markov_reach",
-    Some("""WITH RECURSIVE
-            e AS (SELECT user_id, event_id, event_type,
-                    epoch_us(ts) AS ts_us FROM events),
-            p AS (SELECT event_type AS cur, lead(event_type) OVER
-                    (PARTITION BY user_id ORDER BY ts_us, event_id) AS nxt
-                  FROM e),
-            c AS (SELECT cur AS a, nxt AS b, CAST(count(*) AS BIGINT) AS n
-                  FROM p WHERE nxt IS NOT NULL GROUP BY 1, 2),
-            en AS (SELECT cur AS t, CAST(count(*) AS BIGINT) AS n_end
-                   FROM p WHERE nxt IS NULL GROUP BY 1),
-            outs AS (SELECT a AS t, CAST(sum(n) AS BIGINT) AS n_out
-                     FROM c GROUP BY 1),
-            ty AS (SELECT list(t ORDER BY t) AS ts
-                   FROM (SELECT DISTINCT event_type AS t FROM events)),
-            tt AS (SELECT u.t,
-                     coalesce(o.n_out, 0) + coalesce(e2.n_end, 0) AS tot
-                   FROM (SELECT DISTINCT event_type AS t FROM events) u
-                   LEFT JOIN outs o ON o.t = u.t
-                   LEFT JOIN en e2 ON e2.t = u.t),
-            qb AS (SELECT c.a, c.b,
-                     CAST((c.n * 10000) // tt.tot AS BIGINT) AS v
-                   FROM c JOIN tt ON tt.t = c.a),
-            el AS (SELECT coalesce(list(struct_pack(a := a, b := b, v := v)),
-                     []) AS es FROM qb),
-            qm AS (SELECT ts, list_transform(ts, x -> list_transform(ts, y ->
-                     coalesce(list_min(list_transform(
-                       list_filter(es, q -> q.a = x AND q.b = y),
-                       q -> q.v)), 0))) AS m
-                   FROM ty CROSS JOIN el),
-            tv AS (SELECT ts, m, list_position(ts, 'purchase') AS ti,
-                     list_transform(range(1, len(ts) + 1),
-                       i -> m[i][list_position(ts, 'purchase')]) AS v
-                   FROM qm
-                   WHERE coalesce(list_position(ts, 'purchase'), 0) > 0),
-            it AS (SELECT 0 AS step, v AS s FROM tv
-                   UNION ALL
-                   SELECT step + 1,
-                     list_transform(range(1, len(s) + 1), i -> CAST(
-                       v[i] + list_sum(list_transform(range(1, len(s) + 1),
-                         j -> (CASE WHEN j = ti THEN 0 ELSE m[i][j] END)
-                           * s[j])) // 10000 AS BIGINT)) AS s
-                   FROM it CROSS JOIN tv WHERE step < 8),
-            fin AS (SELECT s FROM it ORDER BY step DESC LIMIT 1),
+    Some(reachCtes + """,
             base AS (SELECT ts[k] AS event_type,
                        CAST(v[k] AS BIGINT) AS q_to_target_bp,
                        CAST(s[k] AS BIGINT) AS reach_bp
@@ -3106,31 +2870,18 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val (types, q, _) = markovAbsorbChain(spark, dir)
-      val ti = types.indexOf("purchase")
+      val ch = markovChain(spark, dir)
+      val ti = ch.types.indexOf("purchase")
       val trained =
         if (ti < 0) Seq.empty[(String, Long, Long)]
             .toDF("event_type", "q_to_target_bp", "reach_bp")
         else {
-          val k = types.length
-          val v = Array.tabulate(k)(i => q(i)(ti))
-          var s = v.clone()
-          for (_ <- 1 to 8)
-            s = Array.tabulate(k)(i =>
-              v(i) + (0 until k).filter(_ != ti)
-                .map(j => q(i)(j) * s(j)).sum / 10000L)
-          types.indices.map(i => (types(i), v(i), s(i)))
+          val v = ch.q.map(_(ti))
+          val s = ch.series(v, ti)
+          ch.types.indices.map(i => (ch.types(i), v(i), s(i)))
             .toDF("event_type", "q_to_target_bp", "reach_bp")
         }
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val live = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("nxt", lead($"event_type", 1).over(wU))
-        .groupBy($"event_type")
-        .agg(sum(when($"nxt" === "purchase", 1L).otherwise(0L))
-          .as("n_to_target"))
-      broadcast(trained).join(live, Seq("event_type"), "left")
+      broadcast(trained).join(liveToTarget(spark, dir), Seq("event_type"), "left")
         .na.fill(0L, Seq("n_to_target"))
         .select($"event_type", $"n_to_target", $"q_to_target_bp",
           $"reach_bp")
@@ -3173,7 +2924,7 @@ object EventAnalytics extends QueryModule {
     * operands are exact int64 ≤ 9·10⁴ → exact doubles → one
     * correctly-rounded IEEE division identical cross-engine.
     *
-    * Scale shape: the chain collect is shared ([[markovAbsorbChain]],
+    * Scale shape: the chain collect is shared ([[MarkovFrame.chain]],
     * cached once per (JVM, generation)); the two K-vector iterations
     * are ≤ 16·256² driver ops; the declared query is one live
     * lead-window pass (n_to_target, the corpus evidence — one scan,
@@ -3182,49 +2933,7 @@ object EventAnalytics extends QueryModule {
     * engines (the x_markov_reach rule, pinned). */
   private val markovMfpt = Q(
     "x_markov_mfpt",
-    Some("""WITH RECURSIVE
-            e AS (SELECT user_id, event_id, event_type,
-                    epoch_us(ts) AS ts_us FROM events),
-            p AS (SELECT event_type AS cur, lead(event_type) OVER
-                    (PARTITION BY user_id ORDER BY ts_us, event_id) AS nxt
-                  FROM e),
-            c AS (SELECT cur AS a, nxt AS b, CAST(count(*) AS BIGINT) AS n
-                  FROM p WHERE nxt IS NOT NULL GROUP BY 1, 2),
-            en AS (SELECT cur AS t, CAST(count(*) AS BIGINT) AS n_end
-                   FROM p WHERE nxt IS NULL GROUP BY 1),
-            outs AS (SELECT a AS t, CAST(sum(n) AS BIGINT) AS n_out
-                     FROM c GROUP BY 1),
-            ty AS (SELECT list(t ORDER BY t) AS ts
-                   FROM (SELECT DISTINCT event_type AS t FROM events)),
-            tt AS (SELECT u.t,
-                     coalesce(o.n_out, 0) + coalesce(e2.n_end, 0) AS tot
-                   FROM (SELECT DISTINCT event_type AS t FROM events) u
-                   LEFT JOIN outs o ON o.t = u.t
-                   LEFT JOIN en e2 ON e2.t = u.t),
-            qb AS (SELECT c.a, c.b,
-                     CAST((c.n * 10000) // tt.tot AS BIGINT) AS v
-                   FROM c JOIN tt ON tt.t = c.a),
-            el AS (SELECT coalesce(list(struct_pack(a := a, b := b, v := v)),
-                     []) AS es FROM qb),
-            qm AS (SELECT ts, list_transform(ts, x -> list_transform(ts, y ->
-                     coalesce(list_min(list_transform(
-                       list_filter(es, q -> q.a = x AND q.b = y),
-                       q -> q.v)), 0))) AS m
-                   FROM ty CROSS JOIN el),
-            tv AS (SELECT ts, m, list_position(ts, 'purchase') AS ti,
-                     list_transform(range(1, len(ts) + 1),
-                       i -> m[i][list_position(ts, 'purchase')]) AS v
-                   FROM qm
-                   WHERE coalesce(list_position(ts, 'purchase'), 0) > 0),
-            it AS (SELECT 0 AS step, v AS s FROM tv
-                   UNION ALL
-                   SELECT step + 1,
-                     list_transform(range(1, len(s) + 1), i -> CAST(
-                       v[i] + list_sum(list_transform(range(1, len(s) + 1),
-                         j -> (CASE WHEN j = ti THEN 0 ELSE m[i][j] END)
-                           * s[j])) // 10000 AS BIGINT)) AS s
-                   FROM it CROSS JOIN tv WHERE step < 8),
-            fin AS (SELECT s FROM it ORDER BY step DESC LIMIT 1),
+    Some(reachCtes + """,
             it2 AS (SELECT 0 AS step, s AS u FROM fin
                     UNION ALL
                     SELECT step + 1,
@@ -3252,37 +2961,19 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val (types, q, _) = markovAbsorbChain(spark, dir)
-      val ti = types.indexOf("purchase")
+      val ch = markovChain(spark, dir)
+      val ti = ch.types.indexOf("purchase")
       val trained =
         if (ti < 0) Seq.empty[(String, Long, Long)]
             .toDF("event_type", "reach_bp", "steps_mass_bp")
         else {
-          val k = types.length
-          val v = Array.tabulate(k)(i => q(i)(ti))
-          var h = v.clone()
-          for (_ <- 1 to 8)
-            h = Array.tabulate(k)(i =>
-              v(i) + (0 until k).filter(_ != ti)
-                .map(j => q(i)(j) * h(j)).sum / 10000L)
-          var u = h.clone()
-          for (_ <- 1 to 8)
-            u = Array.tabulate(k)(i =>
-              h(i) + (0 until k).filter(_ != ti)
-                .map(j => q(i)(j) * u(j)).sum / 10000L)
-          types.indices.filter(i => h(i) > 0)
-            .map(i => (types(i), h(i), u(i)))
+          val h = ch.series(ch.q.map(_(ti)), ti)
+          val u = ch.series(h, ti)
+          ch.types.indices.filter(i => h(i) > 0)
+            .map(i => (ch.types(i), h(i), u(i)))
             .toDF("event_type", "reach_bp", "steps_mass_bp")
         }
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val live = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("nxt", lead($"event_type", 1).over(wU))
-        .groupBy($"event_type")
-        .agg(sum(when($"nxt" === "purchase", 1L).otherwise(0L))
-          .as("n_to_target"))
-      broadcast(trained).join(live, Seq("event_type"), "left")
+      broadcast(trained).join(liveToTarget(spark, dir), Seq("event_type"), "left")
         .na.fill(0L, Seq("n_to_target"))
         .select($"event_type", $"n_to_target", $"reach_bp",
           $"steps_mass_bp",
@@ -3319,54 +3010,14 @@ object EventAnalytics extends QueryModule {
     * Types never observed with a successor (stream-final-only) have
     * no transition row and emit nothing — documented domain.
     *
-    * Scale shape: the steady vector is the cached [[markovState]]
-    * collect; the declared query is ONE live user-keyed lag-window
-    * pass into a ≤K²-row rollup + a ≤K-row broadcast join. K is type
+    * Scale shape: the steady vector comes from the cached
+    * [[MarkovFrame.chain]] collect; the declared query is ONE live
+    * user-keyed lag-window pass into a ≤K²-row rollup + a ≤K-row
+    * broadcast join. K is type
     * cardinality — bounded by declaration, guarded at 256. */
   private val markovEntropy = Q(
     "x_markov_entropy",
-    Some("""WITH RECURSIVE
-            e AS (SELECT user_id, event_id, event_type,
-                    epoch_us(ts) AS ts_us FROM events),
-            p AS (SELECT lag(event_type) OVER
-                    (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_type,
-                    event_type AS next_type
-                  FROM e),
-            c AS (SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n
-                  FROM p WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-            tt AS (SELECT prev_type, CAST(sum(n) AS BIGINT) AS tot
-                   FROM c GROUP BY 1),
-            pb AS (SELECT c.prev_type AS a, c.next_type AS b,
-                     CAST((c.n * 10000) // tt.tot AS BIGINT) AS v
-                   FROM c JOIN tt USING (prev_type)),
-            ty AS (SELECT list(t ORDER BY t) AS ts
-                   FROM (SELECT DISTINCT event_type AS t FROM events)),
-            el AS (SELECT coalesce(list(struct_pack(a := a, b := b, v := v)),
-                     []) AS es FROM pb),
-            pm AS (SELECT ts, list_transform(ts, x -> list_transform(ts, y ->
-                     coalesce(list_min(list_transform(
-                       list_filter(es, q -> q.a = x AND q.b = y),
-                       q -> q.v)), 0))) AS m
-                   FROM ty CROSS JOIN el),
-            it AS (
-              SELECT 0 AS step, list_transform(ts, t -> CAST(1 AS BIGINT)) AS w
-              FROM ty
-              UNION ALL
-              SELECT step + 1,
-                CASE WHEN s = 0 THEN w ELSE
-                  list_transform(wp, x -> CAST((x * 10000) // s AS BIGINT))
-                END AS w
-              FROM (SELECT step, w, wp,
-                      list_max(list_transform(wp, x -> abs(x))) AS s
-                    FROM (SELECT step, w,
-                            list_transform(range(1, len(w) + 1), j -> CAST(
-                              list_sum(list_transform(range(1, len(w) + 1),
-                                i -> w[i] * m[i][j])) AS BIGINT)) AS wp
-                          FROM it CROSS JOIN pm))
-              WHERE step < 5),
-            fin AS (SELECT w FROM it ORDER BY step DESC LIMIT 1),
-            sw AS (SELECT ts, w, CAST(list_sum(w) AS BIGINT) AS wt
-                   FROM fin CROSS JOIN ty),
+    Some(MarkovFrame.oracleLag + """,
             sb AS (SELECT ts[k] AS t,
                      CAST((w[k] * 10000) // wt AS BIGINT) AS steady_bp
                    FROM sw CROSS JOIN (SELECT unnest(range(1, 257)) AS k)
@@ -3386,18 +3037,12 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val (types, w) = markovState(spark, dir)
+      val ch = markovChain(spark, dir)
+      val w = ch.steady
       val wt = w.sum
-      val steady = broadcast(types.zip(w).map { case (ty, wi) =>
+      val steady = broadcast(ch.types.zip(w).map { case (ty, wi) =>
         (ty, wi * 10000L / wt) }.toDF("event_type", "steady_bp"))
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val edges = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("prev_type", lag($"event_type", 1).over(wU))
-        .where($"prev_type".isNotNull)
-        .groupBy($"prev_type", $"event_type".as("next_type"))
-        .agg(count(lit(1)).as("n"))
+      val edges = MarkovFrame.transitions(t(spark, dir, "events"))
         .withColumn("tot", sum($"n").over(Window.partitionBy($"prev_type")))
         .withColumn("p_bp", expr("(n * 10000) DIV tot"))
       val rows = edges.groupBy($"prev_type".as("event_type"))
@@ -4158,17 +3803,17 @@ object EventAnalytics extends QueryModule {
     * rows per type — the MW u2 precedent.
     *
     * Scale shape: everything here is K-bounded (K = chain type
-    * cardinality, guarded at 256 by the family's markovState rule) —
-    * a K²-bounded driver collect + local BigInt fold (the markovState
-    * precedent; the relational spelling's ~8 broadcast joins were a
-    * flat ~1.1 s plan-latency floor at every SF). The only
-    * volume-dependent work is the caller's transition count. */
-  private[graft] def lumpableFold(c: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+    * cardinality, guarded at 256 by the family's chain rule) —
+    * a K²-bounded driver collect + local BigInt fold (the
+    * MarkovFrame.Chain precedent; the relational spelling's ~8
+    * broadcast joins were a flat ~1.1 s plan-latency floor at every
+    * SF). The only volume-dependent work is the caller's transition
+    * count. */
+  private[graft] def lumpableFold(c: DataFrame): DataFrame = {
     val spark = c.sparkSession
     import spark.implicits._
-    // K²-bounded driver fold (the markovState collect rule: the chain
-    // is type-cardinality-bounded by declaration, guarded at 256 —
+    // K²-bounded driver fold (the MarkovFrame.Chain collect rule: the
+    // chain is type-cardinality-bounded by declaration, guarded at 256 —
     // ≤ 65,536 count rows): the pair × target-block grid folds in
     // exact BigInt arithmetic on the driver instead of ~8 broadcast
     // joins of ≤K-row frames, shaving the plan-latency floor the
@@ -4184,7 +3829,7 @@ object EventAnalytics extends QueryModule {
     val types = (rows.map(_._1) ++ rows.map(_._2)).distinct
     require(types.length <= 256,
       s"lumpableFold: ${types.length} chain types exceed the declared " +
-        "bounded type space (the markovState 256 cap)")
+        "bounded type space (the Markov chain's 256 cap)")
     def block(t: String): String = t match {
       case "click" | "view" => "engagement"
       case "purchase" | "signup" => "conversion"
@@ -4281,16 +3926,7 @@ object EventAnalytics extends QueryModule {
             FROM j
             ORDER BY block, state_a, state_b, to_block"""),
     (spark, dir) => {
-      import spark.implicits._
-      val wU = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val c = t(spark, dir, "events")
-        .select($"user_id", $"event_id", $"event_type",
-          expr("unix_micros(ts)").as("ts_us"))
-        .withColumn("prev_type", lag($"event_type", 1).over(wU))
-        .where($"prev_type".isNotNull)
-        .groupBy($"prev_type", $"event_type".as("next_type"))
-        .agg(count(lit(1)).as("n"))
-      lumpableFold(c)
+      lumpableFold(MarkovFrame.transitions(t(spark, dir, "events")))
     })
 
   def all: Seq[Q] = Seq(funnel, retention, spikes, dauRolling, eventPaths,

@@ -656,25 +656,30 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       s"the split-bounds two-pass shape regressed to re-scans:\n$p")
   }
 
-  test("drift family: every member's formatted plan equals its plans/r21 " +
-      "pin, node, expression and plan ids stripped") {
-    // the pins were dumped by graft.tools.Explain (sf0.01, 8 shuffle
-    // partitions); the whole formatted plan is compared — operator tree,
-    // per-node outputs, window specs and exchange arguments — so a
-    // respelling of the family's shared frame must leave every plan as is
-    def norm(p: String): Seq[String] = p.trim.linesIterator
-      .map(_.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
-        .replaceAll("^\\(\\d+\\) ", "").replaceAll(" \\(\\d+\\)$", ""))
-      .toSeq
-    val parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try Seq("ad", "chi2", "cvm", "emd", "js", "ks", "mw", "psi", "tvd").foreach { m =>
-      val q = s"x_drift_$m"
-      val pin = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"plans/r21/${q}_parent.txt"))
-      val got = SparkEntry.queries(q)(spark, "/root/testdata/sf0.01").queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      assert(norm(got) == norm(pin), s"$q plan moved off its pin:\n$got")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
-  }
+  // Each family's members keep their plans through a respelling of the
+  // family's shared frame (DriftFrame, MarkovFrame): the pins were dumped
+  // by graft.tools.Explain (sf0.01, 8 shuffle partitions) before it, and
+  // the whole formatted plan is compared — operator tree, per-node
+  // outputs, window specs and exchange arguments.
+  private val planFamilies = Seq(
+    "drift" -> Seq("ad", "chi2", "cvm", "emd", "js", "ks", "mw", "psi", "tvd")
+      .map(m => s"x_drift_$m"),
+    "Markov" -> ("x_event_transitions" +: Seq("steady", "absorb", "absorb_to",
+      "reach", "mfpt", "entropy", "lumpable").map(m => s"x_markov_$m")))
+
+  private val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+
+  for ((family, members) <- planFamilies)
+    test(s"$family family: every member's formatted plan equals its plans/r21 " +
+        "pin, node, expression and plan ids stripped") {
+      val parts = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
+      try members.foreach { q =>
+        val pin = java.nio.file.Files.readString(
+          java.nio.file.Paths.get(s"plans/r21/${q}_parent.txt"))
+        val got = SparkEntry.queries(q)(spark, sf01).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        assert(PlanPins.norm(got) == PlanPins.norm(pin), s"$q plan moved off its pin:\n$got")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
+    }
 }

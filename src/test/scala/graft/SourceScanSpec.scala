@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the point get's driver read builds its parquet reader neither through
   * Spark's per-scan reader factory, which broadcasts the Hadoop conf on
   * every call, nor through parquet-mr's path builder, which creates a
-  * default Hadoop `Configuration` that searches the classpath. */
+  * default Hadoop `Configuration` that searches the classpath; and the
+  * Markov family's transition window and chain collect live once, in
+  * [[graft.queries.MarkovFrame]]. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -58,5 +60,30 @@ class SourceScanSpec extends AnyFunSuite {
     val writers = sources.collect { case (p, src)
       if src.contains("createOrReplaceTempFunction") || src.contains("registerFunction") => p }
     assert(writers.filterNot(allowed).isEmpty, writers.toSeq.sorted)
+  }
+
+  test("the Markov transition window is spelled once, in MarkovFrame, and one " +
+      "Markov chain collect is cached") {
+    assert(sources.size > 100, s"scanned ${sources.size} files under $root")
+    // the unframed (user_id; ts_us, event_id) window; the framed
+    // attribution windows (a rowsBetween follows) and x_event_paths'
+    // ts-ordered window are other windows
+    def c(name: String) = s"""(\\$$"$name"|col\\("$name"\\))"""
+    val userWindow = (s"""Window\\.partitionBy\\(${c("user_id")}\\)\\s*""" +
+      s"""\\.orderBy\\(${c("ts_us")},\\s*${c("event_id")}\\)(?!\\s*\\.rowsBetween)""").r
+    val windows = sources.map { case (p, src) => p -> userWindow.findAllIn(src).length }
+      .filter(_._2 > 0)
+    assert(windows == Map("graft/queries/MarkovFrame.scala" -> 1), windows)
+    // the DuckDB spelling: one CTE prefix per direction, plus the two
+    // oracle texts (x_event_transitions, x_markov_lumpable) whose layout
+    // differs from the shared prefixes
+    val sqlWindow = "OVER\\s*\\(PARTITION BY user_id ORDER BY ts_us, event_id\\)".r
+    val sql = sources.map { case (p, src) => p -> sqlWindow.findAllIn(src).length }
+      .filter(_._2 > 0)
+    assert(sql == Map("graft/queries/MarkovFrame.scala" -> 2,
+      "graft/queries/EventAnalytics.scala" -> 2), sql)
+    val keys = sources.map { case (p, src) => p -> count(src, "cachedLocal(s\"markov") }
+      .filter(_._2 > 0)
+    assert(keys == Map("graft/queries/MarkovFrame.scala" -> 1), keys)
   }
 }

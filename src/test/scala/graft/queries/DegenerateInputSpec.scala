@@ -808,6 +808,29 @@ class DegenerateInputSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("Markov chain type guard: 257 event types fail x_markov_steady and " +
+      "x_markov_absorb at construction; 256 types run") {
+    import spark.implicits._
+    val ts0 = Timestamp.valueOf("2026-01-01 00:00:00").getTime
+    def corpus(name: String, k: Int): String = {
+      val dir = tmpDir(name)
+      (0 until k).map(i =>
+        (i.toLong, new Timestamp(ts0 + i * 1000L), (i % 7).toLong, f"t$i%03d", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      dir
+    }
+    // one query per chain consumer: the steady (P) and absorbing (Q) reads
+    val wide = corpus("markov257", 257)
+    for (q <- Seq("x_markov_steady", "x_markov_absorb")) {
+      val e = intercept[IllegalArgumentException](SparkEntry.queries(q)(spark, wide))
+      assert(e.getMessage.contains("257 event types"), e.getMessage)
+    }
+    val full = corpus("markov256", 256)
+    for (q <- Seq("x_markov_steady", "x_markov_absorb"))
+      assert(SparkEntry.queries(q)(spark, full).collect().length == 256, q)
+  }
+
   test("x_markov_absorb: immediate absorption is EXACTLY one step; a " +
       "2-cycle replays the closed-form truncated Neumann value") {
     import spark.implicits._
