@@ -137,16 +137,24 @@ object TextOps extends QueryModule {
     * each consumer's own tail (components, PageRank, keep-best window,
     * rollups) stays live. */
   private[queries] def ngramPairs(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val path = QueryModule.cachedIndex(
-        s"ngrampairs:$dir", tableStamp(dir, "documents")) { p =>
-      LocalFs.write(ngramPairsBuild(spark, dir)).parquet(s"$p/pairs")
-    }
-    spark.read.parquet(s"$path/pairs")
+      : org.apache.spark.sql.DataFrame =
+    persistedPairs(spark, dir, "ngrampairs")(ngramPairsBuild(spark, dir))
+
+  /** The live chain behind [[ngramPairs]]' artifact: the shingle
+    * posting join plus the Jaccard ≥ 0.6 screen. */
+  private def ngramPairsBuild(spark: SparkSession, dir: String) = {
+    import spark.implicits._
+    shinglePairs(spark, dir)
+      .withColumn("jac_bp",
+        floor(($"inter" * 10000.0) / ($"a_sz" + $"b_sz" - $"inter")).cast("long"))
+      .where($"jac_bp" >= 6000)
+      .select($"a_id", $"b_id", $"jac_bp")
   }
 
-  /** The live posting-join chain behind [[ngramPairs]]' artifact. */
-  private def ngramPairsBuild(spark: SparkSession, dir: String) = {
+  /** The shingle posting join (a_id, b_id, a_sz, b_sz, inter): every
+    * same-lang doc pair sharing ≥ 1 3-token shingle, with both shingle
+    * set sizes and the intersection size. */
+  private def shinglePairs(spark: SparkSession, dir: String) = {
     import spark.implicits._
     val toks = barrier(t(spark, dir, "documents")
       .select($"doc_id", $"lang", Tokenizer.col.as("toks"))
@@ -169,10 +177,18 @@ object TextOps extends QueryModule {
     a.join(b, $"s" === $"s2" && $"a_lang" === $"b_lang" && $"a_id" < $"b_id")
       .groupBy($"a_id", $"b_id", $"a_sz", $"b_sz")
       .agg(count(lit(1)).as("inter"))
-      .withColumn("jac_bp",
-        floor(($"inter" * 10000.0) / ($"a_sz" + $"b_sz" - $"inter")).cast("long"))
-      .where($"jac_bp" >= 6000)
-      .select($"a_id", $"b_id", $"jac_bp")
+  }
+
+  /** A pair table persisted once per (JVM, documents generation) under
+    * `key` (QueryModule.cachedIndex; the stamp rebuilds it on a
+    * regeneration), read back from its parquet. */
+  private def persistedPairs(spark: SparkSession, dir: String, key: String)(
+      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val path = QueryModule.cachedIndex(
+        s"$key:$dir", tableStamp(dir, "documents")) { p =>
+      LocalFs.write(build).parquet(s"$p/pairs")
+    }
+    spark.read.parquet(s"$path/pairs")
   }
 
   /** Duplicate-cluster assignment: near-dup pairs → connected components
@@ -476,32 +492,9 @@ object TextOps extends QueryModule {
     * codegen kernel runs live in the per-generation build with its
     * algebra additionally pinned by WinnowSpec. */
   private[queries] def winnowPairs(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val path = QueryModule.cachedIndex(
-        s"winnowpairs:$dir", tableStamp(dir, "documents")) { p =>
-      LocalFs.write(winnowPairsBuild(spark, dir)).parquet(s"$p/pairs")
-    }
-    spark.read.parquet(s"$path/pairs")
-  }
-
-  /** The live posting-join chain behind [[winnowPairs]]' artifact. */
-  private def winnowPairsBuild(spark: SparkSession, dir: String) = {
-    import spark.implicits._
-    val post = barrier(t(spark, dir, "documents")
-      .select($"doc_id", explode(expr("winnowed_fingerprints(text)")).as("fp")))
-      .repartition($"fp")
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"fp")))
-      .where($"df" <= 1000)
-      .drop("df")
-    val a = post.select($"fp", $"doc_id".as("a_id"))
-    val b = post.select($"fp".as("fp2"), $"doc_id".as("b_id"))
-    a.join(b, $"fp" === $"fp2" && $"a_id" < $"b_id")
-      .groupBy($"a_id", $"b_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .where($"n_shared" >= 2)
-      .select($"a_id", $"b_id", $"n_shared".cast("long").as("n_shared"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    persistedPairs(spark, dir, "winnowpairs")(
+      sampledPairsBuild(spark, dir, "winnowed_fingerprints"))
 
   /** Tokenizer fertility per language — the eval behind tokenizer and
     * vocabulary choices: BPE-ish tokens per whitespace word and chars
@@ -614,25 +607,23 @@ object TextOps extends QueryModule {
     * x_dedup_simhash) that exercise the same machinery on every bench
     * run. */
   private[queries] def sampledPairs(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val path = QueryModule.cachedIndex(
-        s"sampledpairs:$dir", tableStamp(dir, "documents")) { p =>
-      LocalFs.write(sampledPairsBuild(spark, dir)).parquet(s"$p/pairs")
-    }
-    spark.read.parquet(s"$path/pairs")
-  }
+      : org.apache.spark.sql.DataFrame =
+    persistedPairs(spark, dir, "sampledpairs")(sampledPairsBuild(spark, dir))
 
-  /** The live posting-join chain behind [[sampledPairs]]' artifact
+  /** The live posting-join chain behind [[sampledPairs]]' artifact, and
+    * with `kernel` = winnowed_fingerprints behind [[winnowPairs]]':
+    * every pair sharing ≥ 2 df-capped fingerprints of `kernel`
     * (private[graft]: GraftExtensionsSpec pins its plan shape — the
     * fp-partitioned df window and the equi-join — where the live join
     * now lives). */
-  private[graft] def sampledPairsBuild(spark: SparkSession, dir: String) = {
+  private[graft] def sampledPairsBuild(spark: SparkSession, dir: String,
+      kernel: String = "sampled_fingerprints") = {
     import spark.implicits._
     graft.GraftFunctions.install(spark) // reached outside a query too
     // postings repartitioned on the join key: the boilerplate-df
     // window and both self-join legs all read ONE exchange
     val post = barrier(t(spark, dir, "documents")
-      .select($"doc_id", explode(expr("sampled_fingerprints(text)")).as("fp")))
+      .select($"doc_id", explode(expr(s"$kernel(text)")).as("fp")))
       .repartition($"fp")
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy($"fp")))
@@ -1518,31 +1509,8 @@ object TextOps extends QueryModule {
     * machinery end-to-end), so the artifact is never the only path
     * through it. */
   private def jacPairsTable(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val path = QueryModule.cachedIndex(
-        s"jacpairs:$dir", tableStamp(dir, "documents")) { pth =>
-      val toks = barrier(t(spark, dir, "documents")
-        .select($"doc_id", $"lang", Tokenizer.col.as("toks"))
-        .where(size($"toks") >= 3))
-      val sh = barrier(toks
-        .select($"doc_id", $"lang", expr("shingle_hashes(toks, 3)").as("sh"))
-        .withColumn("sz", size($"sh"))
-        .where($"sz" > 0))
-      val post = sh.select($"doc_id", $"lang", $"sz", explode($"sh").as("s"))
-        .repartition($"s", $"lang")
-      val a = post.select($"s", $"lang".as("a_lang"),
-        $"doc_id".as("a_id"), $"sz".as("a_sz"))
-      val b = post.select($"s".as("s2"), $"lang".as("b_lang"),
-        $"doc_id".as("b_id"), $"sz".as("b_sz"))
-      LocalFs.write(a.join(b, $"s" === $"s2" && $"a_lang" === $"b_lang" &&
-          $"a_id" < $"b_id")
-        .groupBy($"a_id", $"b_id", $"a_sz", $"b_sz")
-        .agg(count(lit(1)).as("inter")))
-        .parquet(s"$pth/pairs")
-    }
-    spark.read.parquet(s"$path/pairs")
-  }
+      : org.apache.spark.sql.DataFrame =
+    persistedPairs(spark, dir, "jacpairs")(shinglePairs(spark, dir))
 
   override def all: Seq[Q] = Seq(dedupExact, dedupNgram, dedupClusters,
     dedupFuzzy, textAnalysis, langId, qualityScore, tokenCount, fingerprint,

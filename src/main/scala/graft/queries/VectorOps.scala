@@ -1625,67 +1625,19 @@ object VectorOps extends QueryModule {
   /** Trained integer state of the PCA power-iteration twin, once per
     * (JVM, generation): per-dim truncating means m (centering) and the
     * ±10000-scaled leading-direction vector v after 3 scaled power
-    * steps. Each step: u_i = ⟨c_i, v⟩ per vector (one codegen vec_dot
-    * pass), p_d = Σ_i c_{i,d}·u_i (ONE wide 64-sum map-side-combined
-    * aggregate — the fused-vote shape, no explode), then the
-    * SCALE-INVARIANT renormalization v ← (p·10000) trunc-div max|p| on
-    * the DRIVER in exact Long arithmetic (p·10000 can exceed 2^53, so
-    * the multiply must leave doubles — 64 bounded values per step is
-    * the kmeansArithCents driver-traffic discipline). s = 0 (constant
-    * corpus ⇒ p ≡ 0) keeps v — the declared degenerate rule. Exactness
-    * holds while n·(2·max|q|)²·64·10000 < 2^53 — guarded LOUDLY below;
-    * at 100 TB PCA runs over a bounded sample anyway (the standard
+    * steps (PcaFrame.trainCentered). Each step: u_i = ⟨c_i, v⟩ per
+    * vector (one codegen vec_dot pass), p_d = Σ_i c_{i,d}·u_i (ONE wide
+    * 64-sum map-side-combined aggregate — the fused-vote shape, no
+    * explode), then the SCALE-INVARIANT renormalization v ← (p·10000)
+    * trunc-div max|p| on the DRIVER in exact Long arithmetic. Exactness
+    * holds while n·(2·max|q|)²·64·10000 < 2^53 — guarded LOUDLY; at
+    * 100 TB PCA runs over a bounded sample anyway (the standard
     * deployment), so the bound is an operating envelope, not a cap. */
   private[graft] def pcaArithState(spark: SparkSession, dir: String)
       : (Array[Long], Array[Long]) =
     QueryModule.cachedLocal(s"pcaarith:$dir", tableStamp(dir, "embeddings")) {
-      import spark.implicits._
-      val base = kmQuantized(spark, dir)
-      val absMax = expr((0 until 64).map(d => s"abs(qd[$d])")
-        .mkString("greatest(", ", ", ")"))
-      val statCols = count(lit(1)).as("n") +: max(absMax).as("maxq") +:
-        (0 until 64).map(d => sum(expr(s"qd[$d]")).as(s"s$d"))
-      val r = base.agg(statCols.head, statCols.tail: _*).collect().head
-      val n = r.getLong(0)
-      require(n > 0, "pcaArithState: embeddings table is empty")
-      val maxq = r.getDouble(1).toLong
-      // LOUD exactness guard (the minhashArith vv < 2^21 discipline):
-      // the per-step chain |p_d| ≤ n·(2·max|q|)·64·(2·max|q|)·10000
-      // must stay < 2^53 for the double-carried sums to BE integer
-      // arithmetic; beyond it Spark would round silently where the
-      // oracle's BIGINTs stay exact.
-      require(n.toDouble * (2.0 * maxq) * (2.0 * maxq) * 64.0 * 10000.0
-          < 9007199254740992.0, // 2^53
-        s"pcaArithState: n=$n, max|q|=$maxq exceed the exact-double " +
-          "envelope (n·(2·max|q|)²·64·10000 ≥ 2^53) — train over a sample")
-      val m = Array.tabulate(64)(d => r.getDouble(d + 2).toLong / n)
-      val mLit = m.map(x => s"${x}D").mkString("array(", ", ", ")")
-      val cExpr = s"transform(qd, (x, i) -> x - element_at($mLit, i + 1))"
-      var v = Array.fill(64)(1L)
-      for (_ <- 1 to 3) {
-        val vLit = v.map(x => s"${x}D").mkString("array(", ", ", ")")
-        val pCols = (0 until 64).map(d => sum(expr(s"c[$d] * u")).as(s"p$d"))
-        val pr = base.select(expr(cExpr).as("c"))
-          .withColumn("u", expr(s"vec_dot(c, $vLit)"))
-          .agg(pCols.head, pCols.tail: _*).collect().head
-        val p = Array.tabulate(64)(d => pr.getDouble(d).toLong)
-        val s = p.map(math.abs).max
-        if (s != 0L) v = p.map(x => x * 10000L / s)
-      }
-      (m, v)
+      PcaFrame.trainCentered(kmQuantized(spark, dir))
     }
-
-  /** The centering expression of the PCA family (qd − m as an array
-    * column) — shared by the batch twins and the streaming projection
-    * twin so all three serve the literally-same codegen expression. */
-  private[graft] def pcaCenterExpr(m: Array[Long]): String = {
-    val mLit = m.map(x => s"${x}D").mkString("array(", ", ", ")")
-    s"transform(qd, (x, i) -> x - element_at($mLit, i + 1))"
-  }
-
-  /** The trained direction as a double-array literal for vec_dot. */
-  private[graft] def pcaVLit(v: Array[Long]): String =
-    v.map(x => s"${x}D").mkString("array(", ", ", ")")
 
   /** ORACLE-BACKED PCA — the FIFTH trust-anchor training family
     * (after MinHash / SimHash+LSH / k-means / PQ): the leading
@@ -1718,69 +1670,12 @@ object VectorOps extends QueryModule {
     * 64-row stack of constants — no join, no window, no explode on
     * the corpus side (PlanShapeSpec pins it). Driver traffic is 64
     * bounded values per step. */
-  /** The shared CTE chain of the PCA oracle twins (quantize → per-dim
-    * trunc means → centered vectors → LIST-state power iteration →
-    * fin = the trained direction) — each twin appends its own read
-    * tail. Requires WITH RECURSIVE at the caller. */
-  private val pcaArithCtes =
-    """qv AS (SELECT vec_id, list_transform(embedding::DOUBLE[],
-                     x -> CAST(floor(x * 100.0) AS BIGINT)) AS q FROM embeddings),
-            px AS (SELECT unnest(list_transform(q,
-                     (x, i) -> {'x': x, 'i': i}), recursive := true) FROM qv),
-            sums AS (SELECT i, CAST(sum(x) AS BIGINT) AS s FROM px GROUP BY i),
-            nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM qv),
-            mv AS (SELECT list(s // n ORDER BY i) AS m FROM sums CROSS JOIN nn),
-            cv AS (SELECT vec_id, list_transform(q, (x, i) -> x - m[i]) AS c
-                   FROM qv CROSS JOIN mv),
-            vl AS (SELECT list(c ORDER BY vec_id) AS cs FROM cv),
-            it AS (
-              SELECT 0 AS step,
-                list_transform(range(1, 65), d -> CAST(1 AS BIGINT)) AS v
-              FROM (SELECT 1)
-              UNION ALL
-              SELECT step + 1,
-                CASE WHEN s = 0 THEN v ELSE
-                  list_transform(p, x -> CAST((x * 10000) // s AS BIGINT))
-                END AS v
-              FROM (SELECT step, v, p,
-                      list_max(list_transform(p, x -> abs(x))) AS s
-                    FROM (SELECT step, v,
-                            list_transform(v, (vd, d) -> CAST(
-                              list_sum(list_transform(cs, w ->
-                                w[d] * list_sum(list_transform(w,
-                                  (x, j) -> x * v[j])))) AS BIGINT)) AS p
-                          FROM it, vl))
-              WHERE step < 3),
-            fin AS (SELECT v FROM it ORDER BY step DESC LIMIT 1)"""
-
   private val pcaOracle = Q(
     "x_pca_oracle",
-    Some(s"""WITH RECURSIVE
-            $pcaArithCtes,
-            res AS (SELECT m, v,
-                      list_transform(v, (vd, d) -> CAST(
-                        list_sum(list_transform(cs, w ->
-                          w[d] * list_sum(list_transform(w,
-                            (x, j) -> x * v[j])))) AS BIGINT)) AS p
-                    FROM fin CROSS JOIN mv CROSS JOIN vl)
-            SELECT CAST(d AS BIGINT) AS dim, CAST(m[d] AS BIGINT) AS mean_q,
-              CAST(v[d] AS BIGINT) AS comp, CAST(p[d] AS BIGINT) AS proj_sum
-            FROM res CROSS JOIN (SELECT unnest(range(1, 65)) AS d)
-            ORDER BY dim"""),
+    Some(PcaFrame.oracleReadSql(1)),
     (spark, dir) => {
-      import spark.implicits._
       val (m, v) = pcaArithState(spark, dir)
-      val pCols = (0 until 64).map(d =>
-        sum(expr(s"c[$d] * u")).cast("long").as(s"p$d"))
-      kmQuantized(spark, dir)
-        .select(expr(pcaCenterExpr(m)).as("c"))
-        .withColumn("u", expr(s"vec_dot(c, ${pcaVLit(v)})"))
-        .agg(pCols.head, pCols.tail: _*)
-        .select(expr("stack(64, " + (0 until 64).map(d =>
-          s"CAST(${d + 1} AS BIGINT), CAST(${m(d)} AS BIGINT), " +
-            s"CAST(${v(d)} AS BIGINT), p$d").mkString(", ") +
-          ") AS (dim, mean_q, comp, proj_sum)"))
-        .orderBy($"dim")
+      PcaFrame.oracleRead(kmQuantized(spark, dir), m, Seq(v))
     })
 
   /** ORACLE-BACKED dominant-direction outliers — the PCA family's
@@ -1800,7 +1695,7 @@ object VectorOps extends QueryModule {
   private val pcaOutliers = Q(
     "x_pca_outliers",
     Some(s"""WITH RECURSIVE
-            $pcaArithCtes,
+            ${PcaFrame.oracleCtes(1)},
             u AS (SELECT vec_id, CAST(list_sum(list_transform(c,
                     (x, j) -> x * v[j])) AS BIGINT) AS proj
                   FROM cv CROSS JOIN fin),
@@ -1815,7 +1710,7 @@ object VectorOps extends QueryModule {
       val (m, v) = pcaArithState(spark, dir)
       val top = kmQuantized(spark, dir)
         .select($"vec_id",
-          expr(s"vec_dot(${pcaCenterExpr(m)}, ${pcaVLit(v)})")
+          expr(s"vec_dot(${PcaFrame.centerExpr(m)}, ${PcaFrame.vLit(v)})")
             .cast("long").as("proj"))
         .orderBy(abs($"proj").desc, $"vec_id").limit(10)
       // rank the 10 collected rows — a single-partition window over a
@@ -1829,119 +1724,20 @@ object VectorOps extends QueryModule {
 
   // ---- x_pca2_oracle: the SECOND direction by integer deflation ----
 
-  /** Re-quantization divisor of the deflated vectors (the magnitude
-    * worksheet below). Decimal, like the ×10000 renormalization. */
-  private val Pca2Requant = 10000000000L // 10^10
-
-  /** MAGNITUDE WORKSHEET (done BEFORE the SQL, per the r13 verdict's
-    * gate for this query — every stage must stay inside exact-double
-    * and BIGINT envelopes; maxq = max|floor(x·100)| ≤ 58 on the gate
-    * corpora, |c| ≤ 2·maxq after trunc-mean centering):
-    *
-    *   v (trained dir 1):  |v_d| ≤ 10⁴;  vv = Σv² ≤ 64·10⁸ = 6.4·10⁹
-    *   u = ⟨c, v⟩:         |u| ≤ 64·(2maxq)·10⁴ ≈ 7.4·10⁷   (exact ✓)
-    *   deflation c′_d = c_d·vv − v_d·u:
-    *     |c_d·vv| ≤ (2maxq)·6.4·10⁹ ≈ 7.5·10¹¹
-    *     |v_d·u|  ≤ 10⁴·7.4·10⁷     ≈ 7.4·10¹¹
-    *     |c′_d|   ≤ (2maxq)·(vv + 64·10⁸) ≤ (2maxq)·1.28·10¹⁰
-    *                ≈ 1.5·10¹² ≪ 2^53                        (exact ✓)
-    *   re-quantization c₂ = trunc(c′ / 10¹⁰):
-    *     |c₂| ≤ (2maxq)·1.28 ≈ 2.56·maxq — BACK IN dir-1's magnitude
-    *     class (≤ ~149 at maxq 58), which is the whole point: without
-    *     it the power-step chain multiplies by |c′|² ≈ 10²⁴ and leaves
-    *     every envelope. Trunc-div is exact and identical in both
-    *     engines (Spark DIV ≡ DuckDB `//` on BIGINT, the r12 measured
-    *     rule, negatives included).
-    *   power step on c₂ (the dir-1 chain with maxc2 MEASURED):
-    *     |p_d| ≤ n·maxc2²·64·10⁴ — guarded loudly below
-    *     (n = 2000, maxc2 = 149 → 2.8·10¹³, ~320× headroom)
-    *   driver renorm (p·10⁴) trunc-div max|p|: p·10⁴ ≤ 2.8·10¹⁷ —
-    *     PAST 2^53, so it stays in driver Longs (< 2^63 ✓), exactly
-    *     like dir 1.
-    *
-    * Deflated frame: qd → centered c → u = ⟨c,v⟩ → c₂, all one narrow
-    * codegen projection chain (no join — m, v, vv ride as literals). */
-  private def pcaDeflated(spark: SparkSession, dir: String,
-      m: Array[Long], v: Array[Long]): org.apache.spark.sql.DataFrame = {
-    val vv = v.map(x => x * x).sum
-    kmQuantized(spark, dir)
-      .select(expr(pcaCenterExpr(m)).as("c"))
-      .withColumn("u", expr(s"vec_dot(c, ${pcaVLit(v)})"))
-      .select(expr(
-        s"""transform(c, (x, j) -> CAST(CAST(x * ${vv}D
-           |  - element_at(${pcaVLit(v)}, j + 1) * u AS BIGINT)
-           |  DIV ${Pca2Requant}L AS DOUBLE))""".stripMargin).as("c2"))
-  }
-
-  /** Trained second direction (integer deflation + the dir-1 power
-    * loop), once per (JVM, generation). See the worksheet above; the
-    * loud envelope guard uses the MEASURED max|c₂|, not the worksheet
-    * bound, so a corpus outside the modeled range fails clearly. */
+  /** Trained second direction (PcaFrame's re-quantized deflation + the
+    * dir-1 power loop), once per (JVM, generation). The loud envelope
+    * guard uses the MEASURED max|c₂| (PcaFrame's worksheet), so a
+    * corpus outside the modeled range fails clearly. */
   private[graft] def pca2ArithState(spark: SparkSession, dir: String)
       : (Array[Long], Array[Long], Array[Long]) =
     QueryModule.cachedLocal(s"pca2arith:$dir", tableStamp(dir, "embeddings")) {
-      import spark.implicits._
       val (m, v) = pcaArithState(spark, dir)
-      val c2f = pcaDeflated(spark, dir, m, v)
-      val absMax = expr((0 until 64).map(d => s"abs(c2[$d])")
-        .mkString("greatest(", ", ", ")"))
-      val g = c2f.agg(count(lit(1)).as("n"), max(absMax).as("mx"))
-        .collect().head
-      val n = g.getLong(0)
-      val maxc2 = g.getDouble(1).toLong
-      require(n.toDouble * maxc2 * maxc2 * 64.0 * 10000.0
-          < 9007199254740992.0, // 2^53
-        s"pca2ArithState: n=$n, max|c2|=$maxc2 exceed the exact-double " +
-          "envelope (n·max|c2|²·64·10000 ≥ 2^53) — raise Pca2Requant or " +
-          "train over a sample")
-      var v2 = Array.fill(64)(1L)
-      for (_ <- 1 to 3) {
-        val pCols = (0 until 64).map(d => sum(expr(s"c2[$d] * u2")).as(s"p$d"))
-        val pr = c2f.withColumn("u2", expr(s"vec_dot(c2, ${pcaVLit(v2)})"))
-          .agg(pCols.head, pCols.tail: _*).collect().head
-        val p = Array.tabulate(64)(d => pr.getDouble(d).toLong)
-        val s = p.map(math.abs).max
-        if (s != 0L) v2 = p.map(x => x * 10000L / s)
-      }
-      (m, v, v2)
+      (m, v, PcaFrame.trainDeflated(kmQuantized(spark, dir), m, Seq(v)))
     }
-
-  /** The deflation + second power loop as DuckDB CTEs appended to
-    * [[pcaArithCtes]] (requires WITH RECURSIVE): c₂ = (c·vv − v·⟨c,v⟩)
-    * trunc-div 10¹⁰, then the dir-1 LIST-state loop verbatim over c₂. */
-  private val pca2ArithCtes =
-    s"""dfl AS (SELECT vec_id, list_transform(c, (x, j) ->
-              (x * vv - v[j] * cu) // $Pca2Requant) AS c2
-            FROM (SELECT vec_id, c, v,
-                    CAST(list_sum(list_transform(c, (x, j) -> x * v[j]))
-                      AS BIGINT) AS cu,
-                    CAST(list_sum(list_transform(v, x -> x * x))
-                      AS BIGINT) AS vv
-                  FROM cv CROSS JOIN fin)),
-            vl2 AS (SELECT list(c2 ORDER BY vec_id) AS cs2 FROM dfl),
-            it2 AS (
-              SELECT 0 AS step,
-                list_transform(range(1, 65), d -> CAST(1 AS BIGINT)) AS v2
-              FROM (SELECT 1)
-              UNION ALL
-              SELECT step + 1,
-                CASE WHEN s = 0 THEN v2 ELSE
-                  list_transform(p, x -> CAST((x * 10000) // s AS BIGINT))
-                END AS v2
-              FROM (SELECT step, v2, p,
-                      list_max(list_transform(p, x -> abs(x))) AS s
-                    FROM (SELECT step, v2,
-                            list_transform(v2, (vd, d) -> CAST(
-                              list_sum(list_transform(cs2, w ->
-                                w[d] * list_sum(list_transform(w,
-                                  (x, j) -> x * v2[j])))) AS BIGINT)) AS p
-                          FROM it2, vl2))
-              WHERE step < 3),
-            fin2 AS (SELECT v2 FROM it2 ORDER BY step DESC LIMIT 1)"""
 
   /** ORACLE-BACKED second principal direction — extends the PCA
     * trust-anchor family past the leading direction (VERDICT r13 #3,
-    * gated on the magnitude worksheet above): the classical
+    * gated on PcaFrame's magnitude worksheet): the classical
     * deflate-then-iterate scheme (Hotelling 1933's successive
     * extraction, the textbook power-deflation method) made
     * integer-exact. Deflation removes dir 1 WITHOUT normalizing it:
@@ -1949,16 +1745,16 @@ object VectorOps extends QueryModule {
     * ⟨v,v⟩ — a positive scalar that leaves the second direction
     * untouched — so no division, no float; the one new step vs dir 1
     * is the trunc-div re-quantization c₂ = c′ DIV 10¹⁰ that returns
-    * the magnitudes to dir-1's envelope (see the worksheet — without
-    * it the power chain multiplies by |v|² ≈ 10⁸ per component and
-    * leaves 2^53). Both engines replay the deflation, the
-    * re-quantization and all three power steps bit-for-bit; output per
-    * dim additionally recomputes the corpus projection sum
-    * Σᵢ c₂ᵢ_d·⟨c₂ᵢ, v₂⟩ live, the x_pca_oracle pattern. The
-    * quantized deflation is the declared algebra: truncation makes v₂
-    * a second direction of the RE-QUANTIZED deflated corpus (exactly
-    * reproducible everywhere) rather than a float PCA's — the
-    * trust-anchor split all five training families use.
+    * the magnitudes to dir-1's envelope (without it the power chain
+    * multiplies by |v|² ≈ 10⁸ per component and leaves 2^53). Both
+    * engines replay the deflation, the re-quantization and all three
+    * power steps bit-for-bit; output per dim additionally recomputes
+    * the corpus projection sum Σᵢ c₂ᵢ_d·⟨c₂ᵢ, v₂⟩ live, the
+    * x_pca_oracle pattern. The quantized deflation is the declared
+    * algebra: truncation makes v₂ a second direction of the
+    * RE-QUANTIZED deflated corpus (exactly reproducible everywhere)
+    * rather than a float PCA's — the trust-anchor split all five
+    * training families use.
     *
     * Scale shape (Spark): dir-1 training reused (cachedLocal); the
     * deflated frame is ONE narrow codegen projection chain (m, v, vv
@@ -1968,148 +1764,37 @@ object VectorOps extends QueryModule {
     * traffic: 64 values per step plus the 2-value envelope probe. */
   private val pca2Oracle = Q(
     "x_pca2_oracle",
-    Some(s"""WITH RECURSIVE
-            $pcaArithCtes,
-            $pca2ArithCtes,
-            res2 AS (SELECT v2,
-                      list_transform(v2, (vd, d) -> CAST(
-                        list_sum(list_transform(cs2, w ->
-                          w[d] * list_sum(list_transform(w,
-                            (x, j) -> x * v2[j])))) AS BIGINT)) AS p2
-                    FROM fin2 CROSS JOIN vl2)
-            SELECT CAST(d AS BIGINT) AS dim, CAST(v2[d] AS BIGINT) AS comp2,
-              CAST(p2[d] AS BIGINT) AS proj2_sum
-            FROM res2 CROSS JOIN (SELECT unnest(range(1, 65)) AS d)
-            ORDER BY dim"""),
+    Some(PcaFrame.oracleReadSql(2)),
     (spark, dir) => {
-      import spark.implicits._
       val (m, v, v2) = pca2ArithState(spark, dir)
-      val pCols = (0 until 64).map(d =>
-        sum(expr(s"c2[$d] * u2")).cast("long").as(s"p$d"))
-      pcaDeflated(spark, dir, m, v)
-        .withColumn("u2", expr(s"vec_dot(c2, ${pcaVLit(v2)})"))
-        .agg(pCols.head, pCols.tail: _*)
-        .select(expr("stack(64, " + (0 until 64).map(d =>
-          s"CAST(${d + 1} AS BIGINT), CAST(${v2(d)} AS BIGINT), p$d")
-          .mkString(", ") + ") AS (dim, comp2, proj2_sum)"))
-        .orderBy($"dim")
+      PcaFrame.oracleRead(kmQuantized(spark, dir), m, Seq(v, v2))
     })
 
   // ---- x_pca3_oracle: the THIRD direction — the deflation composes ----
 
-  /** THIRD-DIRECTION WORKSHEET (fresh, as gated by the r14 verdict —
-    * "only with the worksheet first"; numbers at gate scale, maxq ≤ 58,
-    * measured max|c₂| ≤ 149 at sf0.1):
-    *
-    *   COMPOSITION LAW of one re-quantized deflation: with |w|∞ ≤ 10⁴
-    *   and ww = Σw² ≤ 64·10⁸, deflating a frame of magnitude class M
-    *   gives |c′| ≤ M·ww + 10⁴·(64·M·10⁴) = M·(ww + 64·10⁸)
-    *   ≤ M·1.28·10¹⁰, so after the ÷10¹⁰ re-quantization the class is
-    *   M·1.28 — the divisor eats the 10¹⁰, and each direction GROWS
-    *   THE ENVELOPE BY ≤ 1.28×, not by the |v|² ≈ 10⁸ the unquantized
-    *   chain would (this is why the r14 concern "each power multiplies
-    *   the bp scale" resolves benignly: the re-quantization is part of
-    *   the per-direction recipe, so the chain is geometric at 1.28).
-    *
-    *   dir-3 instance: |c₃| ≤ 1.28·max|c₂| ≈ 191; intermediates
-    *   |c₂·vv₂| and |v₂·u₂| ≤ 149·6.4·10⁹ ≈ 9.5·10¹¹ ≪ 2^53 (exact ✓);
-    *   u₂ = ⟨c₂,v₂⟩ ≤ 64·149·10⁴ ≈ 9.5·10⁷ (exact ✓).
-    *   power step: n·maxc₃²·64·10⁴ at n = 2000, maxc₃ = 191 →
-    *   4.7·10¹³, ~190× headroom under 2^53 (guarded on the MEASURED
-    *   max|c₃| below, like dir 2). Driver renorm p·10⁴ < 2^63 ✓.
-    *   A hypothetical dir 4 (class ≈ 245) would still fit with ~115×
-    *   headroom — the family's practical boundary at gate scale is
-    *   maxc ≈ 2650 (n·maxc²·64·10⁴ = 2^53), ≈ dir 9; directions past
-    *   the third add no analytic value on 64-dim embeddings, so the
-    *   declared surface stops here. */
-  private def pcaDeflated3(spark: SparkSession, dir: String,
-      m: Array[Long], v: Array[Long], v2: Array[Long])
-      : org.apache.spark.sql.DataFrame = {
-    val vv2 = v2.map(x => x * x).sum
-    pcaDeflated(spark, dir, m, v)
-      .withColumn("u2", expr(s"vec_dot(c2, ${pcaVLit(v2)})"))
-      .select(expr(
-        s"""transform(c2, (x, j) -> CAST(CAST(x * ${vv2}D
-           |  - element_at(${pcaVLit(v2)}, j + 1) * u2 AS BIGINT)
-           |  DIV ${Pca2Requant}L AS DOUBLE))""".stripMargin).as("c3"))
-  }
-
   /** Trained third direction: dir-2's deflation recipe applied ONCE
     * MORE (deflate c₂ by v₂, re-quantize, run the dir-1 power loop) —
-    * see the composition worksheet above. Loud guard on the MEASURED
-    * max|c₃|, the dir-2 discipline. */
+    * the composition law in PcaFrame's worksheet (each level grows the
+    * envelope by ≤ 1.28×). Loud guard on the MEASURED max|c₃|, the
+    * dir-2 discipline. */
   private[graft] def pca3ArithState(spark: SparkSession, dir: String)
       : (Array[Long], Array[Long], Array[Long], Array[Long]) =
     QueryModule.cachedLocal(s"pca3arith:$dir", tableStamp(dir, "embeddings")) {
-      import spark.implicits._
       val (m, v, v2) = pca2ArithState(spark, dir)
-      val c3f = pcaDeflated3(spark, dir, m, v, v2)
-      val absMax = expr((0 until 64).map(d => s"abs(c3[$d])")
-        .mkString("greatest(", ", ", ")"))
-      val g = c3f.agg(count(lit(1)).as("n"), max(absMax).as("mx"))
-        .collect().head
-      val n = g.getLong(0)
-      val maxc3 = g.getDouble(1).toLong
-      require(n.toDouble * maxc3 * maxc3 * 64.0 * 10000.0
-          < 9007199254740992.0, // 2^53
-        s"pca3ArithState: n=$n, max|c3|=$maxc3 exceed the exact-double " +
-          "envelope (n·max|c3|²·64·10000 ≥ 2^53) — raise Pca2Requant or " +
-          "train over a sample")
-      var v3 = Array.fill(64)(1L)
-      for (_ <- 1 to 3) {
-        val pCols = (0 until 64).map(d => sum(expr(s"c3[$d] * u3")).as(s"p$d"))
-        val pr = c3f.withColumn("u3", expr(s"vec_dot(c3, ${pcaVLit(v3)})"))
-          .agg(pCols.head, pCols.tail: _*).collect().head
-        val p = Array.tabulate(64)(d => pr.getDouble(d).toLong)
-        val s = p.map(math.abs).max
-        if (s != 0L) v3 = p.map(x => x * 10000L / s)
-      }
-      (m, v, v2, v3)
+      (m, v, v2, PcaFrame.trainDeflated(kmQuantized(spark, dir), m, Seq(v, v2)))
     }
 
-  /** Second deflation + third power loop as DuckDB CTEs appended to
-    * [[pca2ArithCtes]]: literally the dfl/it2 shapes one level up. */
-  private val pca3ArithCtes =
-    s"""dfl3 AS (SELECT vec_id, list_transform(c2, (x, j) ->
-              (x * vv2 - v2[j] * cu2) // $Pca2Requant) AS c3
-            FROM (SELECT vec_id, c2, v2,
-                    CAST(list_sum(list_transform(c2, (x, j) -> x * v2[j]))
-                      AS BIGINT) AS cu2,
-                    CAST(list_sum(list_transform(v2, x -> x * x))
-                      AS BIGINT) AS vv2
-                  FROM dfl CROSS JOIN fin2)),
-            vl3 AS (SELECT list(c3 ORDER BY vec_id) AS cs3 FROM dfl3),
-            it3 AS (
-              SELECT 0 AS step,
-                list_transform(range(1, 65), d -> CAST(1 AS BIGINT)) AS v3
-              FROM (SELECT 1)
-              UNION ALL
-              SELECT step + 1,
-                CASE WHEN s = 0 THEN v3 ELSE
-                  list_transform(p, x -> CAST((x * 10000) // s AS BIGINT))
-                END AS v3
-              FROM (SELECT step, v3, p,
-                      list_max(list_transform(p, x -> abs(x))) AS s
-                    FROM (SELECT step, v3,
-                            list_transform(v3, (vd, d) -> CAST(
-                              list_sum(list_transform(cs3, w ->
-                                w[d] * list_sum(list_transform(w,
-                                  (x, j) -> x * v3[j])))) AS BIGINT)) AS p
-                          FROM it3, vl3))
-              WHERE step < 3),
-            fin3 AS (SELECT v3 FROM it3 ORDER BY step DESC LIMIT 1)"""
-
   /** ORACLE-BACKED third principal direction — the deflation recipe's
-    * second composition (VERDICT r14 #5, shipped because the fresh
-    * worksheet above shows the envelope chain is GEOMETRIC AT 1.28×
-    * per direction, not multiplicative in |v|²): deflate the deflated
-    * corpus by v₂ exactly as dir 2 deflated by v₁, re-quantize with
-    * the same 10¹⁰ divisor, run the same 3-step scaled power loop.
-    * Both engines replay every stage bit-for-bit; output per dim pairs
-    * the trained component with the LIVE corpus-recomputed projection
-    * sum over the twice-deflated frame (the family pattern). The
-    * independent reference (TrainingOracleAlgebraSpec.refPca3) guards
-    * against a shared-bug hash-match.
+    * second composition (VERDICT r14 #5, shipped because the worksheet
+    * shows the envelope chain is GEOMETRIC AT 1.28× per direction, not
+    * multiplicative in |v|²): deflate the deflated corpus by v₂ exactly
+    * as dir 2 deflated by v₁, re-quantize with the same 10¹⁰ divisor,
+    * run the same 3-step scaled power loop. Both engines replay every
+    * stage bit-for-bit; output per dim pairs the trained component
+    * with the LIVE corpus-recomputed projection sum over the
+    * twice-deflated frame (the family pattern). The independent
+    * reference (TrainingOracleAlgebraSpec.refPca3) guards against a
+    * shared-bug hash-match.
     *
     * Scale shape: identical to x_pca2_oracle plus one more narrow
     * deflation stage in the same codegen projection chain (v₂, vv₂
@@ -2117,32 +1802,10 @@ object VectorOps extends QueryModule {
     * in PlanShapeSpec). */
   private val pca3Oracle = Q(
     "x_pca3_oracle",
-    Some(s"""WITH RECURSIVE
-            $pcaArithCtes,
-            $pca2ArithCtes,
-            $pca3ArithCtes,
-            res3 AS (SELECT v3,
-                      list_transform(v3, (vd, d) -> CAST(
-                        list_sum(list_transform(cs3, w ->
-                          w[d] * list_sum(list_transform(w,
-                            (x, j) -> x * v3[j])))) AS BIGINT)) AS p3
-                    FROM fin3 CROSS JOIN vl3)
-            SELECT CAST(d AS BIGINT) AS dim, CAST(v3[d] AS BIGINT) AS comp3,
-              CAST(p3[d] AS BIGINT) AS proj3_sum
-            FROM res3 CROSS JOIN (SELECT unnest(range(1, 65)) AS d)
-            ORDER BY dim"""),
+    Some(PcaFrame.oracleReadSql(3)),
     (spark, dir) => {
-      import spark.implicits._
       val (m, v, v2, v3) = pca3ArithState(spark, dir)
-      val pCols = (0 until 64).map(d =>
-        sum(expr(s"c3[$d] * u3")).cast("long").as(s"p$d"))
-      pcaDeflated3(spark, dir, m, v, v2)
-        .withColumn("u3", expr(s"vec_dot(c3, ${pcaVLit(v3)})"))
-        .agg(pCols.head, pCols.tail: _*)
-        .select(expr("stack(64, " + (0 until 64).map(d =>
-          s"CAST(${d + 1} AS BIGINT), CAST(${v3(d)} AS BIGINT), p$d")
-          .mkString(", ") + ") AS (dim, comp3, proj3_sum)"))
-        .orderBy($"dim")
+      PcaFrame.oracleRead(kmQuantized(spark, dir), m, Seq(v, v2, v3))
     })
 
   /** ORACLE-BACKED PCA energy decomposition — the "variance explained"
@@ -2178,30 +1841,8 @@ object VectorOps extends QueryModule {
   private val pcaEnergy = Q(
     "x_pca_energy",
     Some(s"""WITH RECURSIVE
-            $pcaArithCtes,
-            $pca2ArithCtes,
-            $pca3ArithCtes,
-            s1 AS (SELECT CAST(list_sum(list_transform(c, x -> x * x))
-                     AS BIGINT) AS cc,
-                     CAST(list_sum(list_transform(c, (x, j) -> x * v[j]))
-                       AS BIGINT) AS u,
-                     CAST(list_sum(list_transform(v, x -> x * x)) // 10000
-                       AS BIGINT) AS vvq
-                   FROM cv CROSS JOIN fin),
-            s2 AS (SELECT CAST(list_sum(list_transform(c2, x -> x * x))
-                     AS BIGINT) AS cc,
-                     CAST(list_sum(list_transform(c2, (x, j) -> x * v2[j]))
-                       AS BIGINT) AS u,
-                     CAST(list_sum(list_transform(v2, x -> x * x)) // 10000
-                       AS BIGINT) AS vvq
-                   FROM dfl CROSS JOIN fin2),
-            s3 AS (SELECT CAST(list_sum(list_transform(c3, x -> x * x))
-                     AS BIGINT) AS cc,
-                     CAST(list_sum(list_transform(c3, (x, j) -> x * v3[j]))
-                       AS BIGINT) AS u,
-                     CAST(list_sum(list_transform(v3, x -> x * x)) // 10000
-                       AS BIGINT) AS vvq
-                   FROM dfl3 CROSS JOIN fin3),
+            ${PcaFrame.oracleCtes(3)},
+            ${(1 to 3).map(PcaFrame.oracleStageSql).mkString(",\n            ")},
             ex AS (
               SELECT 1 AS dir, CAST(sum(cc) AS BIGINT) AS frame_energy,
                 CAST(sum((u * u) // 10000) AS BIGINT) AS qe,
@@ -2224,11 +1865,13 @@ object VectorOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val (m, v, v2, v3) = pca3ArithState(spark, dir)
-      def stage(dirNo: Long, frame: org.apache.spark.sql.DataFrame,
-          fcol: String, w: Array[Long]): org.apache.spark.sql.DataFrame = {
+      val vs = Seq(v, v2, v3)
+      (1 to 3).map { k =>
+        val w = vs(k - 1)
+        val fcol = PcaFrame.c(k)
         val vvq = w.map(x => x * x).sum / 10000L
-        val agg = frame
-          .withColumn("u", expr(s"vec_dot($fcol, ${pcaVLit(w)})"))
+        val agg = PcaFrame.level(kmQuantized(spark, dir), m, vs.take(k - 1))
+          .withColumn("u", expr(s"vec_dot($fcol, ${PcaFrame.vLit(w)})"))
           .select(expr(s"vec_dot($fcol, $fcol)").as("cc"),
             expr("(CAST(u AS BIGINT) * CAST(u AS BIGINT)) DIV 10000")
               .as("uq"))
@@ -2236,16 +1879,12 @@ object VectorOps extends QueryModule {
             sum($"uq").as("qe"))
         val proj =
           if (vvq == 0L) lit(0L) else expr(s"qe DIV ${vvq}L")
-        agg.select(lit(dirNo).as("dir"), $"frame_energy",
+        agg.select(lit(k.toLong).as("dir"), $"frame_energy",
           proj.as("proj_energy"),
           when(lit(vvq == 0L) || $"frame_energy" === 0L, 0L)
             .otherwise(expr(s"((qe DIV ${vvq}L) * 10000) DIV frame_energy"))
             .cast("long").as("explained_bp"))
-      }
-      val f1 = kmQuantized(spark, dir).select(expr(pcaCenterExpr(m)).as("c"))
-      stage(1L, f1, "c", v)
-        .unionAll(stage(2L, pcaDeflated(spark, dir, m, v), "c2", v2))
-        .unionAll(stage(3L, pcaDeflated3(spark, dir, m, v, v2), "c3", v3))
+      }.reduce(_ unionAll _)
         .orderBy($"dir")
     })
 

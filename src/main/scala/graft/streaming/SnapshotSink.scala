@@ -1,11 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Versioned-snapshot table sink for Complete-mode streaming artifacts
-  * (the shared mechanics of [[StreamingSketch]] and
-  * [[StreamingThetaSketch]]): each micro-batch writes the WHOLE
-  * artifact to a fresh `outDir/v=<batchId>` dir, retains the previous
+  * (the shared mechanics of the seven snapshot twins, [[StreamingSketch]]
+  * and [[StreamingThetaSketch]] among them): each micro-batch writes the
+  * WHOLE artifact to a fresh `outDir/v=<batchId>` dir, retains the previous
   * committed snapshot, and prunes only strictly-older ones — readers
   * get snapshot isolation with one batch of read grace and no
   * atomic-rename assumption (see [[StreamingSketch]]'s scaladoc for
@@ -15,9 +16,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * buys trivial idempotence. */
 object SnapshotSink {
 
+  /** Start `df` as a Complete-mode streaming query checkpointed under
+    * `checkpoint`, committing each micro-batch's whole result as a
+    * snapshot under `outDir`. */
+  def start(df: DataFrame, checkpoint: String, outDir: String): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Complete())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // new snapshot first, prune after — and only snapshots OLDER
+        // than batchId-1: the previous committed snapshot survives one
+        // more batch so a reader that resolved it pre-commit finishes
+        // its scan on intact files (read grace of one full batch). A
+        // replayed batch finding its own committed dir skips the write:
+        // overwriting in place would delete files under a reader
+        // pinned to that exact path, and Complete-mode state makes the
+        // existing snapshot already byte-correct.
+        commit(batch, outDir, batchId)
+      }
+      .start()
+
   /** foreachBatch body: commit `batch` as snapshot `batchId` under
     * `outDir`, then prune snapshots older than batchId-1. */
-  def commit(batch: DataFrame, outDir: String, batchId: Long): Unit = {
+  private def commit(batch: DataFrame, outDir: String, batchId: Long): Unit = {
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = root.getFileSystem(
       batch.sparkSession.sparkContext.hadoopConfiguration)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.EmbeddingQuantizer
 
@@ -47,7 +47,7 @@ object StreamingKCenterCover {
       outDir: String,
       checkpoint: String): StreamingQuery = {
     graft.GraftFunctions.install(embStream.sparkSession)
-    embStream
+    SnapshotSink.start(embStream
       .select(
         EmbeddingQuantizer.col
           .as("qd"))
@@ -63,14 +63,7 @@ object StreamingKCenterCover {
       // slice — so 0 is the semantically-correct served value, not a
       // sentinel.
       .agg(count(lit(1)).as("n_vectors"),
-        coalesce(max(col("d2")), lit(0L)).as("cover_d2"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotSink.commit(batch, outDir, batchId)
-      }
-      .start()
+        coalesce(max(col("d2")), lit(0L)).as("cover_d2")), checkpoint, outDir)
   }
 
   /** The artifact's read path: the (n_vectors, cover_d2) row from the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.EmbeddingQuantizer
 
@@ -45,20 +45,13 @@ object StreamingKMeansAssign {
       outDir: String,
       checkpoint: String): StreamingQuery = {
     graft.GraftFunctions.install(embStream.sparkSession)
-    embStream
+    SnapshotSink.start(embStream
       .select(col("vec_id"),
         EmbeddingQuantizer.col
           .as("qd"))
       .withColumn("cid", graft.queries.VectorOps.kmeansCidCol(cents))
       .groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_members"), sum(col("vec_id")).as("sum_ids"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotSink.commit(batch, outDir, batchId)
-      }
-      .start()
+      .agg(count(lit(1)).as("n_members"), sum(col("vec_id")).as("sum_ids")), checkpoint, outDir)
   }
 
   /** The artifact's read path: the NEWEST committed snapshot's per-cell

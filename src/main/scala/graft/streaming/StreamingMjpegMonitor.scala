@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.multimodal.{MediaPipeline, MediaRow}
 
@@ -53,7 +53,7 @@ object StreamingMjpegMonitor {
       stride: Int,
       outDir: String,
       checkpoint: String): StreamingQuery =
-    MediaPipeline.decodeFrames(media, stride).toDF()
+    SnapshotSink.start(MediaPipeline.decodeFrames(media, stride).toDF()
       .join(broadcast(expected), "media_id")
       .select(col("media_id"), col("n_frames"), col("n_decoded"),
         col("n_bad"),
@@ -68,14 +68,7 @@ object StreamingMjpegMonitor {
         max(when(col("n_bad") === 0, col("luma_err_bp"))).as("max_err_bp"),
         expr("""CASE WHEN count_if(n_bad = 0) = 0 THEN NULL
                 ELSE sum(CASE WHEN n_bad = 0 THEN luma_err_bp END)
-                     DIV count_if(n_bad = 0) END""").as("mean_err_bp"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotSink.commit(batch, outDir, batchId)
-      }
-      .start()
+                     DIV count_if(n_bad = 0) END""").as("mean_err_bp")), checkpoint, outDir)
 
   /** The live band's read path: the one-row trust table from the
     * newest COMMITTED snapshot (in-flight writes invisible — the

@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.EmbeddingQuantizer
+import graft.queries.PcaFrame
 
 /** Online principal-direction projection — the 22nd streaming twin and
   * the SECOND over a trained model ([[StreamingKMeansAssign]]'s
@@ -18,7 +19,7 @@ import graft.functions.EmbeddingQuantizer
   * through [[SnapshotSink]].
   *
   * Trust chain: the centering and projection expressions are the batch
-  * query's own columns (VectorOps.pcaCenterExpr / pcaVLit — the
+  * query's own columns (PcaFrame.centerExpr / vLit — the
   * literally-same codegen expression), and the batch artifact the live
   * rollup must equal is itself ORACLE-HASH-MATCHED, so the spec's
   * exact equality pins stream ≡ batch ≡ DuckDB for a second
@@ -70,27 +71,20 @@ object StreamingPcaProject {
     // arrival would serve a silently-wrong projection, the exact
     // failure mode the guard exists to prevent.
     val envB = 118000L
-    embStream
+    SnapshotSink.start(embStream
       .select(col("vec_id"),
         EmbeddingQuantizer.col
           .as("qd"))
-      .select(expr(graft.queries.VectorOps.pcaCenterExpr(m)).as("c0"))
+      .select(expr(PcaFrame.centerExpr(m)).as("c0"))
       .select(expr(
         s"""IF(forall(c0, x -> abs(x) <= ${envB}D), c0,
            |raise_error(concat('StreamingPcaProject: arrival exceeds the ',
            |'trained exact-double envelope (|c| > $envB) — off-manifold ',
            |'vector; retrain or widen the quantization before serving')))"""
           .stripMargin.replace("\n", " ")).as("c"))
-      .withColumn("u", expr(s"vec_dot(c, ${graft.queries.VectorOps.pcaVLit(v)})"))
+      .withColumn("u", expr(s"vec_dot(c, ${PcaFrame.vLit(v)})"))
       .groupBy()
-      .agg(count(lit(1)).as("n_vectors"), pCols: _*)
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotSink.commit(batch, outDir, batchId)
-      }
-      .start()
+      .agg(count(lit(1)).as("n_vectors"), pCols: _*), checkpoint, outDir)
   }
 
   /** The artifact's read path: (dim, proj_sum) rows from the NEWEST

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Live QUANTILE-sketch maintenance — the streaming twin of
   * x_sketch_quantiles (19th twin), completing the live-artifact family
@@ -30,7 +30,7 @@ object StreamingQuantileSketch {
       events: DataFrame,
       outDir: String,
       checkpoint: String): StreamingQuery =
-    events
+    SnapshotSink.start(events
       .select(col("event_type"),
         expr("CAST(floor(value * 100) AS BIGINT)").as("cents"))
       .withColumn("bucket", expr(
@@ -38,14 +38,7 @@ object StreamingQuantileSketch {
                 ELSE (length(bin(cents)) - 5) * 32
                      + shiftright(cents, length(bin(cents)) - 6) - 32 END"""))
       .groupBy(col("event_type"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotSink.commit(batch, outDir, batchId)
-      }
-      .start()
+      .agg(count(lit(1)).as("c")), checkpoint, outDir)
 
   /** The artifact's read path — same rank arithmetic as the batch
     * query: p50/p95/p99 lower bounds per event_type from the NEWEST

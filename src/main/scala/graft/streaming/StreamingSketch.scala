@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Live mergeable-sketch maintenance — the streaming twin of
   * x_sketch_union: the per-(day, event_type) HLL sketch table is kept
@@ -53,25 +53,10 @@ object StreamingSketch {
       events: DataFrame,
       outDir: String,
       checkpoint: String): StreamingQuery =
-    events
+    SnapshotSink.start(events
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"),
-        count(lit(1)).as("n_events"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // new snapshot first, prune after — and only snapshots OLDER
-        // than batchId-1: the previous committed snapshot survives one
-        // more batch so a reader that resolved it pre-commit finishes
-        // its scan on intact files (read grace of one full batch). A
-        // replayed batch finding its own committed dir skips the write:
-        // overwriting in place would delete files under a reader
-        // pinned to that exact path, and Complete-mode state makes the
-        // existing snapshot already byte-correct.
-        SnapshotSink.commit(batch, outDir, batchId)
-      }
-      .start()
+        count(lit(1)).as("n_events")), checkpoint, outDir)
 
   /** The artifact's read path (shared with the batch-built table):
     * distinct-user estimate per event_type across all days in the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Live THETA-sketch maintenance — the streaming twin of
   * x_sketch_intersect (18th twin), completing the live-artifact pair
@@ -38,16 +38,9 @@ object StreamingThetaSketch {
       events: DataFrame,
       outDir: String,
       checkpoint: String): StreamingQuery =
-    events
+    SnapshotSink.start(events
       .groupBy(col("event_type"))
-      .agg(expr("theta_sketch_agg(user_id, 12)").as("sk"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotSink.commit(batch, outDir, batchId)
-      }
-      .start()
+      .agg(expr("theta_sketch_agg(user_id, 12)").as("sk")), checkpoint, outDir)
 
   /** The artifact's read path — identical shape to x_sketch_intersect:
     * audience intersection / difference / union estimates for every

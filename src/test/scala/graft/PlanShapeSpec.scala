@@ -665,7 +665,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     "drift" -> Seq("ad", "chi2", "cvm", "emd", "js", "ks", "mw", "psi", "tvd")
       .map(m => s"x_drift_$m"),
     "Markov" -> ("x_event_transitions" +: Seq("steady", "absorb", "absorb_to",
-      "reach", "mfpt", "entropy", "lumpable").map(m => s"x_markov_$m")))
+      "reach", "mfpt", "entropy", "lumpable").map(m => s"x_markov_$m")),
+    "PCA" -> Seq("x_pca_oracle", "x_pca2_oracle", "x_pca3_oracle", "x_pca_energy",
+      "x_pca_outliers"))
 
   private val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
 

@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every call, nor through parquet-mr's path builder, which creates a
   * default Hadoop `Configuration` that searches the classpath; and the
   * Markov family's transition window and chain collect live once, in
-  * [[graft.queries.MarkovFrame]]. */
+  * [[graft.queries.MarkovFrame]]; and the PCA family's power loop and
+  * re-quantized deflation live once, in [[graft.queries.PcaFrame]]. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -85,5 +86,21 @@ class SourceScanSpec extends AnyFunSuite {
     val keys = sources.map { case (p, src) => p -> count(src, "cachedLocal(s\"markov") }
       .filter(_._2 > 0)
     assert(keys == Map("graft/queries/MarkovFrame.scala" -> 1), keys)
+  }
+
+  test("the PCA power loop and deflation are spelled once, in PcaFrame") {
+    assert(sources.size > 100, s"scanned ${sources.size} files under $root")
+    def hits(needle: String) =
+      sources.map { case (p, src) => p -> count(src, needle) }.filter(_._2 > 0)
+    val pca = "graft/queries/PcaFrame.scala"
+    // the driver renormalization: PcaFrame's power loop and MarkovFrame's
+    // steady loop
+    assert(hits("x * 10000L / s") == Map(pca -> 1,
+      "graft/queries/MarkovFrame.scala" -> 1), hits("x * 10000L / s"))
+    val sqlRenorm = "list_transform(p, x -> CAST((x * 10000) // s AS BIGINT))"
+    assert(hits(sqlRenorm) == Map(pca -> 1), hits(sqlRenorm))
+    // the re-quantized deflation, in Spark and in DuckDB
+    assert(hits("DIV ${Pca2Requant}L") == Map(pca -> 1), hits("DIV ${Pca2Requant}L"))
+    assert(hits("// $Pca2Requant)") == Map(pca -> 1), hits("// $Pca2Requant)"))
   }
 }

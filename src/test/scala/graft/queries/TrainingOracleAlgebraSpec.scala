@@ -408,6 +408,44 @@ class TrainingOracleAlgebraSpec extends AnyFunSuite with SparkTestBase {
     assert(v.length == 64)
   }
 
+  test("the PCA envelope guards fail LOUDLY past 2^53, and a table just " +
+      "under the bound trains") {
+    def envelope(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("exceed the exact-double envelope"), e.getMessage)
+    }
+    val zeros = Array.fill(64)(0)
+    // level 1's a-priori bound n·(2·max|q|)²·64·10⁴ < 2^53 ≈ 9.007·10¹⁵:
+    // at n = 3, max|q| = 34,500 gives 9.14·10¹⁵ and 34,000 gives 8.88·10¹⁵
+    def table(q: Int) = writeEmb(Seq(0L -> (q +: zeros.tail), 1L -> zeros,
+      2L -> (-q +: zeros.tail)))
+    val over = table(34500)
+    envelope(VectorOps.pcaArithState(spark, over))
+    envelope(VectorOps.pca2ArithState(spark, over))
+    envelope(VectorOps.pca3ArithState(spark, over))
+    envelope(graft.SparkEntry.queries("x_pca_energy")(spark, over))
+    val under = table(34000)
+    val (m, v, v2, v3) = VectorOps.pca3ArithState(spark, under)
+    assert(m.forall(_ == 0L) && v.sameElements(10000L +: Array.fill(63)(0L)), v.mkString(","))
+    // deflating by v leaves nothing: every later level keeps v⁰ = 1⁶⁴
+    assert(v2.forall(_ == 1L) && v3.forall(_ == 1L))
+    assert(graft.SparkEntry.queries("x_pca_energy")(spark, under).collect().length == 3)
+    // levels 2 and 3 guard the MEASURED max|c_k| of their deflated frame:
+    // c = (M, 0, …) deflated by w = 10⁴·1⁶⁴ is c₂ = (0.63·M, −0.01·M, …),
+    // and c₂ deflated by w again is c₃ = 0.64·c₂ (⟨c₂, w⟩ = 0); at
+    // M = 200,000 both pass max|c| = 68,500, the bound at n = 3
+    graft.GraftFunctions.install(spark)
+    val qd = spark.read.parquet(s"${table(200000)}/embeddings.parquet")
+      .select(graft.functions.EmbeddingQuantizer.col.as("qd"))
+    val (m0, w) = (Array.fill(64)(0L), Array.fill(64)(10000L))
+    val e2 = intercept[IllegalArgumentException](PcaFrame.trainDeflated(qd, m0, Seq(w)))
+    assert(e2.getMessage.contains("pca2ArithState: n=3, max|c2|=126000 exceed " +
+      "the exact-double envelope"), e2.getMessage)
+    val e3 = intercept[IllegalArgumentException](PcaFrame.trainDeflated(qd, m0, Seq(w, w)))
+    assert(e3.getMessage.contains("pca3ArithState: n=3, max|c3|=80640 exceed " +
+      "the exact-double envelope"), e3.getMessage)
+  }
+
   test("pca edge branches: constant corpus → p ≡ 0 keeps v⁰; negative-mean " +
       "truncation matches") {
     // every vector identical → exact trunc-mean equals the value, every
