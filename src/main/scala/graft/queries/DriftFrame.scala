@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   *     ascending cents plus the type totals ne/nl, with types whose
   *     early or late half is empty dropped (never a division by zero).
   * Each member adds only its own statistic; the DuckDB side shares the
-  * same `d`, `dr`, `s` CTEs through [[oracleCtes]]. The streaming twins'
-  * image of the frame is graft.streaming.HistogramDrift. */
+  * same `d`, `dr`, `s` CTEs through [[oracleCtes]]. The banded members
+  * (psi, chi2) share one decile-band rollup, [[bands]] and
+  * [[oracleBands]]. The streaming twins' image of the frame is
+  * graft.streaming.HistogramDrift. */
 object DriftFrame {
 
   /** DuckDB CTEs `d` (quantized, day-stamped events), `dr` (first and
@@ -36,6 +38,26 @@ object DriftFrame {
                     CAST(sum(CASE WHEN day > (d0 + d1) // 2
                              THEN 1 ELSE 0 END) AS BIGINT) AS la
                   FROM d CROSS JOIN dr GROUP BY 1, 2)"""
+
+  /** [[oracleCtes]] plus `c` (each level's running early count cume and
+    * the type totals ne, nl) and `b`, the [[bands]] rollup. A member
+    * appends its SELECT over `b`. */
+  val oracleBands: String = oracleCtes + """,
+            c AS (SELECT event_type, ea, la,
+                    CAST(sum(ea) OVER w AS BIGINT) AS cume,
+                    CAST(sum(ea) OVER t AS BIGINT) AS ne,
+                    CAST(sum(la) OVER t AS BIGINT) AS nl
+                  FROM s
+                  WINDOW w AS (PARTITION BY event_type ORDER BY cents
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+                   t AS (PARTITION BY event_type)),
+            b AS (SELECT event_type, ne, nl,
+                    least(9, greatest(0,
+                      (CAST(cume - 1 AS HUGEINT) * 10) // ne)) AS bin,
+                    CAST(sum(ea) AS BIGINT) AS ce,
+                    CAST(sum(la) AS BIGINT) AS cl
+                  FROM c WHERE ne > 0 AND nl > 0
+                  GROUP BY 1, 2, 3, 4)"""
 
   /** (event_type, cents, ea, la) over the `events` table: one
     * map-side-combined (type, cents) aggregate, with the one-row split
@@ -77,4 +99,17 @@ object DriftFrame {
         ++ Seq(sum(col("ea")).over(whole).as("ne"), sum(col("la")).over(whole).as("nl"))
         ++ tail): _*)
       .where(col("ne") > 0 && col("nl") > 0)
+
+  /** (event_type, ne, nl, bin, ce, cl) over the `events` table: TEN
+    * equal-population bands of the early (reference) half, assigned to
+    * each level by integer ECDF arithmetic — bin = least(9, greatest(0,
+    * (cume − 1)·10 DIV ne)) — with each band's early and late counts
+    * (x_drift_psi, x_drift_chi2). */
+  def bands(events: DataFrame): DataFrame =
+    levels(histogram(events), Seq(col("ea"), col("la"), cume))
+      .withColumn("bin",
+        expr("least(9, greatest(0,"
+          + " (CAST(cume - 1 AS DECIMAL(38,0)) * 10) DIV ne))"))
+      .groupBy(col("event_type"), col("ne"), col("nl"), col("bin"))
+      .agg(sum(col("ea")).as("ce"), sum(col("la")).as("cl"))
 }

@@ -1060,22 +1060,7 @@ object EventAnalytics extends QueryModule {
     * exchange), then a ≤ 10-row-per-type rollup. */
   private val driftPsi = Q(
     "x_drift_psi",
-    Some(DriftFrame.oracleCtes + """,
-            c AS (SELECT event_type, ea, la,
-                    CAST(sum(ea) OVER w AS BIGINT) AS cume,
-                    CAST(sum(ea) OVER t AS BIGINT) AS ne,
-                    CAST(sum(la) OVER t AS BIGINT) AS nl
-                  FROM s
-                  WINDOW w AS (PARTITION BY event_type ORDER BY cents
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                   t AS (PARTITION BY event_type)),
-            b AS (SELECT event_type, ne, nl,
-                    least(9, greatest(0,
-                      (CAST(cume - 1 AS HUGEINT) * 10) // ne)) AS bin,
-                    CAST(sum(ea) AS BIGINT) AS ce,
-                    CAST(sum(la) AS BIGINT) AS cl
-                  FROM c WHERE ne > 0 AND nl > 0
-                  GROUP BY 1, 2, 3, 4)
+    Some(DriftFrame.oracleBands + """
             SELECT event_type, CAST(ne AS BIGINT) AS n_early,
               CAST(nl AS BIGINT) AS n_late,
               CAST(count(*) AS BIGINT) AS n_bins,
@@ -1088,13 +1073,7 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val s = DriftFrame.histogram(t(spark, dir, "events"))
-      DriftFrame.levels(s, Seq($"ea", $"la", DriftFrame.cume))
-        .withColumn("bin",
-          expr("least(9, greatest(0,"
-            + " (CAST(cume - 1 AS DECIMAL(38,0)) * 10) DIV ne))"))
-        .groupBy($"event_type", $"ne", $"nl", $"bin")
-        .agg(sum($"ea").as("ce"), sum($"la").as("cl"))
+      DriftFrame.bands(t(spark, dir, "events"))
         .groupBy($"event_type", $"ne", $"nl")
         .agg(count(lit(1)).as("n_bins"),
           round(sum(
@@ -1129,22 +1108,7 @@ object EventAnalytics extends QueryModule {
     * aggregate and type-keyed window, a ≤ 10-row-per-type rollup. */
   private val driftChi2 = Q(
     "x_drift_chi2",
-    Some(DriftFrame.oracleCtes + """,
-            c AS (SELECT event_type, ea, la,
-                    CAST(sum(ea) OVER w AS BIGINT) AS cume,
-                    CAST(sum(ea) OVER t AS BIGINT) AS ne,
-                    CAST(sum(la) OVER t AS BIGINT) AS nl
-                  FROM s
-                  WINDOW w AS (PARTITION BY event_type ORDER BY cents
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                   t AS (PARTITION BY event_type)),
-            b AS (SELECT event_type, ne, nl,
-                    least(9, greatest(0,
-                      (CAST(cume - 1 AS HUGEINT) * 10) // ne)) AS bin,
-                    CAST(sum(ea) AS BIGINT) AS ce,
-                    CAST(sum(la) AS BIGINT) AS cl
-                  FROM c WHERE ne > 0 AND nl > 0
-                  GROUP BY 1, 2, 3, 4)
+    Some(DriftFrame.oracleBands + """
             SELECT event_type, CAST(ne AS BIGINT) AS n_early,
               CAST(nl AS BIGINT) AS n_late,
               CAST(count(*) - 1 AS BIGINT) AS dof,
@@ -1157,13 +1121,7 @@ object EventAnalytics extends QueryModule {
             ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val s = DriftFrame.histogram(t(spark, dir, "events"))
-      DriftFrame.levels(s, Seq($"ea", $"la", DriftFrame.cume))
-        .withColumn("bin",
-          expr("least(9, greatest(0,"
-            + " (CAST(cume - 1 AS DECIMAL(38,0)) * 10) DIV ne))"))
-        .groupBy($"event_type", $"ne", $"nl", $"bin")
-        .agg(sum($"ea").as("ce"), sum($"la").as("cl"))
+      DriftFrame.bands(t(spark, dir, "events"))
         .groupBy($"event_type", $"ne", $"nl")
         .agg((count(lit(1)) - 1).as("dof"),
           round(sum(
@@ -1736,12 +1694,7 @@ object EventAnalytics extends QueryModule {
     * corpus window. */
   private val forecastSes = Q(
     "x_forecast_ses",
-    Some("""WITH d AS (SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-                CAST(count(*) AS BIGINT) AS n
-              FROM events GROUP BY 1, 2),
-            s AS (SELECT event_type,
-                    list(CAST(n AS DOUBLE) ORDER BY day) AS xs
-                  FROM d GROUP BY 1),
+    Some(ForecastFrame.oracleSeries(ForecastFrame.oracleCount, "CAST(n AS DOUBLE)") + """,
             -- running levels as a LIST fold of scalars (a struct
             -- accumulator is unsafe here: DuckDB's lambda evaluates
             -- struct_pack fields sequentially, so a later field can see
@@ -1758,17 +1711,11 @@ object EventAnalytics extends QueryModule {
             FROM f ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .groupBy($"event_type", expr("unix_millis(ts) DIV 86400000").as("day"))
-        .agg(count(lit(1)).as("n"))
-      d.groupBy($"event_type")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(day, n))), p -> CAST(p.n AS DOUBLE))")
-          .as("xs"))
-        .select($"event_type", size($"xs").cast("long").as("n_days"),
-          // xs[0]: Spark's [] is 0-based (slice() is 1-based) — the
-          // seed is the FIRST day's count
-          expr("""aggregate(slice(xs, 2, size(xs) - 1),
+      val xs = ForecastFrame.series(ForecastFrame.daily(t(spark, dir, "events")), "n",
+        "CAST(p.n AS DOUBLE)")
+      // xs[0]: Spark's [] is 0-based (slice() is 1-based) — the seed is
+      // the FIRST day's count
+      ForecastFrame.folded(xs, expr("""aggregate(slice(xs, 2, size(xs) - 1),
                     named_struct('s', xs[0], 'e', CAST(0.0 AS DOUBLE)),
                     (acc, x) -> named_struct('s', (acc.s + x) / 2,
                       'e', acc.e + abs(x - acc.s)))""").as("r"))
@@ -1952,24 +1899,7 @@ object EventAnalytics extends QueryModule {
     * corpus window). */
   private val forecastHolt = Q(
     "x_forecast_holt",
-    Some("""WITH d AS (SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-                CAST(count(*) AS BIGINT) AS n
-              FROM events GROUP BY 1, 2),
-            s AS (SELECT event_type, list(n ORDER BY day) AS xs
-                  FROM d GROUP BY 1),
-            f AS (SELECT event_type, len(xs) AS n_days,
-                    list_reduce(list_transform(xs, x -> [x]),
-                      (acc, x) -> CASE WHEN len(acc) = 1
-                        THEN [(x[1] * 10000 + acc[1] * 10000 + 0) // 2,
-                              ((x[1] * 10000 + acc[1] * 10000 + 0) // 2
-                                - acc[1] * 10000 + 0) // 2,
-                              abs(x[1] * 10000 - acc[1] * 10000 - 0)]
-                        ELSE [(x[1] * 10000 + acc[1] + acc[2]) // 2,
-                              ((x[1] * 10000 + acc[1] + acc[2]) // 2
-                                - acc[1] + acc[2]) // 2,
-                              acc[3] + abs(x[1] * 10000 - acc[1] - acc[2])]
-                        END) AS st
-                  FROM s)
+    Some(ForecastFrame.oracleHolt + """
             SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
               CAST(CASE WHEN n_days = 1 THEN 10000 * st[1] ELSE st[1] END
                 AS BIGINT) AS level_bp,
@@ -1982,16 +1912,8 @@ object EventAnalytics extends QueryModule {
             FROM f ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .groupBy($"event_type", expr("unix_millis(ts) DIV 86400000").as("day"))
-        .agg(count(lit(1)).as("n"))
-      d.groupBy($"event_type")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(day, n))), p -> p.n)")
-          .as("xs"))
-        .select($"event_type", size($"xs").cast("long").as("n_days"),
-          expr(ForecastArith.holtFoldSql)
-            .as("st"))
+      val xs = ForecastFrame.series(ForecastFrame.daily(t(spark, dir, "events")), "n", "p.n")
+      ForecastFrame.folded(xs, expr(ForecastFrame.holtFoldSql).as("st"))
         .select($"event_type", $"n_days",
           $"st.l".as("level_bp"), $"st.b".as("trend_bp"),
           ($"st.l" + $"st.b").as("forecast_next_bp"),
@@ -2032,27 +1954,7 @@ object EventAnalytics extends QueryModule {
     * (type, day) aggregate, then a per-type 3-long sequential fold. */
   private val forecastHoltDamped = Q(
     "x_forecast_holt_damped",
-    Some("""WITH d AS (SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-                CAST(count(*) AS BIGINT) AS n
-              FROM events GROUP BY 1, 2),
-            s AS (SELECT event_type, list(n ORDER BY day) AS xs
-                  FROM d GROUP BY 1),
-            f AS (SELECT event_type, len(xs) AS n_days,
-                    list_reduce(list_transform(xs, x -> [x]),
-                      (acc, x) -> CASE WHEN len(acc) = 1
-                        THEN [(x[1] * 10000 + acc[1] * 10000 + 0) // 2,
-                              ((x[1] * 10000 + acc[1] * 10000 + 0) // 2
-                                - acc[1] * 10000 + 0) // 2,
-                              abs(x[1] * 10000 - acc[1] * 10000 - 0)]
-                        ELSE [(x[1] * 10000 + acc[1]
-                                + (acc[2] * 3) // 4) // 2,
-                              ((x[1] * 10000 + acc[1]
-                                + (acc[2] * 3) // 4) // 2
-                                - acc[1] + (acc[2] * 3) // 4) // 2,
-                              acc[3] + abs(x[1] * 10000 - acc[1]
-                                - (acc[2] * 3) // 4)]
-                        END) AS st
-                  FROM s)
+    Some(ForecastFrame.oracleDamped + """
             SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
               CAST(CASE WHEN n_days = 1 THEN 10000 * st[1] ELSE st[1] END
                 AS BIGINT) AS level_bp,
@@ -2072,16 +1974,8 @@ object EventAnalytics extends QueryModule {
             FROM f ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .groupBy($"event_type", expr("unix_millis(ts) DIV 86400000").as("day"))
-        .agg(count(lit(1)).as("n"))
-      d.groupBy($"event_type")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(day, n))), p -> p.n)")
-          .as("xs"))
-        .select($"event_type", size($"xs").cast("long").as("n_days"),
-          expr(ForecastArith.dampedFoldSql)
-            .as("st"))
+      val xs = ForecastFrame.series(ForecastFrame.daily(t(spark, dir, "events")), "n", "p.n")
+      ForecastFrame.folded(xs, expr(ForecastFrame.dampedFoldSql).as("st"))
         .select($"event_type", $"n_days",
           $"st.l".as("level_bp"), $"st.b".as("trend_bp"),
           expr("st.l + (st.b * 3) DIV 4").as("forecast_next_bp"),
@@ -3372,41 +3266,7 @@ object EventAnalytics extends QueryModule {
     * the model family, not the engine. */
   private val forecastHoltWinters = Q(
     "x_forecast_holt_winters",
-    Some("""WITH d AS (SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-                CAST(count(*) AS BIGINT) AS n
-              FROM events GROUP BY 1, 2),
-            s AS (SELECT event_type,
-                    list(struct_pack(day := day, n := n) ORDER BY day) AS xs
-                  FROM d GROUP BY 1),
-            f AS (SELECT event_type, len(xs) AS n_days,
-                    xs[len(xs)].day AS last_day,
-                    list_reduce(list_transform(xs, x -> [x.day, x.n]),
-                      (acc, x) -> CASE WHEN len(acc) = 2 THEN
-                        [(x[2] * 10000 + acc[2] * 10000) // 2,
-                         ((x[2] * 10000 + acc[2] * 10000) // 2
-                           - acc[2] * 10000) // 2]
-                        || list_transform(range(0, 7), j ->
-                             CASE WHEN j = x[1] % 7
-                             THEN (x[2] * 10000
-                               - (x[2] * 10000 + acc[2] * 10000) // 2) // 2
-                             ELSE CAST(0 AS BIGINT) END)
-                        || [abs(x[2] * 10000 - acc[2] * 10000)]
-                      ELSE
-                        [(x[2] * 10000 - acc[3 + (x[1] % 7)]
-                            + acc[1] + acc[2]) // 2,
-                         ((x[2] * 10000 - acc[3 + (x[1] % 7)]
-                            + acc[1] + acc[2]) // 2 - acc[1] + acc[2]) // 2]
-                        || list_transform(range(0, 7), j ->
-                             CASE WHEN j = x[1] % 7
-                             THEN (x[2] * 10000
-                               - (x[2] * 10000 - acc[3 + (x[1] % 7)]
-                                  + acc[1] + acc[2]) // 2
-                               + acc[3 + j]) // 2
-                             ELSE acc[3 + j] END)
-                        || [acc[10] + abs(x[2] * 10000 - acc[1] - acc[2]
-                             - acc[3 + (x[1] % 7)])]
-                      END) AS st
-                  FROM s)
+    Some(ForecastFrame.oracleHw + """
             SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
               CAST(CASE WHEN n_days = 1 THEN st[2] * 10000 ELSE st[1] END
                 AS BIGINT) AS level_bp,
@@ -3426,15 +3286,9 @@ object EventAnalytics extends QueryModule {
             FROM f ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .groupBy($"event_type", expr("unix_millis(ts) DIV 86400000").as("day"))
-        .agg(count(lit(1)).as("n"))
-      d.groupBy($"event_type")
-        .agg(expr("sort_array(collect_list(struct(day, n)))").as("xs"))
-        .select($"event_type", size($"xs").cast("long").as("n_days"),
-          expr("element_at(xs, -1).day").as("last_day"),
-          expr(ForecastArith.hwFoldSql)
-            .as("st"))
+      val xs = ForecastFrame.series(ForecastFrame.daily(t(spark, dir, "events")), "n")
+      ForecastFrame.folded(xs, expr("element_at(xs, -1).day").as("last_day"),
+          expr(ForecastFrame.hwFoldSql).as("st"))
         .select($"event_type", $"n_days",
           $"st.l".as("level_bp"), $"st.b".as("trend_bp"),
           expr("element_at(st.s, CAST((last_day + 1) % 7 AS INT) + 1)")
@@ -3493,40 +3347,7 @@ object EventAnalytics extends QueryModule {
     * ≤ span-days arrays; nothing downstream depends on event volume. */
   private val forecastHwLog = Q(
     "x_forecast_hw_log",
-    Some("""WITH d AS (SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-                ln(CAST(count(*) AS DOUBLE)) AS x
-              FROM events GROUP BY 1, 2),
-            s AS (SELECT event_type,
-                    list(struct_pack(day := day, x := x) ORDER BY day) AS xs
-                  FROM d GROUP BY 1),
-            f AS (SELECT event_type, len(xs) AS n_days,
-                    xs[len(xs)].day AS last_day,
-                    list_reduce(list_transform(xs, x ->
-                        [CAST(x.day AS DOUBLE), x.x]),
-                      (acc, x) -> CASE WHEN len(acc) = 2 THEN
-                        [(x[2] + acc[2]) / 2.0,
-                         ((x[2] + acc[2]) / 2.0 - acc[2]) / 2.0]
-                        || list_transform(range(0, 7), j ->
-                             CASE WHEN j = CAST(x[1] AS BIGINT) % 7
-                             THEN (x[2] - (x[2] + acc[2]) / 2.0) / 2.0
-                             ELSE CAST(0 AS DOUBLE) END)
-                        || [abs(x[2] - acc[2])]
-                      ELSE
-                        [(x[2] - acc[3 + (CAST(x[1] AS BIGINT) % 7)]
-                            + acc[1] + acc[2]) / 2.0,
-                         ((x[2] - acc[3 + (CAST(x[1] AS BIGINT) % 7)]
-                            + acc[1] + acc[2]) / 2.0 - acc[1] + acc[2]) / 2.0]
-                        || list_transform(range(0, 7), j ->
-                             CASE WHEN j = CAST(x[1] AS BIGINT) % 7
-                             THEN (x[2]
-                               - (x[2] - acc[3 + (CAST(x[1] AS BIGINT) % 7)]
-                                  + acc[1] + acc[2]) / 2.0
-                               + acc[3 + j]) / 2.0
-                             ELSE acc[3 + j] END)
-                        || [acc[10] + abs(x[2] - acc[1] - acc[2]
-                             - acc[3 + (CAST(x[1] AS BIGINT) % 7)])]
-                      END) AS st
-                  FROM s)
+    Some(ForecastFrame.oracleHwLog + """
             SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
               round(CASE WHEN n_days = 1 THEN st[2] ELSE st[1] END, 4)
                 + 0.0 AS level_ln,
@@ -3546,35 +3367,10 @@ object EventAnalytics extends QueryModule {
             FROM f ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .groupBy($"event_type", expr("unix_millis(ts) DIV 86400000").as("day"))
-        .agg(expr("ln(CAST(count(*) AS DOUBLE))").as("x"))
-      d.groupBy($"event_type")
-        .agg(expr("sort_array(collect_list(struct(day, x)))").as("xs"))
-        .select($"event_type", size($"xs").cast("long").as("n_days"),
-          expr("element_at(xs, -1).day").as("last_day"),
-          expr("""aggregate(slice(xs, 2, size(xs) - 1),
-                    named_struct('l', xs[0].x, 'b', CAST(0.0 AS DOUBLE),
-                      's', array_repeat(CAST(0.0 AS DOUBLE), 7),
-                      'e', CAST(0.0 AS DOUBLE)),
-                    (acc, x) -> named_struct(
-                      'l', (x.x
-                        - element_at(acc.s, CAST(x.day % 7 AS INT) + 1)
-                        + acc.l + acc.b) / 2.0D,
-                      'b', ((x.x
-                        - element_at(acc.s, CAST(x.day % 7 AS INT) + 1)
-                        + acc.l + acc.b) / 2.0D - acc.l + acc.b) / 2.0D,
-                      's', transform(acc.s, (v, j) ->
-                        IF(j = CAST(x.day % 7 AS INT),
-                           (x.x
-                             - (x.x
-                                - element_at(acc.s, CAST(x.day % 7 AS INT) + 1)
-                                + acc.l + acc.b) / 2.0D
-                             + v) / 2.0D,
-                           v)),
-                      'e', acc.e + abs(x.x - acc.l - acc.b
-                        - element_at(acc.s, CAST(x.day % 7 AS INT) + 1))))""")
-            .as("st"))
+      val xs = ForecastFrame.series(ForecastFrame.daily(t(spark, dir, "events"),
+        expr("ln(CAST(count(*) AS DOUBLE))").as("x")), "x")
+      ForecastFrame.folded(xs, expr("element_at(xs, -1).day").as("last_day"),
+          expr(ForecastFrame.hwLogFoldSql).as("st"))
         .select($"event_type", $"n_days",
           (round($"st.l", 4) + 0.0).as("level_ln"),
           when($"n_days" === 1, 0.0)
@@ -3635,9 +3431,7 @@ object EventAnalytics extends QueryModule {
     * of the first aggregate depends on event volume. */
   private val weekdayAnova = Q(
     "x_weekday_anova",
-    Some("""WITH d AS (SELECT event_type, epoch_ms(ts) // 86400000 AS day,
-                CAST(count(*) AS BIGINT) AS n
-              FROM events GROUP BY 1, 2),
+    Some(ForecastFrame.oracleDaily(ForecastFrame.oracleCount) + """,
             g AS (SELECT event_type, day % 7 AS wd,
                     CAST(count(*) AS BIGINT) AS m,
                     CAST(sum(n) AS BIGINT) AS sg,
@@ -3669,10 +3463,8 @@ object EventAnalytics extends QueryModule {
             FROM b ORDER BY event_type"""),
     (spark, dir) => {
       import spark.implicits._
-      val d = t(spark, dir, "events")
-        .groupBy($"event_type", expr("unix_millis(ts) DIV 86400000").as("day"))
-        .agg(count(lit(1)).as("n"))
-      val g = d.groupBy($"event_type", expr("day % 7").as("wd"))
+      val g = ForecastFrame.daily(t(spark, dir, "events"))
+        .groupBy($"event_type", expr("day % 7").as("wd"))
         .agg(count(lit(1)).as("m"), sum($"n").as("sg"),
           sum(expr("CAST(n AS DECIMAL(38,0)) * n")).as("qg"))
       val a = g.groupBy($"event_type")

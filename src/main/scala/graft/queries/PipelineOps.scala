@@ -105,11 +105,11 @@ object PipelineOps extends QueryModule {
       // build the sketch DISTRIBUTED, then bind the (numBits/8-byte,
       // corpus-size-independent) result as a constant predicate —
       // might_contain requires a constant/scalar-subquery sketch. The
-      // bytes are cached per JVM per table generation (cachedBytes):
+      // bytes are cached per JVM per table generation (cachedLocal):
       // the benchmark set is STATIC, so its sketch is a build-nightly
       // artifact, not per-invocation work — the lifecycle the pipeline
       // actually runs, and one less src0 scan per bench rep.
-      val bf = QueryModule.cachedBytes(
+      val bf = QueryModule.cachedLocal(
           s"benchbloom:$dir", tableStamp(dir, "documents")) {
         bench.agg(expr("bloom_agg(ng, 100000L, 800000L)").as("bf"))
           .collect().head.getAs[Array[Byte]]("bf")

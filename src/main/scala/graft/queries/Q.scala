@@ -211,7 +211,7 @@ object QueryModule {
     * build stays eager-on-first-call because the probe reads the index
     * parquet's footer at plan time — the index must exist before the
     * DataFrame can even be constructed. Stamp-in-value (the
-    * schemaCache/cachedBytes rule): a testdata regeneration REPLACES
+    * schemaCache/cachedLocal rule): a testdata regeneration REPLACES
     * the entry so the superseded dir is never probed again — but the
     * dir itself is DEFERRED to the shutdown hook, NOT deleted at
     * replacement: an in-flight reader of the old generation (a lazy
@@ -261,27 +261,17 @@ object QueryModule {
     })._2.value
   }
 
-  /** Per-JVM cache for small CONSTANT-SIZE derived artifacts (a bloom
-    * sketch's bytes, a trained quantizer) — a static benchmark's sketch
-    * is built once per table generation, not once per query invocation.
-    * The generation `stamp` (tableStamp) rides in the VALUE, same as
-    * the schema cache: a regeneration REPLACES the entry in place, so
-    * superseded sketches are not stranded under dead stamped keys. */
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Box[Array[Byte]])]()
-  private[queries] def cachedBytes(key: String, stamp: String)(
-      build: => Array[Byte]): Array[Byte] =
-    bytesCache.compute(key, (_, old) =>
-      if (old != null && old._1 == stamp) old
-      else (stamp, new Box(() => recordBuild(key)(build))))._2.value
-
-  /** cachedBytes' sibling for small PROVEN-BOUNDED localized relations
-    * (the token co-occurrence edge list: ≤ C(100,2) rows by vocabulary
-    * cap) — the nightly-built graph artifact every graph query reads,
-    * built once per (JVM, table generation) instead of once per query
-    * invocation. Same stamp-in-value replacement rule. Thread-visible
-    * count of builds exposed for the build-once spec (counted when a
-    * build actually RUNS, not when a box is created). */
+  /** Per-JVM cache for small driver-side artifacts: CONSTANT-SIZE ones
+    * (a bloom sketch's bytes, a trained quantizer) and PROVEN-BOUNDED
+    * localized relations (the token co-occurrence edge list: ≤ C(100,2)
+    * rows by vocabulary cap) — a static benchmark's sketch or the
+    * nightly-built graph artifact every graph query reads is built once
+    * per (JVM, table generation), not once per query invocation. The
+    * generation `stamp` (tableStamp) rides in the VALUE, same as the
+    * schema cache: a regeneration REPLACES the entry in place, so
+    * superseded artifacts are not stranded under dead stamped keys.
+    * Thread-visible count of builds exposed for the build-once spec
+    * (counted when a build actually RUNS, not when a box is created). */
   private val localCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Box[AnyRef])]()
   private[graft] val localCacheBuilds = new java.util.concurrent.atomic.AtomicLong

@@ -60,7 +60,7 @@ object VectorOps extends QueryModule {
 
   /** The seed set is a pure function of the table generation, so the
     * four seed consumers share one TakeOrdered collect per (JVM,
-    * generation) instead of paying it per invocation — the cachedBytes
+    * generation) instead of paying it per invocation — the cachedLocal
     * discipline ("a trained quantizer" is that cache's charter example)
     * applied to every driver-side trained/collected model below.
     * Determinism specs make the cache observationally invisible. */

@@ -14,14 +14,19 @@ import org.apache.spark.sql.SparkSession
   * probes) run their size probe / bounded build EAGERLY at
   * DataFrame-construction time, so "dumping the plan" executes those
   * pipelines at SPARK_GRAFT_SF_DIR scale — keep the default sf0.01
-  * (seconds) unless auditing a specific query at sf0.1. */
+  * (seconds) unless auditing a specific query at sf0.1.
+  *
+  * The session is the test suite's `local[4]`: a plan pin
+  * (`plans/r21/<q>_parent.txt`) dumped here must equal the plan
+  * PlanShapeSpec builds, and `QueryModule.barrier`'s round-robin
+  * exchange is sized by the session's default parallelism. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/plans.txt")
     val only = args.drop(1).headOption
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = SparkSession.builder()
-      .master("local[8]")
+      .master("local[4]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

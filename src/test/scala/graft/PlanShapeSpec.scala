@@ -657,17 +657,20 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   // Each family's members keep their plans through a respelling of the
-  // family's shared frame (DriftFrame, MarkovFrame): the pins were dumped
-  // by graft.tools.Explain (sf0.01, 8 shuffle partitions) before it, and
-  // the whole formatted plan is compared — operator tree, per-node
-  // outputs, window specs and exchange arguments.
+  // family's shared frame (DriftFrame, MarkovFrame, PcaFrame,
+  // ForecastFrame): the pins were dumped by graft.tools.Explain (sf0.01,
+  // 8 shuffle partitions) before it, and the whole formatted plan is
+  // compared — operator tree, per-node outputs, window specs and exchange
+  // arguments.
   private val planFamilies = Seq(
     "drift" -> Seq("ad", "chi2", "cvm", "emd", "js", "ks", "mw", "psi", "tvd")
       .map(m => s"x_drift_$m"),
     "Markov" -> ("x_event_transitions" +: Seq("steady", "absorb", "absorb_to",
       "reach", "mfpt", "entropy", "lumpable").map(m => s"x_markov_$m")),
     "PCA" -> Seq("x_pca_oracle", "x_pca2_oracle", "x_pca3_oracle", "x_pca_energy",
-      "x_pca_outliers"))
+      "x_pca_outliers"),
+    "forecast" -> (Seq("ses", "holt", "holt_damped", "holt_winters", "hw_log")
+      .map(m => s"x_forecast_$m") :+ "x_weekday_anova"))
 
   private val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
 

@@ -20,7 +20,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // surface: every query built AND executed concurrently, no
     // exceptions, non-oracle queries still non-empty. Declared FIRST in
     // the suite so the per-JVM caches (schemaCache, cachedIndex,
-    // cachedBytes) are COLD — the concurrent run exercises first-build
+    // cachedLocal) are COLD — the concurrent run exercises first-build
     // races, not the warmed fast path.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {

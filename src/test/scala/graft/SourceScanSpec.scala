@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * default Hadoop `Configuration` that searches the classpath; and the
   * Markov family's transition window and chain collect live once, in
   * [[graft.queries.MarkovFrame]]; and the PCA family's power loop and
-  * re-quantized deflation live once, in [[graft.queries.PcaFrame]]. */
+  * re-quantized deflation live once, in [[graft.queries.PcaFrame]]; and
+  * the forecast family's daily series and folds live once, in
+  * [[graft.queries.ForecastFrame]]. */
 class SourceScanSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -102,5 +104,27 @@ class SourceScanSpec extends AnyFunSuite {
     // the re-quantized deflation, in Spark and in DuckDB
     assert(hits("DIV ${Pca2Requant}L") == Map(pca -> 1), hits("DIV ${Pca2Requant}L"))
     assert(hits("// $Pca2Requant)") == Map(pca -> 1), hits("// $Pca2Requant)"))
+  }
+
+  test("the forecast daily series, Holt fold and Holt-Winters recurrence are " +
+      "spelled once, in ForecastFrame") {
+    assert(sources.size > 100, s"scanned ${sources.size} files under $root")
+    def hits(needle: String) =
+      sources.map { case (p, src) => p -> count(src, needle) }.filter(_._2 > 0)
+    val forecast = "graft/queries/ForecastFrame.scala"
+    // the (type, day) rollup and the day-ordered series
+    // (6 and 5 sites before ForecastFrame)
+    for (needle <- Seq(
+        ".groupBy($\"event_type\", expr(\"unix_millis(ts) DIV 86400000\").as(\"day\"))",
+        "collect_list(struct(day, "))
+      assert(hits(needle) == Map(forecast -> 1), s"$needle: ${hits(needle)}")
+    // the damped trend read, in Spark and in DuckDB, and the Spark
+    // seasonal slot update (4, 4 and 2 sites before ForecastFrame)
+    for (needle <- Seq("(acc.b * 3L) DIV 4", "(acc[2] * 3) // 4", "transform(acc.s, (v, j) ->"))
+      assert(hits(needle) == Map(forecast -> 1), s"$needle: ${hits(needle)}")
+    // the DuckDB seasonal slot update: the one template's seed branch and
+    // step branch (4 sites before ForecastFrame)
+    val slots = "list_transform(range(0, 7), j ->"
+    assert(hits(slots) == Map(forecast -> 2), hits(slots))
   }
 }

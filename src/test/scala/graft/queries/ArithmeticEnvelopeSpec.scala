@@ -21,7 +21,7 @@ import graft.SparkTestBase
   *    — HERE ("lumpable lhs/rhs output straddle").
   *  - forecast integer folds holt/damped/hw (Long ×10⁴ promotion,
   *    ANSI raise) — HERE, one straddle per fold, driving the SHARED
-  *    ForecastArith operand trees the queries compile. x_forecast_ses
+  *    ForecastFrame operand trees the queries compile. x_forecast_ses
   *    has no integer boundary (pure dyadic double fold — rounds,
   *    never wraps) and is deliberately absent.
   *  - x_token_burstiness VMR numerator (DECIMAL(38,0) raise at
@@ -54,7 +54,7 @@ class ArithmeticEnvelopeSpec extends AnyFunSuite with SparkTestBase {
       s"expected a loud arithmetic raise, got: $e")
   }
 
-  // ---- forecast integer folds (ForecastArith, shared operand trees) ----
+  // ---- forecast integer folds (ForecastFrame, shared operand trees) ----
 
   /** Long replay of the Holt fold — exact below the boundary. */
   private def holtReplay(xs: Seq[Long]): (Long, Long, Long) = {
@@ -75,7 +75,7 @@ class ArithmeticEnvelopeSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val below = Seq(Tuple1(Seq(400000000000000L, 400000000000000L)))
       .toDF("xs")
-      .select(expr(ForecastArith.holtFoldSql).as("st"))
+      .select(expr(ForecastFrame.holtFoldSql).as("st"))
       .select($"st.l", $"st.b", $"st.e").as[(Long, Long, Long)]
       .collect().head
     assert(below == holtReplay(Seq(400000000000000L, 400000000000000L)),
@@ -84,7 +84,7 @@ class ArithmeticEnvelopeSpec extends AnyFunSuite with SparkTestBase {
     assert(BigInt(1000000000000000L) * 10000 > BigInt(Long.MaxValue))
     assertRaises {
       Seq(Tuple1(Seq(1L, 1000000000000000L))).toDF("xs")
-        .select(expr(ForecastArith.holtFoldSql).as("st"))
+        .select(expr(ForecastFrame.holtFoldSql).as("st"))
         .select($"st.l").collect()
     }
   }
@@ -96,7 +96,7 @@ class ArithmeticEnvelopeSpec extends AnyFunSuite with SparkTestBase {
     // three days so the damped trend actually engages ((b*3) DIV 4 != 0)
     val xs = Seq(400000000000000L, 300000000000000L, 400000000000000L)
     val got = Seq(Tuple1(xs)).toDF("xs")
-      .select(expr(ForecastArith.dampedFoldSql).as("st"))
+      .select(expr(ForecastFrame.dampedFoldSql).as("st"))
       .select($"st.l", $"st.b", $"st.e").as[(Long, Long, Long)]
       .collect().head
     val want = {
@@ -113,7 +113,7 @@ class ArithmeticEnvelopeSpec extends AnyFunSuite with SparkTestBase {
     assert(got == want, s"$got vs $want")
     assertRaises {
       Seq(Tuple1(Seq(1L, 1000000000000000L))).toDF("xs")
-        .select(expr(ForecastArith.dampedFoldSql).as("st"))
+        .select(expr(ForecastFrame.dampedFoldSql).as("st"))
         .select($"st.l").collect()
     }
   }
@@ -126,7 +126,7 @@ class ArithmeticEnvelopeSpec extends AnyFunSuite with SparkTestBase {
         .agg(expr("sort_array(collect_list(struct(day, n)))").as("xs"))
     val ns = Seq(400000000000000L, 300000000000000L, 350000000000000L)
     val got = frame(ns)
-      .select(expr(ForecastArith.hwFoldSql).as("st"))
+      .select(expr(ForecastFrame.hwFoldSql).as("st"))
       .select($"st.l", $"st.b", $"st.s", $"st.e")
       .as[(Long, Long, Seq[Long], Long)].collect().head
     val want = {
@@ -145,7 +145,7 @@ class ArithmeticEnvelopeSpec extends AnyFunSuite with SparkTestBase {
     assert(got == want, s"$got vs $want")
     assertRaises {
       frame(Seq(1L, 1000000000000000L))
-        .select(expr(ForecastArith.hwFoldSql).as("st"))
+        .select(expr(ForecastFrame.hwFoldSql).as("st"))
         .select($"st.l").collect()
     }
   }

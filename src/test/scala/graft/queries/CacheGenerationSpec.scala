@@ -73,9 +73,9 @@ class CacheGenerationSpec extends AnyFunSuite with SparkTestBase {
       retryS = (System.nanoTime() - t0) / 1e9
       Array[Byte](1)
     }
-    intercept[IllegalStateException](QueryModule.cachedBytes("failretry:k", "g1")(build))
+    intercept[IllegalStateException](QueryModule.cachedLocal("failretry:k", "g1")(build))
     assert(recorded == before, "the throwing build was charged")
-    assert(QueryModule.cachedBytes("failretry:k", "g1")(build).sameElements(Array[Byte](1)))
+    assert(QueryModule.cachedLocal("failretry:k", "g1")(build).sameElements(Array[Byte](1)))
     assert(attempts == 2, "the Box did not retry the failed build")
     val charged = recorded - before
     assert(charged >= retryS && charged < 0.4,
